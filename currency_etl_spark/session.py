@@ -13,16 +13,22 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cpus() -> int:
+    """Local parallelism: ``SPARK_GRAFT_CPUS``, else the number of cores
+    this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+
+
 def get_spark(app_name: str = "currency_etl_spark", cpus: int | None = None) -> SparkSession:
     """Build (or fetch) the tuned SparkSession.
 
-    ``SPARK_GRAFT_CPUS`` governs local parallelism (default 32, matching
-    the driver's bench environment). Shuffle partitions track core count
-    for local mode — the 200 default over-parallelizes small data and
-    under-parallelizes 100 TB; AQE coalescing fixes the rest at runtime.
+    ``cpus`` defaults to ``default_cpus()``: ``SPARK_GRAFT_CPUS``, else the
+    host's cores. Shuffle partitions track core count for local mode — the
+    200 default over-parallelizes small data and under-parallelizes
+    100 TB; AQE coalescing fixes the rest at runtime.
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = default_cpus()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -30,7 +36,7 @@ def get_spark(app_name: str = "currency_etl_spark", cpus: int | None = None) -> 
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # coalescePartitions.parallelismFirst stays at its DEFAULT (true):
-        # r16 A/B'd `false` (the conf reference's recommendation for
+        # an A/B of `false` (the conf reference's recommendation for
         # byte-sized partitions) and it regressed the CPU-dense/small-byte
         # operators 1.2-1.5x — AQE coalesced token-pair explodes and
         # collect_list stages to ONE task because their input is

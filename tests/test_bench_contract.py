@@ -1,8 +1,8 @@
-"""The bench CLI is a judged artifact: a crash or malformed output zeroes
-the round's BENCH record (round 4 died exactly this way, via an events
-loader error surfaced through bench's table warmup). Lock the contract:
-warmup names resolve, and a real subprocess run emits the one-JSON-line
-summary the driver parses.
+"""The bench CLI is a judged artifact: a crash or malformed output (say,
+a loader error surfaced through bench's table warmup) leaves the run with
+no BENCH record. Lock the contract: warmup names resolve, a real
+subprocess run emits the one-JSON-line summary the harness parses, and the
+pass loop's resets and cost attribution behave as documented.
 """
 
 from __future__ import annotations
@@ -43,7 +43,7 @@ def test_bench_subprocess_contract():
     MinHash-family siblings) at the smallest SF and parse its output
     exactly like the driver does (last line must be complete JSON with
     the agreed keys; the detailed line must carry the memo-family sums
-    with build attribution — round-7 verdict item 3)."""
+    with build attribution)."""
     env = dict(
         os.environ,
         SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
@@ -80,8 +80,8 @@ def test_bench_subprocess_contract():
     assert set(fams) <= KNOWN_MEMO_TAGS, f"undeclared memo tags: {set(fams)}"
     # the shared signature/pair bases: built by the alphabetically-first
     # consumer, read warm by the sibling — both appear as members, and
-    # since round 9 the build cost is its OWN line (subtracted from the
-    # payer's per-entry time, round-8 verdict item 3)
+    # the build cost is its OWN line (subtracted from the payer's
+    # per-entry time)
     for tag in ("minhash_sig", "minhash_pairs"):
         assert fams[tag]["paid_by"] == "dedup_minhash_lsh", fams[tag]
         assert set(fams[tag]["entries"]) == {
@@ -90,9 +90,8 @@ def test_bench_subprocess_contract():
         assert fams[tag]["sec"] >= 0
         assert fams[tag]["build_sec"] > 0, fams[tag]
         assert f"memo_build:{tag}" in detailed["overheads"]
-    # no entry may report exactly 0.0 (round-9 verdict item 3): an
-    # all-cost-in-build payer clamps to the 1 ms floor instead of reading
-    # as a free operator
+    # no entry may report exactly 0.0: an all-cost-in-build payer clamps
+    # to the 1 ms floor instead of reading as a free operator
     assert all(v >= 0.001 for v in detailed["queries"].values()), detailed["queries"]
     # total = per-entry work + separately-reported shared-base costs
     assert detailed["overhead_sec"] == round(sum(detailed["overheads"].values()), 3)
@@ -105,38 +104,111 @@ def test_bench_subprocess_contract():
     )
 
 
-def test_bench_subtracts_shared_base_costs():
-    """Source pin for the round-8 item-3 contract: bench.main must
-    subtract each memo build's wall time and the stream-pool startup from
-    the paying entry's dt BEFORE the min-of-passes fold, so per-entry
-    numbers are stable whether or not the entry is its family's
-    alphabetical payer."""
-    import inspect
+class _FakeBench:
+    """Stands in for the engine under bench.time_passes: a fake clock that
+    each entry run and each reset advances, fake memo touches and pool
+    starts queued per entry, and a log of every call in order."""
 
-    src = inspect.getsource(bench_mod.main)
-    assert "dt -= bsec" in src, "memo build cost no longer subtracted"
-    assert "dt -= ps[1]" in src, "stream-pool startup no longer subtracted"
-    fold_at = src.find("times[name] = min(")
-    assert fold_at != -1
-    assert src.find("dt -= bsec") < fold_at and src.find("dt -= ps[1]") < fold_at, (
-        "subtraction must happen before the min-of-passes fold"
+    RESET_SEC = 100.0
+
+    def __init__(self, monkeypatch, entry_sec):
+        self.now = 0.0
+        self.entry_sec = entry_sec  # name -> [seconds in pass 1, pass 2]
+        self.touches = {}  # (name, pass) -> [(tag, built, build_sec)]
+        self.pool = {}  # (name, pass) -> (starter, start_sec)
+        self.log = []
+        self.current = None
+        self.npass = 0
+        monkeypatch.setattr(bench_mod, "reset_stream_pool", self._reset_pool)
+        monkeypatch.setattr(bench_mod, "reset_memos", self._reset_memos)
+        monkeypatch.setattr(bench_mod, "drain_memo_touches", self._drain_touches)
+        monkeypatch.setattr(bench_mod, "drain_pool_start", self._drain_pool)
+
+    def clock(self):
+        return self.now
+
+    def _reset_pool(self):
+        self.log.append("reset_stream_pool")
+        self.current = None  # drains at the pass boundary see no entry
+        self.now += self.RESET_SEC
+
+    def _reset_memos(self):
+        self.log.append("reset_memos")
+        self.npass += 1
+        self.now += self.RESET_SEC
+
+    def _drain_touches(self):
+        return self.touches.pop((self.current, self.npass), [])
+
+    def _drain_pool(self):
+        return self.pool.pop((self.current, self.npass), None)
+
+    def run(self, name):
+        self.current = name
+        self.log.append(f"run:{name}")
+        self.now += self.entry_sec[name][self.npass - 1]
+
+    def time_passes(self, budget_s=10_000.0):
+        return bench_mod.time_passes(
+            list(self.entry_sec), self.run, budget_s, clock=self.clock
+        )
+
+
+def test_bench_subtracts_shared_base_costs(monkeypatch):
+    """A memo build's and the stream-pool start's seconds come off the
+    paying entry's time BEFORE the min-of-passes fold, and are reported as
+    their own overhead lines; an entry that only reads the warm base keeps
+    its full time, even when a pool start by another entry (the warmup's,
+    say) is drained after it. A marginal at or below zero clamps to the
+    1 ms floor, so no entry reads as a free operator."""
+    fake = _FakeBench(
+        monkeypatch,
+        {"a_payer": [1.0, 0.5], "b_reader": [0.3, 0.4], "c_floor": [1.0, 1.0], "s_stream": [5.0, 4.0]},
     )
-    # round-9 item 3: the post-subtraction marginal clamps to 1 ms so a
-    # shared-build payer can never report exactly 0.0
-    assert "max(dt, 0.001)" in src, "no-free-operator floor removed"
+    fake.touches[("a_payer", 1)] = [("sig", True, 0.8)]
+    fake.touches[("a_payer", 2)] = [("sig", True, 0.1)]
+    fake.touches[("b_reader", 1)] = [("sig", False, 0.0)]
+    fake.touches[("c_floor", 1)] = [("pairs", True, 1.2)]
+    fake.pool[("s_stream", 1)] = ("s_stream", 3.0)
+    fake.pool[("s_stream", 2)] = ("s_stream", 2.5)
+    fake.pool[("b_reader", 2)] = ("warmup_entry", 0.6)
+    ledger = fake.time_passes()
+
+    assert len(ledger.passes) == 2
+    # subtract, then fold: min(1.0 - 0.8, 0.5 - 0.1) = 0.2; folding the raw
+    # times first would start from min(1.0, 0.5) = 0.5 and never reach 0.2
+    assert ledger.times["a_payer"] == 0.2
+    assert ledger.times["b_reader"] == 0.3
+    assert ledger.times["c_floor"] == 0.001
+    assert ledger.times["s_stream"] == 1.5  # min(5.0 - 3.0, 4.0 - 2.5)
+    assert ledger.overheads == {
+        "memo_build:sig": 0.1,
+        "memo_build:pairs": 1.2,
+        "stream_pool_startup": 2.5,
+    }
+    assert ledger.fam_payer == {"sig": "a_payer", "pairs": "c_floor"}
+    assert ledger.fam_members == {"sig": {"a_payer", "b_reader"}, "pairs": {"c_floor"}}
 
 
 def test_bench_marks_stream_family_primary():
-    """Round-13 verdict item 7: per-entry streaming rows are
-    attribution-shifted since the parallel pool start, so the dump must
-    mark the stream_pool family row as the PRIMARY streaming signal —
-    round-over-round adjudication compares family sec + startup_sec,
-    never individual stream-entry rows."""
-    import inspect
-
-    src = inspect.getsource(bench_mod.main)
-    assert '"primary": True' in src, "stream_pool primary marker removed"
-    assert "attribution-shifted" in src, "stream_pool adjudication note removed"
+    """Per-entry streaming rows are attribution-shifted by the parallel
+    pool start, so the stream_pool family row is marked as the primary
+    streaming signal: runs are compared on family sec + startup_sec."""
+    ledger = bench_mod.Ledger(
+        times={"s1": 0.5, "s2": 0.25, "plain": 1.0},
+        overheads={"stream_pool_startup": 3.0},
+    )
+    fams = bench_mod.family_rows(ledger, ["s1", "s2", "s3"], "s1")
+    row = fams["stream_pool"]
+    assert row["primary"] is True
+    assert "attribution-shifted" in row["note"]
+    assert row["entries"] == ["s1", "s2"]
+    assert row["sec"] == 0.75 and row["startup_sec"] == 3.0
+    assert row["paid_by"] == "s1"
+    # no streaming entry timed (a subset run whose warmup started the
+    # pool): no row at all
+    assert "stream_pool" not in bench_mod.family_rows(ledger, ["s3"], "s1")
+    assert "stream_pool" not in bench_mod.family_rows(ledger, ["s1"], None)
 
 
 def test_subset_run_does_not_clobber_full_dump():
@@ -164,31 +236,28 @@ def test_subset_run_does_not_clobber_full_dump():
     )
 
 
-def test_bench_resets_shared_memos_between_passes():
-    """Measurement-honesty guard: each timed pass must rebuild every
-    memoized cross-entry checkpoint (the shared RFM / MinHash / phash /
-    cluster-map bases) inside a timed region. Losing the reset_memos()
-    call next to reset_stream_pool() would let pass 2 serve pass 1's
-    materializations and the per-query min would under-report the work."""
-    import inspect
+def test_bench_resets_shared_memos_between_passes(monkeypatch):
+    """Measurement-honesty guard: every pass starts with
+    reset_stream_pool() and reset_memos(), so each pass rebuilds every
+    memoized cross-entry checkpoint inside a timed region — pass 2 must
+    never be served pass 1's materializations. The resets run before the
+    pass timer starts: their cost is billed neither to the pass nor to
+    any entry."""
+    fake = _FakeBench(monkeypatch, {"a": [1.0, 2.0], "b": [3.0, 4.0]})
+    ledger = fake.time_passes()
+    assert fake.log == [
+        "reset_stream_pool", "reset_memos", "run:a", "run:b",
+        "reset_stream_pool", "reset_memos", "run:a", "run:b",
+    ]
+    assert ledger.passes == [4.0, 6.0]
+    assert ledger.times == {"a": 1.0, "b": 3.0}
 
-    src = inspect.getsource(bench_mod.main)
-    pool_at = src.find("reset_stream_pool()")
-    memo_at = src.find("reset_memos()")
-    assert pool_at != -1 and memo_at != -1, (
-        "bench.main must reset both the stream pool and the shared memos "
-        "at every pass boundary"
-    )
-    # Position, not mere presence (round-7 advice): both resets must sit
-    # INSIDE the pass loop and BEFORE the pass timer starts — a refactor
-    # moving either outside the loop (pass 2 served warm bases) or after
-    # pass_t0 (reset cost mis-billed to the pass) must fail here.
-    loop_at = src.find("for _ in range(2):")
-    timer_at = src.find("pass_t0 = time.perf_counter()")
-    assert loop_at != -1 and timer_at != -1, "bench.main pass-loop landmarks moved"
-    assert loop_at < pool_at < timer_at, (
-        "reset_stream_pool() must run inside the pass loop, before pass_t0"
-    )
-    assert loop_at < memo_at < timer_at, (
-        "reset_memos() must run inside the pass loop, before pass_t0"
-    )
+
+def test_bench_second_pass_only_when_it_fits_the_budget(monkeypatch):
+    """The second pass runs only if one more pass of the first's length
+    fits in the budget (elapsed time, resets included)."""
+    # pass 1: 200 s of resets + 4 s of entries; one more pass ends at 208 s
+    fake = _FakeBench(monkeypatch, {"a": [1.0, 1.0], "b": [3.0, 3.0]})
+    assert len(fake.time_passes(budget_s=208.0).passes) == 2
+    fake = _FakeBench(monkeypatch, {"a": [1.0, 1.0], "b": [3.0, 3.0]})
+    assert len(fake.time_passes(budget_s=207.9).passes) == 1

@@ -7,11 +7,14 @@ run but diverges the day the driver re-runs it."""
 
 from __future__ import annotations
 
+import json
+import os
 import re
 
 import pytest
 
-from currency_etl_spark.catalog import load_catalog
+import currency_etl_spark.catalog as catalog_mod
+from currency_etl_spark.catalog import _grading_order, load_catalog
 
 CATALOG = load_catalog()
 
@@ -70,132 +73,45 @@ def test_every_query_has_doc_and_tags():
 
 
 def test_catalog_size_monotonic():
-    # round-3 floor: future rounds must not silently drop operators
+    # a floor, so an entry cannot be dropped silently
     assert len(CATALOG) >= 93
-    # as of round 3 EVERY entry is hash-graded against a DuckDB oracle —
-    # no rows-only checks remain; keep it that way
+    # every entry is hash-graded against a DuckDB oracle; none is rows-only
     assert all(s.oracle for s in CATALOG.values())
 
 
-def test_priority_order_fits_grading_window():
-    """The driver records correctness rows for the leading GRADING_WINDOW
-    catalog entries (50 in rounds 1-2). PRIORITY_ORDER must reference only
-    real entries, contain no duplicates, and fit inside the window — else
-    rotation silently stops covering what it claims to cover."""
-    from currency_etl_spark.catalog import GRADING_WINDOW, PRIORITY_ORDER
-
-    assert len(PRIORITY_ORDER) == len(set(PRIORITY_ORDER)), "duplicate priority entries"
-    unknown = [n for n in PRIORITY_ORDER if n not in CATALOG]
-    assert not unknown, f"priority entries not in catalog: {unknown}"
-    assert len(PRIORITY_ORDER) <= GRADING_WINDOW
+def _write_round(root, rnd, names):
+    """A CORRECTNESS_r{rnd}.json whose key order is the grading order."""
+    rows = {n: {"hash_match": True} for n in names}
+    (root / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps(rows))
 
 
-def _import_make_window():
-    import os
-    import sys
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(root, "tools"))
-    try:
-        import make_window
-    finally:
-        sys.path.pop(0)
-    return root, make_window
+_NAMES = ["a", "b", "c", "d", "e", "f"]
 
 
-def _window_for(newest):
-    """Apply the rotation policy to an entry->(round, pos) map."""
-    from currency_etl_spark.catalog import GRADING_WINDOW, load_catalog
-
-    cat = list(load_catalog())
-    new_entries = [n for n in cat if n not in newest]
-    stale = sorted((n for n in cat if n in newest), key=lambda n: newest[n])
-    return (new_entries + stale)[:GRADING_WINDOW], new_entries
+def test_grading_order_without_files_is_registration_order(tmp_path):
+    (tmp_path / "BENCH_r01.json").write_text("{}")  # not a correctness file
+    assert _grading_order(_NAMES, tmp_path) == _NAMES
 
 
-def test_make_window_agrees_with_priority_order():
-    """tools/make_window.py mechanizes the rotation policy: its proposed
-    window must contain exactly PRIORITY_ORDER's entries (ordering may
-    differ only where a round note applies a documented nuance, e.g. the
-    ceded-tail-first convention), and its NEW-entry detection must match
-    the entries with no recorded driver row.
-
-    The generator is anchored to PRIORITY_ORDER_BASIS_ROUND — the newest
-    CORRECTNESS file the committed window was authored against. Without
-    the anchor this pin self-rotted the moment the driver wrote the
-    current round's own file after the commit (the round-9 verdict's one
-    red test): the window under audit is "was the committed rotation
-    right WHEN COMMITTED", not "is it still the freshest possible"."""
-    root, make_window = _import_make_window()
-    from currency_etl_spark.catalog import PRIORITY_ORDER, PRIORITY_ORDER_BASIS_ROUND
-
-    newest = make_window.newest_rows(root, through_round=PRIORITY_ORDER_BASIS_ROUND)
-    window, new_entries = _window_for(newest)
-    assert set(window) == set(PRIORITY_ORDER), (
-        sorted(set(window) ^ set(PRIORITY_ORDER))
-    )
-    assert PRIORITY_ORDER[: len(new_entries)] == new_entries
+def test_grading_order_leads_with_never_graded_then_oldest_rows(tmp_path):
+    _write_round(tmp_path, 1, ["d", "b", "e"])
+    _write_round(tmp_path, 2, ["e", "c"])
+    # never graded: a, f (registration order); then newest rows
+    # d=(1,0), b=(1,1), e=(2,0), c=(2,1), oldest first
+    assert _grading_order(_NAMES, tmp_path) == ["a", "f", "d", "b", "e", "c"]
 
 
-def test_basis_round_matches_recorded_rounds():
-    """PRIORITY_ORDER_BASIS_ROUND must cover every CORRECTNESS file that
-    existed when the window was committed: it is >= the newest round the
-    window could have been authored against minus the round-end file the
-    driver may since have written (i.e. within 1 of the newest on disk),
-    and never ahead of what's recorded."""
-    import os
-    import re
-
-    root, _ = _import_make_window()
-    from currency_etl_spark.catalog import PRIORITY_ORDER_BASIS_ROUND
-
-    rounds = [
-        int(m.group(1))
-        for f in os.listdir(root)
-        if (m := re.match(r"CORRECTNESS_r(\d+)\.json$", f))
-    ]
-    assert rounds, "no CORRECTNESS files recorded"
-    newest = max(rounds)
-    assert PRIORITY_ORDER_BASIS_ROUND <= newest
-    assert PRIORITY_ORDER_BASIS_ROUND >= newest - 1, (
-        f"basis r{PRIORITY_ORDER_BASIS_ROUND} is stale: newest recorded is "
-        f"r{newest}; rewrite PRIORITY_ORDER for the next round and bump the basis"
-    )
+def test_grading_order_rotates_a_new_rounds_entries_to_the_back(tmp_path):
+    _write_round(tmp_path, 1, ["d", "b", "e"])
+    _write_round(tmp_path, 2, ["e", "c"])
+    window = _grading_order(_NAMES, tmp_path)[:3]
+    # the grading harness grades the leading entries and writes the file
+    _write_round(tmp_path, 3, window)
+    assert _grading_order(_NAMES, tmp_path) == ["b", "e", "c", "a", "f", "d"]
 
 
-def test_rotation_pin_survives_round_end_file_drop(tmp_path):
-    """Regression for the round-9 self-rot: simulate the driver writing
-    the round's own CORRECTNESS file AFTER the window was committed (copy
-    the newest recorded file to r{N+1} in a tmp root) and assert the
-    anchored generator still reproduces the committed window."""
-    import json
-    import os
-    import re
-    import shutil
-
-    root, make_window = _import_make_window()
-    from currency_etl_spark.catalog import PRIORITY_ORDER, PRIORITY_ORDER_BASIS_ROUND
-
-    rounds = {}
-    for f in os.listdir(root):
-        m = re.match(r"CORRECTNESS_r(\d+)\.json$", f)
-        if m:
-            rounds[int(m.group(1))] = f
-            shutil.copy(os.path.join(root, f), tmp_path / f)
-    newest = max(rounds)
-    # The simulated round-end drop: the driver grades the committed
-    # PRIORITY_ORDER, so the new file's keys ARE the committed window.
-    fake = {name: {"hash_match": True} for name in PRIORITY_ORDER}
-    (tmp_path / f"CORRECTNESS_r{newest + 1:02d}.json").write_text(json.dumps(fake))
-
-    newest_map = make_window.newest_rows(
-        str(tmp_path), through_round=PRIORITY_ORDER_BASIS_ROUND
-    )
-    window, new_entries = _window_for(newest_map)
-    assert set(window) == set(PRIORITY_ORDER)
-    assert PRIORITY_ORDER[: len(new_entries)] == new_entries
-    # sanity: WITHOUT the anchor the drop must change the proposal —
-    # otherwise this regression test is vacuous
-    unanchored = make_window.newest_rows(str(tmp_path))
-    drifted, _ = _window_for(unanchored)
-    assert set(drifted) != set(window)
+def test_load_catalog_returns_every_entry_once_in_grading_order():
+    names = list(CATALOG)
+    assert sorted(names) == sorted(catalog_mod.CATALOG)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(catalog_mod.__file__)))
+    assert names == _grading_order(catalog_mod.CATALOG, root)

@@ -721,12 +721,11 @@ def test_cdc_chunks_plan_is_row_local(spark, sf_dir):
 
 
 def test_plans_doc_is_regenerated_with_the_catalog():
-    """docs/PLANS.md anti-rot pin (round-10 verdict item 2, the
-    PRIORITY_ORDER_BASIS_ROUND device applied to the plan-audit doc):
-    the doc records the catalog size it was generated against and must
-    hold a section for every headliner — growing the catalog or the
-    headliner list without re-running tools/dump_plans.py fails here
-    instead of silently under-representing new entries."""
+    """docs/PLANS.md records the catalog size it was generated for, and
+    this test fails when they differ; the doc must also hold a section for
+    every headliner. Growing the catalog or the headliner list without
+    re-running tools/dump_plans.py fails here instead of silently
+    under-representing new entries."""
     import os
     import sys
 

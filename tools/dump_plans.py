@@ -3,10 +3,18 @@
 with the scale-relevant reading of each. Run after changing any query:
 
     python tools/dump_plans.py [sf_dir]
+
+With ``--round N``, capture the before/after evidence of a plan change
+instead: each named entry's formatted plan, at $SPARK_GRAFT_SF_DIR
+(default: the sf0.1 test corpus), goes to plans/rN/<entry>_<before|after>.txt:
+
+    python tools/dump_plans.py --round 18 before q1_pricing_summary graph_pagerank_bipartite
+    python tools/dump_plans.py --round 18 after graph_pagerank_bipartite
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
@@ -776,11 +784,41 @@ HEADLINERS = {
 }
 
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def formatted_plan(spark, df) -> str:
+    return spark._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+
+
+def capture(round_no: int, suffix: str, names: list[str]) -> None:
+    """Write plans/r<round_no>/<entry>_<suffix>.txt for each named entry."""
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    spark = get_spark(f"plan-r{round_no}", cpus=8)
+    catalog = load_catalog()
+    outdir = os.path.join(ROOT, "plans", f"r{round_no}")
+    os.makedirs(outdir, exist_ok=True)
+    for name in names:
+        plan = formatted_plan(spark, catalog[name].spark_fn(spark, sf_dir))
+        path = os.path.join(outdir, f"{name}_{suffix}.txt")
+        with open(path, "w") as f:
+            f.write(f"# {name} — explain('formatted') at {sf_dir} ({suffix})\n\n")
+            f.write(plan.rstrip() + "\n")
+        print("wrote", path)
+
+
 def main() -> None:
+    if sys.argv[1:2] == ["--round"]:
+        ap = argparse.ArgumentParser(prog="dump_plans.py --round")
+        ap.add_argument("round_no", type=int)
+        ap.add_argument("suffix", choices=("before", "after"))
+        ap.add_argument("names", nargs="+")
+        args = ap.parse_args(sys.argv[2:])
+        capture(args.round_no, args.suffix, args.names)
+        return
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = get_spark("plan-dump", cpus=4)
     catalog = load_catalog()
-    jvm = spark._jvm
 
     out = [
         "# Physical plans of headline queries",
@@ -790,22 +828,19 @@ def main() -> None:
         "notes what to check for the plan to hold at 100 TB — these same "
         "properties are asserted by `tests/test_plans.py`.",
         "",
-        # the anti-rot marker (round-10 verdict item 2, same device as
-        # PRIORITY_ORDER_BASIS_ROUND): tests/test_plans.py pins this
-        # against len(load_catalog()), so growing the catalog without
-        # regenerating this doc fails the suite instead of silently
-        # under-representing the new entries.
+        # PLANS.md records the catalog size it was generated for, and
+        # tests/test_plans.py fails when it differs from len(load_catalog()):
+        # growing the catalog without regenerating this doc cannot go
+        # unnoticed.
         f"PLANS_CATALOG_SIZE = {len(catalog)} "
         f"(headliners: {len(HEADLINERS)})",
         "",
     ]
     for name, note in HEADLINERS.items():
-        df = catalog[name].spark_fn(spark, sf_dir)
-        plan = jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+        plan = formatted_plan(spark, catalog[name].spark_fn(spark, sf_dir))
         out += [f"## {name}", "", note, "", "```", plan.rstrip(), "```", ""]
 
-    os.makedirs("docs", exist_ok=True)
-    with open("docs/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "docs", "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote docs/PLANS.md ({len(HEADLINERS)} plans)")
 
