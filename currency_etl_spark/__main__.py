@@ -82,7 +82,7 @@ def main(argv: list[str] | None = None) -> int:
                 ]
             )
         )
-    # Long-session hygiene (round-8 verdict item 7): free any checkpoint
+    # Long-session hygiene: free any checkpoint
     # blocks the invoked stage left live before the CLI exits.
     from currency_etl_spark.operators.ckpt import release_all
 

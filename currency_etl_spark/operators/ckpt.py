@@ -1,6 +1,5 @@
-"""One-live-checkpoint-per-tag release discipline (round-5 advice,
-generalized in round 6 from supplier_reach_bfs to every eager
-localCheckpoint in the catalog).
+"""One-live-checkpoint-per-tag release discipline for every eager
+localCheckpoint in the catalog.
 
 Eager ``localCheckpoint`` blocks are never freed by Spark until the
 session ends, so a long session invoking checkpointing entries
@@ -26,7 +25,7 @@ streaming pool's thread fan-out can warm the same stored-index tag from
 two builder threads) are serialized by a per-tag lock inside
 :func:`memo_checkpoint` — without it both would build, and the second
 swap would unpersist the first thread's fresh checkpoint while its
-query plan still references it (round-13 advice).
+query plan still references it.
 """
 
 from __future__ import annotations
@@ -41,7 +40,7 @@ from pyspark.sql import DataFrame
 _LIVE: dict = {}
 _KEYS: dict = {}
 
-#: Per-tag build locks (round-13 advice): the streaming pool's thread
+#: Per-tag build locks: the streaming pool's thread
 #: fan-out can invoke memo_checkpoint for the SAME tag from two builder
 #: threads (e.g. the knn screen and the drift screen both warming
 #: ivf_index on a cold pool start). Unserialized, both build and the
@@ -77,12 +76,10 @@ def swap_checkpoint(tag: str, df: DataFrame) -> DataFrame:
 #: Memo-tag touches since the last drain, as (tag, built, build_sec)
 #: triples — bench.py reads this to SUBTRACT each shared-base build cost
 #: from the paying entry's time and report it as its own line (per-query
-#: times inside memoized families were otherwise iteration-order-dependent
-#: and round-over-round comparisons misread; round-7 verdict item 3,
-#: subtraction per round-8 item 3). Bounded (round-8 advice): a long-lived
-#: non-bench session that never drains must not grow it without limit —
-#: far beyond any bench pass's touch count, so a drain inside a pass never
-#: loses records.
+#: times inside memoized families would otherwise depend on which entry
+#: ran first). Bounded: a long-lived non-bench session that never drains
+#: must not grow it without limit — far beyond any bench pass's touch
+#: count, so a drain inside a pass never loses records.
 _BUILT: deque = deque(maxlen=4096)
 
 #: Per-thread stack of in-flight memo builds (each frame accumulates the
@@ -93,10 +90,9 @@ _BUILT: deque = deque(maxlen=4096)
 #: wall time therefore double-counted nested work: bench.py sums the
 #: per-tag build lines into the total AND subtracts their sum from the
 #: paying entry, so one cold dedup_clusters run reported ~6.2 s of
-#: "memo_build:*" overhead for ~2.7 s of actual wall (r17 measurement
-#: audit). Each build now reports its MARGINAL cost (own wall minus
-#: completed nested builds), so the per-tag lines are disjoint and their
-#: sum equals the true build wall. Thread-local because pool threads
+#: "memo_build:*" overhead for ~2.7 s of actual wall. Each build reports
+#: its MARGINAL cost (own wall minus completed nested builds), so the
+#: per-tag lines are disjoint and their sum equals the true build wall. Thread-local because pool threads
 #: build concurrently and must not see each other's frames.
 _BUILD_STACK = threading.local()
 
@@ -137,7 +133,7 @@ def note_build(tag: str, built: bool, build_sec: float) -> None:
     memo_checkpoint feeds, so bench.py attributes an external cache's
     build cost exactly like a memo_checkpoint build: subtracted from the
     paying entry's time and reported as its own ``memo_build:<tag>``
-    overhead line (round-8 verdict item 3 semantics). An external build
+    overhead line. An external build
     completing inside a memo build's frame charges its wall to that
     frame, same as a nested memo build — its seconds must not be
     reported twice."""
@@ -162,12 +158,13 @@ def memo_checkpoint(tag: str, key, build: Callable[[], DataFrame]) -> DataFrame:
     The stored key additionally folds in the owning session's
     applicationId: a checkpointed DataFrame is bound to its SparkSession,
     so after a session restart a memo hit would otherwise hand back a
-    DataFrame of a dead session (round-7 advice).
+    DataFrame of a dead session.
 
-    LOCK-ORDERING INVARIANT (r14 advice): ``build()`` runs while holding
-    this tag's lock, and builds may NESTED-call memo_checkpoint for a
-    second tag (ivf_index → ivf_cents, text_df → text_tf). That is safe
-    only because the tag dependency graph is a DAG and every nested call
+    A build holds its tag's lock while it builds nested tags, so the tag
+    graph must stay acyclic: ``build()`` runs while holding this tag's
+    lock, and builds may NESTED-call memo_checkpoint for a second tag
+    (ivf_index → ivf_cents, text_df → text_tf). That is safe only
+    because the tag dependency graph is a DAG and every nested call
     goes strictly "downward" (a build may only depend on tags that never
     — directly or transitively — build IT). A future cyclic tag
     dependency would deadlock two pool threads acquiring the cycle from
@@ -236,7 +233,7 @@ def reset_memos() -> None:
 
 def release_all() -> None:
     """Release EVERY live checkpoint and forget all memo keys — the
-    long-session guard (round-7 verdict item 6): _LIVE/_KEYS are
+    long-session guard: _LIVE/_KEYS are
     process-global and otherwise grow one entry per tag for the life of
     the process (notebook-style sessions). Callers must not hold
     unexecuted plans over released checkpoints (same contract as

@@ -1,15 +1,10 @@
-"""Skew-handling join utility (SURVEY.md §4.4 / guide 'Partitioning & shuffle').
+"""Skew-handling aggregation utility (SURVEY.md §4.4 / guide 'Partitioning & shuffle').
 
-AQE's skew-join split handles most runtime skew; `salted_join` is the
-explicit fallback for pathological producer-side skew (one key holding a
-double-digit percent of a 100 TB fact table), or for engines/paths where
-AQE can't see the skew (e.g. skew introduced after an exchange).
-
-Mechanics: the big (skewed) side gets a random salt in [0, n); the small
-side is exploded n× with every salt value; the join key becomes
-(key, salt), splitting each hot key's rows across n reducers. Aggregations
-downstream must re-aggregate across salts (the salt column is dropped from
-the output)."""
+Skewed joins are left to AQE's skew-join split (``session.py`` turns it
+on). A hot GROUPING key is different: a one-phase aggregate sends all of
+its rows to one reducer whatever the partitioning, so `salted_agg` splits
+the key across reducers with a deterministic salt and re-aggregates the
+partials (the salt column is dropped from the output)."""
 
 from __future__ import annotations
 
@@ -17,26 +12,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SALT = "__salt"
-
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    on: str,
-    n_salts: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join `big ⋈ small` on column `on`, salted n_salts ways.
-
-    `small` is replicated n_salts× (keep it the dimension side); `big` rows
-    are scattered uniformly. Result columns = big ∪ (small − join key),
-    same as df.join(small, on)."""
-    big_s = big.withColumn(SALT, (F.rand(seed=42) * n_salts).cast("int"))
-    small_s = small.withColumn(
-        SALT, F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    )
-    joined = big_s.join(small_s, [on, SALT], how)
-    return joined.drop(SALT)
 
 
 def salted_agg(
@@ -61,17 +36,10 @@ def salted_agg(
     salt = F.pmod(F.xxhash64(F.col(salt_src)), F.lit(n_salts))
     phase1 = df.withColumn(SALT, salt).groupBy(key, SALT)
     p1 = phase1.agg(
-        *[fn1(col).alias(f"__p_{out}") for out, (fn1, _, col) in _norm_aggs(aggs)]
+        *[fn1(col).alias(f"__p_{out}") for out, (fn1, _, col) in aggs.items()]
     )
     return (
         p1.groupBy(key)
-        .agg(*[fn2(f"__p_{out}").alias(out) for out, (_, fn2, col) in _norm_aggs(aggs)])
+        .agg(*[fn2(f"__p_{out}").alias(out) for out, (_, fn2, _) in aggs.items()])
     )
 
-
-def _norm_aggs(aggs: dict) -> list:
-    out = []
-    for name, spec in aggs.items():
-        fn1, fn2, col = spec
-        out.append((name, (fn1, fn2, col)))
-    return out

@@ -43,11 +43,6 @@ def _revenue_dec(df: DataFrame) -> F.Column:
     return F.sum(_disc_price_dec()).cast("double")
 
 
-#: DuckDB twin of _revenue_dec's summand.
-_SQL_DISC_PRICE = "CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(4,2)))"
-_SQL_REVENUE = f"CAST(sum({_SQL_DISC_PRICE}) AS DOUBLE)"
-
-
 @register(
     "q1_pricing_summary",
     oracle="""

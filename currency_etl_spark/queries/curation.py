@@ -417,8 +417,8 @@ _CATALOG["docs_curation_pipeline"].oracle = f"""
         "never densifies a |sources|x|vocab| grid and never broadcasts "
         "the vocabulary — it keeps only the existing (source, word) "
         "pairs and shuffle-joins them with the per-word corpus counts on "
-        "the word key (round-5 advice: the previous grid + vocab "
-        "broadcast would exhaust memory on an unbounded vocab). Per-word "
+        "the word key (a grid + vocab broadcast would exhaust memory on "
+        "an unbounded vocab). Per-word "
         "probability deltas are 1e12-quantized to int64 before the "
         "cross-word fold, so the TV sum is exact and partition-order-"
         "independent in both engines; the absent-mass term uses the same "

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from currency_etl_spark.catalog import CATALOG, register
+from currency_etl_spark.operators.ckpt import swap_checkpoint
 from currency_etl_spark.sources import table
 
 
@@ -598,7 +599,7 @@ def order_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     keyed = orders.withColumn("__k", F.round(F.col("o_totalprice") * 100).cast("long"))
-    # r8 rewire (r7 verdict item 2): the lag/lead surface needs NO
+    # The lag/lead surface needs NO
     # neighbor joins and NO checkpoint. Per-row steps over a rank-
     # CONTIGUOUS decile telescope: every step is an exact ≤2-decimal
     # value (o_totalprice carries cents; a double difference of two
@@ -1425,7 +1426,7 @@ SKEW_BUCKETS = 64
     tags=("events", "skew", "aggregate", "scale"),
     doc=(
         "Audit-keyed adaptive aggregation — the loop events_key_skew only "
-        "measures, closed (round-12 verdict item 5): audit -> decision -> "
+        "measures, closed: audit -> decision -> "
         "mechanism. Step 1 runs the audit's decision aggregates on the "
         "grouping key (per-key counts, map-side-combinable, scanning ONLY "
         "the key column — strictly cheaper than the aggregation it "
@@ -1471,7 +1472,7 @@ def events_adaptive_salted_agg(
     )
     # empty filtered relation (empty table / all-NULL key): the audit
     # aggregates are NULL — fall through to the plain GROUP BY, which
-    # yields the same empty result the oracle returns (round-13 advice)
+    # yields the same empty result the oracle returns
     topk, t = (0, 1) if g["t"] is None else (g["topk"], g["t"])
     salted = topk * SKEW_BUCKETS > t
     src = e.select(key, "event_id", F.col("value").cast("decimal(18,4)").alias("v"))
@@ -1484,7 +1485,6 @@ def events_adaptive_salted_agg(
                 "total_dec": (F.sum, F.sum, "v"),
                 # count ROWS (count(*) semantics, matching the plain
                 # branch and the oracle), not non-NULL values of v
-                # (round-13 advice)
                 "n_events": (lambda _c: F.count(F.lit(1)), F.sum, "v"),
             },
         )
@@ -2396,7 +2396,7 @@ def events_ewma_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "orders_bloom_prefilter",
     oracle="""
-        -- plain join: the bloom prefilter must be semantically invisible
+        -- the selective-dimension join the planner filters on its own
         SELECT o.o_orderpriority,
                count(*) AS n_orders,
                CAST(count(DISTINCT o.o_custkey) AS BIGINT) AS n_customers,
@@ -2409,28 +2409,24 @@ def events_ewma_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("join", "bloom", "runtime-filter"),
     doc=(
-        "Bloom-prefiltered selective-dimension join — the explicit form of "
-        "Spark's runtime row-level filtering: a ~10%-selective customer "
-        "subset (acctbal > 9000) is folded into a kilobyte Bloom bitmap "
-        "(distributed bit_or build, driver collects only the finished "
-        "words), and the orders scan drops non-members with pure codegen "
-        "arithmetic (xxhash64 + getbit on a broadcast array literal) "
-        "BEFORE any exchange. No false negatives, so the result equals "
-        "the plain join the oracle runs — the join removes the bounded "
-        "(~0.24%) false positives. At 100 TB this turns a full fact-table "
-        "shuffle into a ~10% shuffle for a bitmap broadcast; the same "
-        "probe expression pushes into a streaming scan or a MERGE's "
-        "source-side read. operators/bloom.py is the library form."
+        "Selective-dimension join with the row filtering left to the "
+        "planner: orders joined to the ~10% customer subset with "
+        "acctbal > 9000, then aggregated per priority. Below the "
+        "broadcast threshold the planner broadcasts the filtered "
+        "customers and the join drops non-matching orders inside the "
+        "orders scan stage, before any exchange. Above it, Spark's "
+        "built-in runtime Bloom filter "
+        "(spark.sql.optimizer.runtime.bloomFilter.enabled, on by default) "
+        "prunes the orders side of the shuffle join. Building the "
+        "DataFrame runs no Spark job."
     ),
 )
 def orders_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from currency_etl_spark.operators.bloom import prefiltered_join
-
     orders = table(spark, sf_dir, "orders")
     dim = table(spark, sf_dir, "customer").filter(F.col("c_acctbal") > 9000)
-    j = prefiltered_join(orders, dim, "o_custkey", "c_custkey")
     return (
-        j.groupBy("o_orderpriority")
+        orders.join(dim, orders["o_custkey"] == dim["c_custkey"])
+        .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
             F.countDistinct("o_custkey").cast("long").alias("n_customers"),
@@ -2529,14 +2525,12 @@ def events_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # level 1: the stored daily rollup — one row per (day, type, bin).
     # `merged` and `totals` below both re-aggregate daily, so the events
-    # scan + (d, type, bin) shuffle execute twice. An eager
-    # _swap_checkpoint of daily was A/B'd in r17 and REVERTED: min-of-3
-    # same-context 0.924 s checkpointed vs 0.843 s as-is — the eager
-    # build serializes work that otherwise overlaps the `exact`
-    # percentile branch on idle cores (the same measured trade as
-    # dedup_ngram_jaccard in r16). On a saturated cluster the checkpoint
-    # form wins (one fact scan instead of two); locally the duplicate
-    # subtree is free parallelism.
+    # scan + (d, type, bin) shuffle execute twice. Checkpointing daily
+    # eagerly measured slower (min-of-3 same-context 0.924 s vs 0.843 s):
+    # the eager build serializes work that otherwise overlaps the `exact`
+    # percentile branch on idle cores. On a saturated cluster the
+    # checkpoint form wins (one fact scan instead of two); locally the
+    # duplicate subtree is free parallelism.
     daily = e.groupBy("d", "event_type", "bin").agg(F.count(F.lit(1)).alias("n"))
     # level 2: ad-hoc period = sum of daily bin counts, no events rescan
     merged = daily.groupBy("event_type", "bin").agg(F.sum("n").alias("n"))
@@ -2591,95 +2585,8 @@ ZORDER_RANGE_SPLITS = 32
 #: tie run, via its integer tiebreak — until no rank task sorts more rows
 #: than this. 2M (key, tiebreak) pairs ≈ tens of MB of sort input per task
 #: at cluster scale; every test-SF relation sits far below it, so locally
-#: the segmentation terminates at level 0 (one extrema job + one counting
-#: job on the checkpointed input). Pass max_split_rows=None to opt a
-#: known-uniform key (zorder's Morton values) back onto the fully lazy
-#: single-pass path.
+#: the segmentation ends at its one fused histogram job.
 RANK_SKEW_CAP = 2_000_000
-
-
-def distributed_global_rank(
-    df: DataFrame,
-    key: str,
-    tiebreak: str,
-    max_split_rows: "int | None" = RANK_SKEW_CAP,
-    with_total: bool = False,
-) -> DataFrame:
-    """Exact global ROW_NUMBER over (key, tiebreak) without a single-task
-    global window: deterministic value-range splits (exact (max-min)/32
-    integer arithmetic — never sampled boundaries, so re-runs and the
-    oracle agree bit-for-bit), a 32-row cumulative offset table, and a
-    parallel per-split local window. Returns df + a ``rank`` column.
-
-    NULL keys rank FIRST (Spark's ASC default), ordered by tiebreak —
-    they form their own split (``__pid = -1``), so every input row
-    appears in the output exactly once. ``with_total=True`` additionally
-    attaches ``__ntot`` (the total row count, identical on every row),
-    derived from the already-computed split counts — callers that need n
-    (NTILE's closed form) read it instead of re-scanning the input.
-
-    The deterministic twin of repartitionByRange + zipWithIndex: range
-    boundaries derived from data extrema instead of Spark's sampling
-    RangePartitioner (whose boundaries — and therefore any downstream
-    fixed-size bucketing — vary run to run).
-
-    The default ``max_split_rows=RANK_SKEW_CAP`` takes the skew-ADAPTIVE
-    path: split boundaries refine before the plan is built (one counting
-    job per refinement level, driver-side bookkeeping of ≤levels·splits
-    interval rows — see _adaptive_rank_segments) so no task's local
-    window sorts more than the cap however skewed the key, and a single
-    hot key's tie run re-splits on its integer tiebreak
-    (_tb_subsegments). At test SFs every relation is below the cap, so
-    the refinement terminates at level 0 — two small jobs against the
-    caller's checkpointed input. ``max_split_rows=None`` opts onto the
-    fully lazy single-pass path — zero driver jobs, but parallelism
-    fixed at ZORDER_RANGE_SPLITS tasks and split balance following the
-    key's value distribution: right only for relations comfortably
-    sorted by 32 tasks, never a fact-scale default. Rank output is
-    identical either way (tests/test_distributed_percentile.py forces
-    both paths and asserts equality with the plain global ROW_NUMBER)."""
-    from pyspark.sql import Window as W
-
-    if max_split_rows is not None:
-        return _adaptive_global_rank(df, key, tiebreak, max_split_rows, with_total)
-    # key extrema via a 1-row aggregate broadcast back — NOT `min(key)
-    # OVER ()`, which is itself a single-partition global window and
-    # would reintroduce the exact bottleneck this helper exists to avoid
-    ext = df.agg(F.min(key).alias("__kmin"), F.max(key).alias("__kmax"))
-    # NULL keys take the sentinel split -1: it sorts before every real
-    # split in the offset table (rank NULLS FIRST) and, unlike a NULL
-    # __pid, survives the equi-join below (NULL = NULL never matches —
-    # the silent row-drop this guards against)
-    d = df.crossJoin(F.broadcast(ext)).withColumn(
-        "__pid",
-        F.when(F.col(key).isNull(), F.lit(-1)).otherwise(
-            F.expr(
-                f"({key} - __kmin) div "
-                f"(((__kmax - __kmin) div {ZORDER_RANGE_SPLITS}) + 1)"
-            )
-        ),
-    )
-    counts = d.groupBy("__pid").agg(F.count(F.lit(1)).alias("__n"))
-    offs = counts.withColumn(
-        "__off",
-        F.coalesce(
-            F.sum("__n").over(W.orderBy("__pid").rowsBetween(W.unboundedPreceding, -1)),
-            F.lit(0),
-        ),
-    )
-    if with_total:
-        # total = sum over the ≤33-row offset relation (a window over the
-        # already-aggregated split counts, not another pass over df)
-        offs = offs.withColumn("__ntot", F.sum("__n").over(W.partitionBy()))
-    offs = offs.drop("__n")
-    rank = F.col("__off") + F.row_number().over(
-        W.partitionBy("__pid").orderBy(key, tiebreak)
-    )
-    return (
-        d.join(F.broadcast(offs), "__pid")
-        .withColumn("rank", rank.cast("long"))
-        .drop("__pid", "__off", "__kmin", "__kmax")
-    )
 
 
 def _adaptive_rank_segments(
@@ -2708,7 +2615,7 @@ def _refine_segments(
     range-split (one counting job per level covering ALL oversized
     intervals) until every populated interval holds ≤max_rows rows or is
     one key wide; ``final`` carries intervals already known small enough
-    (e.g. from _adaptive_global_rank's fused level-0 histogram)."""
+    (e.g. from distributed_global_rank's fused level-0 histogram)."""
     final = list(final)
     while pending:
         widths = [((hi - lo) // ZORDER_RANGE_SPLITS) + 1 for lo, hi in pending]
@@ -2753,7 +2660,7 @@ def _log_bucket_sql(key: str) -> str:
     onto ≤130 bucket ids, computable per-row with no data extrema:
     non-negative keys take 64 + bit-length (65..128), negative keys take
     64 − bit-length of −(key+1) (1..64; the +1 shift keeps INT64_MIN in
-    range), NULL keys map to NULL. _adaptive_global_rank groups on this
+    range), NULL keys map to NULL. distributed_global_rank groups on this
     to fuse extrema + null-count + level-0 segment counts into ONE job,
     and reuses it as the broadcast hash-join key onto the segment table."""
     return (
@@ -2962,27 +2869,50 @@ def _ranked_null_block(
     )
 
 
-def _adaptive_global_rank(
-    df: DataFrame, key: str, tiebreak: str, max_rows: int, with_total: bool = False
+def distributed_global_rank(
+    df: DataFrame,
+    key: str,
+    tiebreak: str,
+    max_split_rows: int = RANK_SKEW_CAP,
+    with_total: bool = False,
 ) -> DataFrame:
-    """distributed_global_rank's skew path: ONE fused driver job — a
-    ≤130-group log2-magnitude histogram (_log_bucket_sql) carrying count
-    + exact min/max per bucket — yields the null count, the key extrema,
-    AND the level-0 segmentation at once; only buckets over the cap pay
-    further counting jobs (_refine_segments). Offsets are plain prefix
-    sums of the already-known segment counts, and the plan is a broadcast
-    HASH join on the bucket id (range bounds as residual predicates) onto
-    the tiny segment relation plus the same parallel per-segment window.
-    No task sorts more than max_rows: key-range splits first, and a
+    """Exact global ROW_NUMBER over (key, tiebreak) without a single-task
+    global window. Returns df + a ``rank`` column.
+
+    NULL keys rank FIRST (Spark's ASC default), ordered by tiebreak, as
+    their own block, so every input row appears in the output exactly
+    once. ``with_total=True`` additionally attaches ``__ntot`` (the total
+    row count, identical on every row) as a literal the driver already
+    knows — callers that need n (NTILE's closed form) read it instead of
+    re-scanning the input.
+
+    The deterministic twin of repartitionByRange + zipWithIndex: segment
+    bounds come from exact data extrema and integer arithmetic, never
+    from Spark's sampling RangePartitioner (whose boundaries — and
+    therefore any downstream fixed-size bucketing — vary run to run), so
+    re-runs and the oracle agree bit-for-bit.
+
+    ONE fused driver job — a ≤130-group log2-magnitude histogram
+    (_log_bucket_sql) carrying count + exact min/max per bucket — yields
+    the null count, the key extrema, AND the level-0 segmentation at
+    once; only buckets over the cap pay further counting jobs
+    (_refine_segments). Offsets are plain prefix sums of the
+    already-known segment counts, and the plan is a broadcast HASH join
+    on the bucket id (range bounds as residual predicates) onto the tiny
+    segment relation plus a parallel per-segment window. No task sorts
+    more than ``max_split_rows``: key-range splits first, and a
     single-key run larger than the cap (a hot small-domain key — e.g.
     frequency=1 holding half the customers) re-splits on its TIEBREAK's
     int64 order image via _tb_subsegments (the integer tiebreak itself,
-    or — since r9, round-8 verdict item 6 — a string tiebreak's 60-bit
-    byte-prefix) — and since r8 the NULL-key block (which ranks first)
-    splits through the same device when it exceeds the cap
-    (_ranked_null_block). Remaining unsplittable floors, each documented
-    there: equal (key, tiebreak) pairs, shared 7.5-byte string prefixes,
-    non-integral-non-string tiebreaks, and NULL-tiebreak ties."""
+    or a string tiebreak's 60-bit byte-prefix); the NULL-key block
+    (which ranks first) splits through the same device when it exceeds
+    the cap (_ranked_null_block). Remaining unsplittable floors, each
+    documented there: equal (key, tiebreak) pairs, shared 7.5-byte
+    string prefixes, non-integral-non-string tiebreaks, and
+    NULL-tiebreak ties. At test SFs every relation is below the default
+    cap, so the histogram job is the only driver job;
+    tests/test_distributed_percentile.py forces low caps to exercise the
+    refinement."""
     from pyspark.sql import Window as W
 
     hist = (
@@ -3000,7 +2930,7 @@ def _adaptive_global_rank(
         for r in hist
         if r["__b"] is not None
     )
-    null_part = _ranked_null_block(df, key, tiebreak, nnull, max_rows)
+    null_part = _ranked_null_block(df, key, tiebreak, nnull, max_split_rows)
     if not buckets:
         # every row's key is NULL (or df is empty): the null segment IS
         # the relation
@@ -3012,7 +2942,7 @@ def _adaptive_global_rank(
         )
     nonnull = df.filter(F.col(key).isNotNull())
     total = sum(c for _, _, c in buckets)
-    if all(c <= max_rows for _, _, c in buckets):
+    if all(c <= max_split_rows for _, _, c in buckets):
         # the histogram just PROVED every log-bucket fits one task's sort
         # cap — no segment table needed at all: the bucket id is already
         # a per-row expression and the bucket offsets are already known
@@ -3048,14 +2978,14 @@ def _adaptive_global_rank(
             if with_total
             else out
         )
-    ok = [(lo, hi, c) for lo, hi, c in buckets if c <= max_rows or lo == hi]
-    oversized = [(lo, hi) for lo, hi, c in buckets if c > max_rows and lo != hi]
-    segs = _refine_segments(nonnull, key, oversized, ok, max_rows)
-    hot = [lo for lo, hi, c in segs if lo == hi and c > max_rows]
+    ok = [(lo, hi, c) for lo, hi, c in buckets if c <= max_split_rows or lo == hi]
+    oversized = [(lo, hi) for lo, hi, c in buckets if c > max_split_rows and lo != hi]
+    segs = _refine_segments(nonnull, key, oversized, ok, max_split_rows)
+    hot = [lo for lo, hi, c in segs if lo == hi and c > max_split_rows]
     tbsegs: dict = {}
     tbx = _tb_order_expr(nonnull, tiebreak)
     if hot and tbx is not None:
-        tbsegs = _tb_subsegments(nonnull, key, tiebreak, hot, max_rows, order_expr=tbx)
+        tbsegs = _tb_subsegments(nonnull, key, tiebreak, hot, max_split_rows, order_expr=tbx)
     # refinement only ever SUBDIVIDES level-0 buckets, so every segment
     # nests inside exactly one bucket — the bucket id is a pure
     # arithmetic function of the key on both sides, which turns the
@@ -3119,25 +3049,13 @@ def _adaptive_global_rank(
     return out.withColumn("__ntot", F.lit(off).cast("long")) if with_total else out
 
 
-def _swap_checkpoint(tag: str, df: DataFrame) -> DataFrame:
-    """Eagerly localCheckpoint ``df``, releasing the previous checkpoint
-    held under ``tag`` — the one-live-checkpoint-per-entry release
-    pattern from round-5 advice (supplier_reach_bfs), shared repo-wide
-    via operators/ckpt. Used where a small relation (customers-sized
-    base, edge lists) feeds several downstream 1-row aggregates that
-    would otherwise each re-execute its whole lineage."""
-    from currency_etl_spark.operators.ckpt import swap_checkpoint
-
-    return swap_checkpoint(tag, df)
-
-
 def distributed_ntile(
     df: DataFrame,
     n_tiles: int,
     key,
     tiebreak: str,
     out_col: str,
-    max_split_rows: "int | None" = RANK_SKEW_CAP,
+    max_split_rows: int = RANK_SKEW_CAP,
 ) -> DataFrame:
     """Exact NTILE(n) OVER (ORDER BY key ASC, tiebreak ASC) without an
     unpartitioned window: distributed_global_rank supplies the global
@@ -3405,7 +3323,7 @@ def events_zorder_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialized relation is exactly what OPTIMIZE ZORDER would stage
     # before rewriting files (measured 2.5 s -> 2.1 s standalone sf0.1;
     # the remaining cost is the two ranks' window shuffles, not the scan)
-    z = _swap_checkpoint(
+    z = swap_checkpoint(
         "zorder_audit_z",
         base.crossJoin(F.broadcast(s))
         .withColumn("h", F.expr("(us - min_us) div 3600000000"))
@@ -3703,7 +3621,7 @@ def events_type_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the type list, and the gap-filled grid that self-joins) —
     # unmaterialized, each re-ran the events scan + daily aggregate
     # (r16 plan audit: 6 parquet scans → 1)
-    daily = _swap_checkpoint(
+    daily = swap_checkpoint(
         "typecorr_daily",
         table(spark, sf_dir, "events")
         .filter(F.col("ts").isNotNull())
@@ -3909,7 +3827,7 @@ def parts_revenue_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     # evaluates its input three times (extrema, split counts, ranked
     # join) and the grand total once more — without this the lineitem
     # scan + groupBy would re-run each time
-    rev = _swap_checkpoint("parts_pareto_rev", rev)
+    rev = swap_checkpoint("parts_pareto_rev", rev)
     # revenue DESC == negated exact int64 key ASC (decimal(18,4)·10⁴ is
     # an exact integer), partkey tie-break unchanged
     keyed = rev.withColumn("__k", F.expr("CAST(-(revenue * 10000) AS BIGINT)"))
@@ -4005,7 +3923,7 @@ def orders_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Materialize it once — at 100 TB this is the persist(MEMORY_AND_DISK)
     # a production basket job would put on its deduped fact anyway
     # (guide §5: reused AND expensive to recompute).
-    li = _swap_checkpoint(
+    li = swap_checkpoint(
         "basket_li",
         table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct(),
     )
@@ -4274,7 +4192,7 @@ def customers_segment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # relation pair (a customer enters a half iff it has an order there,
     # i.e. its conditional sum is non-NULL; sums over the same rows).
     dec = F.col("o_totalprice").cast("decimal(18,4)")
-    halves = _swap_checkpoint(
+    halves = swap_checkpoint(
         "seg_migration_halves",
         o.groupBy("o_custkey").agg(
             F.sum(F.when(F.col("o_orderdate") < F.col("m"), dec)).alias("s1"),
@@ -4551,7 +4469,7 @@ def events_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumers (mean, denominator, both lag-pair sides) — unmaterialized,
     # each re-ran the events scan + daily aggregate + extrema join
     # (r16 plan audit: 10 parquet scans → 2)
-    series = _swap_checkpoint(
+    series = swap_checkpoint(
         "acf_series",
         days.join(daily, "day", "left").select(
             "day", (F.coalesce(F.col("q"), F.lit(0)).cast("double") / 10000).alias("x")
@@ -4980,7 +4898,7 @@ def nation_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     # groupBy re-ran once per reference (3x including the duplicated
     # totals broadcast below; r16 plan audit: 7 parquet scans → 3).
     # The checkpoint is |suppliers|-sized.
-    rev = _swap_checkpoint(
+    rev = swap_checkpoint(
         "hhi_rev",
         li.join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
         .groupBy("s_nationkey", "s_suppkey")
@@ -5277,8 +5195,7 @@ def supplier_reach_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # family's shared-index shape; memo_checkpoint keeps the same
     # one-live-per-tag release discipline the old per-invocation
     # swap_checkpoint had). The per-invocation view name keeps
-    # concurrent builders in one session from racing on a shared name
-    # (round-5 advice).
+    # concurrent builders in one session from racing on a shared name.
     global _BFS_VIEW_SEQ
     edges = supplier_affinity_edges(spark, sf_dir, BFS_TOP_PARTS)
     _BFS_VIEW_SEQ += 1
@@ -5764,7 +5681,7 @@ def customers_spend_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     # evaluates its input three times (extrema, split counts, ranked
     # join) — without this the orders scan + groupBy would re-run each
     # time (same rationale as customer_rfm / events_zorder_audit)
-    spend = _swap_checkpoint("spend_gini", spend)
+    spend = swap_checkpoint("spend_gini", spend)
     # decimal(18,4) quantizes exactly: ORDER BY s == ORDER BY s·10⁴ as
     # int64 (the helper's range-split arithmetic needs an integer key)
     keyed = spend.withColumn("__k", F.expr("CAST(s * 10000 AS BIGINT)"))
@@ -6084,7 +6001,7 @@ def orders_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "Shuffle-key skew audit — the number a team reads BEFORE keying "
         "a 100 TB join or aggregation on a column, and the decision "
         "input for the engine's skew machinery (operators/skew.py's "
-        "salted join, AQE's skew-join splitting): per-key counts of the "
+        "salted aggregate, AQE's skew-join splitting): per-key counts of the "
         "candidate key (user_id), md5-bucketed into "
         f"{SKEW_BUCKETS} stand-in partitions (the same stable-hash "
         "idiom docs_shard_manifest routes with — deterministic across "
@@ -6113,8 +6030,6 @@ def orders_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
 def events_key_skew(
     spark: SparkSession, sf_dir: str, *, n_buckets: int = SKEW_BUCKETS
 ) -> DataFrame:
-    from currency_etl_spark.operators.ckpt import swap_checkpoint
-
     keyed = (
         table(spark, sf_dir, "events")
         .filter(F.col("user_id").isNotNull())

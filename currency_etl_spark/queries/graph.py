@@ -228,7 +228,7 @@ def supplier_affinity_edges(spark: SparkSession, sf_dir: str, cap: int) -> DataF
         # dedup FIRST (half the distinct's input), then the symmetric
         # doubling is an in-row Generate.
         #
-        # Hub-fanout bound (r16 advice item 1): the top-`cap` window
+        # Hub-fanout bound: the top-`cap` window
         # bounds parts-per-SUPPLIER, not suppliers-per-part, so the
         # per-part collect_list is bounded only by the data's
         # suppliers-per-part fanout — O(fanout²) pairs in one row. That

@@ -3321,8 +3321,8 @@ def _hybrid_fused(lex: DataFrame, sem: DataFrame) -> DataFrame:
     tags=("llm", "text", "vector", "search", "eval"),
     doc=(
         "Retrieval semantic-health eval — the rung that closes the "
-        "hybrid-search loop the way dedup_lsh_recall closed dedup's "
-        "(round-13 verdict item 3), built because ORACLE AGREEMENT IS "
+        "hybrid-search loop the way dedup_lsh_recall closed dedup's; "
+        "it exists because ORACLE AGREEMENT IS "
         "NOT SEMANTIC HEALTH: the hybrid entry's first-cut stopword gate "
         "emptied its lexical arm at sf0.01 while both engines happily "
         "matched on the degenerate result. Over the SHARED arm/fusion "
@@ -3399,7 +3399,7 @@ def _text_batch_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenized ONCE per session/SF and every sibling maintenance entry
     reuses the same materialized relation, under the one-live-per-tag
     release discipline (the knn_index_staleness probe-relation pattern;
-    r14 advice — swap_checkpoint re-tokenized per consumer)."""
+    a plain swap_checkpoint would re-tokenize per consumer)."""
     from currency_etl_spark.operators.ckpt import memo_checkpoint
 
     return memo_checkpoint(
@@ -3564,7 +3564,7 @@ def text_index_staleness(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(ovl)
         .crossJoin(tn)
     )
-    # dl band-check cross-multiplications in decimal (r14 advice): token
+    # dl band-check cross-multiplications in decimal: token
     # and doc totals are each comfortably < 1e18, but their int64 PRODUCT
     # can exceed 2^63 at extreme corpus scale — where Spark would silently
     # wrap while DuckDB raises, a latent engine divergence in the exact-
@@ -4422,7 +4422,7 @@ _SQL_BM25_TERM = (
     doc=(
         "Posting-depth escalation for BM25 retrieval through rank-capped "
         "posting heads — the text analog of knn_filtered_escalate, "
-        "closing the recall hazard the round-14 verdict named (item 6): "
+        "closing a recall hazard: "
         "an index that SERVES from capped posting pages can exhaust a "
         "head before a rare conjunctive query finds any co-occurrence, "
         "so production stores escalate page depth until the query is "

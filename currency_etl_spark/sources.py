@@ -39,18 +39,6 @@ NBU_RAW_SCHEMA = T.StructType(
     ]
 )
 
-#: Warehouse table (reference sql/create_tables.sql:1-10; FIXTURES.md A2).
-EXCHANGE_RATES_SCHEMA = T.StructType(
-    [
-        T.StructField("cc", T.StringType(), False),
-        T.StructField("txt", T.StringType()),
-        T.StructField("rate", T.DoubleType()),
-        T.StructField("rate_per_100", T.DoubleType()),
-        T.StructField("exchangedate", T.DateType(), False),
-        T.StructField("ingest_date", T.DateType()),
-    ]
-)
-
 
 #: (applicationId, sf_dir, name) → DataFrame. A DataFrame is an immutable
 #: logical plan, so handing the same handle out repeatedly is safe; caching

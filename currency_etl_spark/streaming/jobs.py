@@ -45,7 +45,7 @@ _SCHEMA_CACHE_LOCK = threading.Lock()
 
 def _landing_key(sf_dir: str) -> str:
     """Landing-dir key for a corpus dir: basename (readability) plus a
-    12-hex digest of the ABSOLUTE path (r8 advice — basenames repeat
+    12-hex digest of the ABSOLUTE path (basenames repeat
     across pytest tmp dirs, and a same-basename collision would swap the
     landing file under another run's live readStream; the hash makes
     landing dirs collision-free across runs)."""
@@ -90,7 +90,7 @@ _LANDING_LOCK = threading.Lock()
 def _ensure_landing_link(stream_dir: str, basename: str, path: str) -> None:
     """Idempotent, thread-safe landing-dir setup: ``stream_dir`` exists
     and holds a symlink ``basename`` → ``path``. The collision-free
-    landing key (r8 advice) makes a differing target near-impossible;
+    landing key makes a differing target near-impossible;
     the retarget stays as armor for a dangling link (deleted tmp dir) or
     a regenerated corpus at the same path. The lock serializes the
     check-unlink-create window; the FileExistsError tolerance covers a
@@ -127,7 +127,7 @@ def _start_pool_queries(spark, sf_dir) -> dict:
     group OUTSIDE the thread fan-out (a per-thread set/restore would
     race), and each group's starts complete before the flag flips.
 
-    Thread fan-out (round-12 verdict item 3): build+start is
+    Thread fan-out: build+start is
     driver-side fixed cost — checkpoint-dir setup, plan analysis,
     micro-batch scheduler spin-up — that grew superlinearly run
     serially (1.81 s at 12 streams, 2.59 s at 13). The per-job calls
@@ -242,7 +242,7 @@ _POOL_STARTER = None
 #: Wall time of the last pool start (the START loop only — each entry's
 #: own awaitTermination stays in its own time), plus a not-yet-reported
 #: flag: bench.py drains it to subtract the startup from the paying
-#: entry's number and report it as its own line (round-8 verdict item 3).
+#: entry's number and report it as its own line.
 _POOL_START_SEC = 0.0
 _POOL_START_PENDING = False
 
@@ -279,7 +279,7 @@ def reset_stream_pool() -> None:
 
 
 def pooled_sink(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Lifecycle-pooled streaming runner (round-4/5 verdict): the first
+    """Lifecycle-pooled streaming runner: the first
     streaming entry invoked for an (app, sf_dir) STARTS every registered
     stream job concurrently; each entry then awaits only ITS OWN query.
     The ~1-2 s/entry of checkpoint-dir + micro-batch-scheduling + state-

@@ -132,7 +132,7 @@ def test_bpe_merge_loop_matches_python(spark, sf_dir):
 
 
 def test_bpe_merge_loop_step2_is_pair_merge_rank1(spark, sf_dir):
-    """Cross-entry pin (round-13 verdict item 6): bpe_pair_merge applies
+    """Cross-entry pin: bpe_pair_merge applies
     one merge and ranks the NEXT candidates — its rank-1 row is exactly
     the loop's second applied merge."""
     loop = CATALOG["bpe_merge_loop"].spark_fn(spark, sf_dir).collect()

@@ -59,7 +59,7 @@ def test_bfs_matches_python_reference(spark, sf_dir):
 
 def test_affinity_posting_list_fanout_bounded(spark, sf_dir):
     """Pin the hub-fanout bound the posting-list pair generation relies
-    on (r16 advice item 1): the per-part collect_list in
+    on: the per-part collect_list in
     supplier_affinity_edges is bounded by suppliers-per-part AFTER the
     top-cap sparsification — the top-`cap` window bounds
     parts-per-supplier, so this is a data-shape property, not a window

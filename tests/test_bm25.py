@@ -94,7 +94,7 @@ def test_bm25_result_shape(spark):
 
 
 def test_bm25_kwargs_are_real_parameters(spark):
-    """query_k/top_n are keyword parameters (round-9 verdict item 6), not
+    """query_k/top_n are keyword parameters, not
     baked-in constants: a wider query can only add hit terms, and top_n
     bounds the result; graded defaults stay the module constants."""
     base = docs_bm25_search(spark, SF).collect()

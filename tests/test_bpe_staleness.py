@@ -1,4 +1,4 @@
-"""docs_bpe_staleness invariants (round-15 verdict item 6).
+"""docs_bpe_staleness invariants.
 
 The tokenizer drift monitor: the stored-slice-trained merge table (the
 streaming twin's persisted artifact — same cache tag, same corpus key)

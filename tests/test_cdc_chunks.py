@@ -71,8 +71,7 @@ def test_cdc_short_docs_single_chunk(spark, tmp_path):
     """Docs shorter than the rolling window (size(t) < CDC_W) have no
     boundary candidates and must come back as ONE [1..n] chunk — the
     unguarded sequence(1, size(t)-W+1) used to DESCEND through zero and
-    slice(t, 0, W) threw INVALID_PARAMETER_VALUE.START (round-9 advice;
-    latent because the synthetic corpus floors docs at 10 tokens)."""
+    slice(t, 0, W) threw INVALID_PARAMETER_VALUE.START (latent because the synthetic corpus floors docs at 10 tokens)."""
     texts = {
         1: "one",                                  # n=1
         2: "a b c",                                # n=3
@@ -142,7 +141,7 @@ def test_cdc_is_insertion_resilient(spark, tmp_path):
 
 
 def test_cdc_kwargs_are_real_parameters(spark):
-    """w/divisor are keyword parameters (round-9 verdict item 6): a
+    """w/divisor are keyword parameters: a
     larger divisor fires fewer boundaries (chunk count can only drop),
     and the graded defaults reproduce the registered output."""
     base = docs_cdc_chunks(spark, SF).collect()

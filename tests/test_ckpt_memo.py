@@ -88,7 +88,7 @@ def test_plain_swap_invalidates_memo(spark):
 
 
 def test_release_all_frees_everything(spark):
-    """release_all (round-7 verdict item 6): the long-session guard must
+    """release_all, the long-session guard, must
     drop every live checkpoint and memo key, and the next memo call under
     any released tag must rebuild."""
     from currency_etl_spark.operators import ckpt
@@ -110,9 +110,10 @@ def test_release_all_frees_everything(spark):
 
 def test_memo_keys_on_session_identity(spark):
     """The stored memo key folds in the owning session's applicationId
-    (round-7 advice): simulate a session hop by rewriting the stored app
-    component — the next call with the SAME caller key must rebuild
-    rather than hand back the (conceptually dead) checkpoint."""
+    (a checkpoint is bound to its session): simulate a session hop by
+    rewriting the stored app component — the next call with the SAME
+    caller key must rebuild rather than hand back the (conceptually
+    dead) checkpoint."""
     from currency_etl_spark.operators import ckpt
 
     calls = []
@@ -143,7 +144,7 @@ def test_checkpoint_tags_are_bounded_source_literals():
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "currency_etl_spark",
     )
-    ckpt_fns = {"memo_checkpoint", "swap_checkpoint", "chain_checkpoint", "_swap_checkpoint"}
+    ckpt_fns = {"memo_checkpoint", "swap_checkpoint", "chain_checkpoint"}
     # functions allowed to pass a NAME as the tag: their own callers are
     # checked below to pass only literals into that parameter
     param_carriers: dict[str, int] = {"spend_quartile": 1}  # tag is arg index 1
@@ -223,8 +224,7 @@ def test_checkpoint_tags_are_bounded_source_literals():
 def test_memo_touches_carry_build_time(spark):
     """drain_memo_touches records (tag, built, build_sec): a cold build
     carries its positive materialization wall time, the warm re-read
-    carries 0.0 — the numbers bench.py subtracts from the paying entry
-    (round-8 verdict item 3)."""
+    carries 0.0 — the numbers bench.py subtracts from the paying entry."""
     from currency_etl_spark.operators import ckpt
 
     ckpt.reset_memos()
@@ -275,7 +275,7 @@ def test_nested_memo_builds_report_marginal_time(spark):
 
 
 def test_memo_same_tag_concurrent_builds_once(spark):
-    """Per-tag lock (round-13 advice): the streaming pool's thread
+    """Per-tag lock: the streaming pool's thread
     fan-out can hit memo_checkpoint for the SAME tag from two builder
     threads on a cold pool start. The critical section must serialize —
     exactly ONE build runs, both threads get the SAME live checkpoint,
@@ -316,7 +316,7 @@ def test_memo_same_tag_concurrent_builds_once(spark):
 
 def test_built_ledger_is_bounded():
     """_BUILT must not grow without bound in a long-lived session that
-    never drains (round-8 advice): it is a deque with a maxlen far above
+    never drains: it is a deque with a maxlen far above
     any bench pass's touch count."""
     from currency_etl_spark.operators import ckpt
 

@@ -4,9 +4,9 @@ enumerated site with a stated reason it stays small (a scalar, a
 partition/file list, a split histogram, a reference-scale report row set)
 or is deliberately out of the distributed hot path (chart rendering,
 fixture staging). An operator iterating ``.collect()`` results over data-
-proportional rows isn't distributed — the round-N verdicts grep for
-exactly this; this test makes the sweep executable so a new site fails
-the suite until its bound is argued here."""
+proportional rows isn't distributed. A new site fails the suite until
+its bound is argued here, and an allowance whose site is gone fails it
+too, so the table names only live sites."""
 
 from __future__ import annotations
 
@@ -27,13 +27,12 @@ ALLOWED_SITES = {
     ("sources.py", "latest_partition"): "partition directory list — O(partitions)",
     ("warehouse.py", "merge_upsert"): "distinct touched-partition list for pruned dynamic overwrite — O(partitions)",
     ("streaming/jobs.py", "_staged_late_dir"): "fixture staging for the late-replay landing dir (test scaffolding, built once per corpus version), not the streaming operator",
-    ("operators/bloom.py", "build_bloom_bitmap"): "the OR-merged bloom bitmap — fixed sketch size, independent of rows",
     ("operators/multimodal.py", "size_balanced"): "per-partition byte totals for bin packing — O(partitions)",
     ("queries/extras.py", "events_adaptive_salted_agg"): "1-row audit globals (hottest-key rows, total rows) — the AQE-style runtime plan decision; 1 row by construction (a single max/sum over the per-key relation)",
     ("queries/extras.py", "_exact_percentiles_distributed"): "1-row extrema/count aggregate",
     ("queries/extras.py", "_values_at_ranks"): "≤32-row split histogram per recursion level, ≤2·|qs| probed rank rows",
     ("queries/extras.py", "_refine_segments"): "per-level interval counts — ≤ splits·|oversized intervals| rows, never data rows",
-    ("queries/extras.py", "_adaptive_global_rank"): "≤130-row log2-magnitude histogram (count + extrema per bucket) — the fused single driver job",
+    ("queries/extras.py", "distributed_global_rank"): "≤130-row log2-magnitude histogram (count + extrema per bucket) — the fused single driver job",
     ("queries/extras.py", "_tb_subsegments"): "per-hot-key tiebreak extrema (≤ |hot keys| rows) + per-level interval counts — ≤ splits·|oversized intervals| rows, never data rows",
     ("queries/llm_ops.py", "_propagate_min_labels"): "connected-components convergence check — 1-row changed-count per iteration",
     ("queries/training.py", "_bpe_train_build"): "1-row argmax merge winner per step (≤ BPE_MERGES rows total) — the scalar iterative-training decision (bpe_merge_loop body, shared with docs_bpe_encode); BFS convergence-check precedent",

@@ -82,7 +82,7 @@ def test_dedup_semantic_matches_numpy(spark):
 
 
 def test_dedup_semantic_parameters_act(spark):
-    """cap/tau are real keyword parameters (round-8 verdict item 4), not
+    """cap/tau are real keyword parameters, not
     dead defaults: an impossible threshold empties the result, a tighter
     threshold can only shrink it, and a smaller membership cap bounds the
     candidate surface (never grows it)."""

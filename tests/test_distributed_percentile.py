@@ -1,7 +1,7 @@
 """_exact_percentiles_distributed must be BIT-IDENTICAL to Spark's builtin
 percentile() — it exists purely so the exact interpolated boundaries can be
 computed without the builtin's single-node value-map merge (the 100 TB
-bottleneck lineitem_equidepth_histogram dropped in round 6). Bit-identity is
+bottleneck lineitem_equidepth_histogram avoids). Bit-identity is
 the whole contract: the histogram entry compares rows against the boundary
 doubles, so an ulp of drift could flip a row's bucket and break the DuckDB
 oracle hash."""
@@ -86,7 +86,7 @@ def test_skewed_split_recursion_matches_builtin(spark):
 
 
 def test_adaptive_global_rank_matches_plain_row_number(spark):
-    """distributed_global_rank(max_split_rows=...) — the skew path — must
+    """distributed_global_rank under a low max_split_rows must
     assign exactly the ranks of ROW_NUMBER() OVER (ORDER BY key, tiebreak)
     while bounding every segment to the cap (single-key runs excepted)."""
     from pyspark.sql import Window as W
@@ -236,12 +236,13 @@ def test_adaptive_rank_property_random_keys(spark):
 
 def test_global_rank_null_keys_rank_first_both_paths(spark):
     """NULL keys must not vanish: ROW_NUMBER semantics under Spark's ASC
-    default put NULLs FIRST (ordered by tiebreak). The lazy path routes
-    them through the sentinel split -1 (a NULL __pid would fall out of
-    the equi-join — the silent row-drop this pins); the adaptive path
-    ranks them as their own leading segment. Both must equal the plain
-    global ROW_NUMBER, preserve the row count, and agree with each
-    other; the all-NULL degenerate relation must also survive."""
+    default put NULLs FIRST (ordered by tiebreak), ranked as their own
+    leading block (a NULL key would fall out of the segment equi-join —
+    the silent row-drop this pins). Both paths — the default cap, where
+    every log-bucket fits and ranks by its own window, and a tiny cap,
+    which forces the segmented join and a split NULL block — must equal
+    the plain global ROW_NUMBER and preserve the row count; the all-NULL
+    degenerate relation must also survive."""
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
@@ -264,8 +265,8 @@ def test_global_rank_null_keys_rank_first_both_paths(spark):
             key=by_tb,
         )
         assert got == want, kwargs
-    # all-NULL keys: the null segment IS the relation (adaptive path's
-    # kmin-is-None branch; lazy path's sentinel split catches every row)
+    # all-NULL keys: the null block IS the relation (the no-buckets
+    # branch)
     all_null = spark.createDataFrame(
         [(None, i) for i in range(6)], "k long, tb long"
     )
@@ -498,7 +499,7 @@ def test_corpus_scale_skewed_ntile_matches_builtin(spark, sf_dir):
 
 
 def test_adaptive_rank_null_block_segments_on_tiebreak(spark):
-    """r8 (round-7 verdict item 4): a majority-NULL key whose block
+    """A majority-NULL key whose block
     exceeds the cap must range-split on the integer TIEBREAK through
     _tb_subsegments — the rank path's last single-task floor — while
     assigning exactly the ranks of ROW_NUMBER() OVER (ORDER BY k, tb)
@@ -658,7 +659,7 @@ def test_string_tiebreak_prefix_is_order_preserving(spark):
 
 
 def test_adaptive_rank_string_tiebreak_splits(spark):
-    """r9 (round-8 verdict item 6): a majority-NULL key with a STRING
+    """A majority-NULL key with a STRING
     tiebreak under the cap must range-split on the tiebreak's byte-prefix
     order image — no partitionBy(lit(0)) single-task fallback — while
     assigning exactly ROW_NUMBER() OVER (ORDER BY k, tb)'s ranks; the

@@ -38,7 +38,7 @@ def test_k_anonymity_matches_pandas(spark):
 
 
 def test_k_anonymity_k_is_a_real_parameter(spark):
-    """k is a keyword parameter (round-9 verdict item 6): at_risk rows
+    """k is a keyword parameter: at_risk rows
     are exactly the groups below k, so k=1 clears the flag everywhere and
     a huge k flags everything; the histogram itself never changes."""
     base = {r["group_size"]: r for r in customers_k_anonymity(spark, SF).collect()}

@@ -215,9 +215,9 @@ def test_adaptive_both_plans_agree_with_direct_groupby(spark, tmp_path_factory):
 
 def test_adaptive_null_values_count_rows(spark, tmp_path_factory):
     """n_events is count(*) — rows, not non-NULL values — in BOTH
-    physical plans (round-13 advice: the salted phase-1 F.count('v')
-    counted non-NULL values and diverged from the plain branch and the
-    oracle on any corpus with NULL event values)."""
+    physical plans (a salted phase-1 F.count('v') would count non-NULL
+    values and diverge from the plain branch and the oracle on any
+    corpus with NULL event values)."""
     from tests.fixtures import write_events
 
     from currency_etl_spark.queries.extras import events_adaptive_salted_agg
@@ -243,7 +243,7 @@ def test_adaptive_null_values_count_rows(spark, tmp_path_factory):
 def test_adaptive_empty_relation_is_empty_not_error(spark, tmp_path_factory):
     """All-NULL grouping key -> the audit row is (NULL, NULL); the entry
     must return the oracle's empty result, not raise TypeError on
-    topk * SKEW_BUCKETS (round-13 advice)."""
+    topk * SKEW_BUCKETS."""
     from tests.fixtures import write_events
 
     from currency_etl_spark.queries.extras import events_adaptive_salted_agg

@@ -412,7 +412,7 @@ def test_knn_escalate_matches_numpy(spark):
 
 
 def test_knn_escalate_base_slice_is_filtered_search(spark):
-    """Cross-entry pin (round-13 verdict item 2): a single-stage schedule
+    """Cross-entry pin: a single-stage schedule
     at the base depth reproduces knn_filtered_search EXACTLY (drop the
     eff_nprobe column, which is constant IVF_NPROBE)."""
     from currency_etl_spark.queries.vectors import (
@@ -728,7 +728,7 @@ def test_compact_pages_match_numpy_rebuild(spark):
 
 
 def test_compact_serving_equals_masked_screen(spark):
-    """Cross-entry pin (round-14 verdict item 3): serving over the
+    """Cross-entry pin: serving over the
     REWRITTEN (compacted) assignment relation is bit-identical to
     knn_tombstone_screen's serve-time masking of the stored artifact."""
     from currency_etl_spark.queries.vectors import (

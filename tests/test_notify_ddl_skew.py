@@ -1,5 +1,5 @@
 """Tests for the remaining reference surface (Telegram subscriber registry,
-DDL, delivery sink) and the skew-salting join utility."""
+DDL, delivery sink) and the skew-salting aggregate."""
 
 from __future__ import annotations
 
@@ -15,7 +15,7 @@ from currency_etl_spark.notify import (
     subscribers_table,
     unsubscribe,
 )
-from currency_etl_spark.operators.skew import salted_join
+from currency_etl_spark.operators.skew import salted_agg
 
 
 def _users(spark, rows):
@@ -53,40 +53,7 @@ def test_ensure_tables_idempotent(spark, tmp_path):
     assert spark.table("currency_test.telegram_users").count() == 0
 
 
-def test_salted_join_matches_plain_join(spark):
-    # skewed big side: 90% of rows share key 7
-    big = spark.range(0, 2000).select(
-        F.when(F.col("id") % 10 < 9, F.lit(7)).otherwise(F.col("id") % 50).alias("k"),
-        F.col("id").alias("v"),
-    )
-    small = spark.range(0, 50).select(
-        F.col("id").alias("k"), (F.col("id") * 100).alias("w")
-    )
-    plain = big.join(small, "k").groupBy("k").agg(
-        F.count("*").alias("n"), F.sum("v").alias("sv"), F.sum("w").alias("sw")
-    )
-    salted = salted_join(big, small, "k", n_salts=8).groupBy("k").agg(
-        F.count("*").alias("n"), F.sum("v").alias("sv"), F.sum("w").alias("sw")
-    )
-    a = {r["k"]: (r["n"], r["sv"], r["sw"]) for r in plain.collect()}
-    b = {r["k"]: (r["n"], r["sv"], r["sw"]) for r in salted.collect()}
-    assert a == b
-
-
-def test_salted_join_left_keeps_unmatched(spark):
-    big = spark.range(0, 100).select((F.col("id") % 60).alias("k"), F.col("id").alias("v"))
-    small = spark.range(0, 50).select(F.col("id").alias("k"), F.lit(1).alias("w"))
-    plain = big.join(small, "k", "left")
-    salted = salted_join(big, small, "k", n_salts=4, how="left")
-    assert salted.count() == plain.count()
-    assert salted.filter("w IS NULL").count() == plain.filter("w IS NULL").count()
-
-
 def test_salted_agg_matches_plain_groupby(spark):
-    from pyspark.sql import functions as F
-
-    from currency_etl_spark.operators.skew import salted_agg
-
     # one pathologically hot key + uniform tail
     rows = [(1, i, float(i % 7)) for i in range(500)] + [
         (k, 1000 + k, float(k)) for k in range(2, 40)

@@ -1,4 +1,4 @@
-"""Perceptual-index lifecycle invariants (round-15 verdict item 5).
+"""Perceptual-index lifecycle invariants.
 
 multimodal_phash_staleness / multimodal_phash_rebuild complete the
 screen → staleness → rewrite verb set for the phash index family. Pin:

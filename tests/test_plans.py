@@ -413,7 +413,7 @@ def test_stats_trio_broadcast_only_no_fact_reshuffle(spark, sf_dir):
 
 
 def test_ntile_entries_have_no_unpartitioned_fact_window(spark, sf_dir):
-    """Round-5 verdict item 3: order_value_deciles, customer_rfm and
+    """order_value_deciles, customer_rfm and
     customers_rfm_segments must never funnel the fact/customer relation
     through an unpartitioned ORDER BY window. After the
     distributed_ntile rewiring, every per-row window is partitioned by
@@ -478,20 +478,54 @@ def test_equidepth_histogram_distributed_boundaries(spark, sf_dir):
     assert "HashAggregate" in p
 
 
-def test_bloom_prefilter_probe_is_scan_stage_arithmetic(spark, sf_dir):
-    """orders_bloom_prefilter: the Bloom probe must be literal bitmap
-    arithmetic (xxhash64 + getbit on a broadcast array literal) compiled
-    into the plan — never a UDF or a join against a bitmap relation —
-    and the dimension joins broadcast, so the fact table is never
-    shuffled for the join (the entire point: drop fact rows before they
-    pay an exchange)."""
+def _plan_path(node, hit):
+    """Nodes from ``node`` down to the first descendant ``hit`` accepts,
+    reading through AQE query stages, or None when nothing matches."""
+    if hit(node):
+        return [node]
+    if "QueryStageExec" in node.getClass().getSimpleName():
+        kids = [node.plan()]
+    else:
+        seq = node.children()
+        kids = [seq.apply(i) for i in range(seq.size())]
+    for kid in kids:
+        path = _plan_path(kid, hit)
+        if path is not None:
+            return [node] + path
+    return None
+
+
+def test_bloom_prefilter_is_a_scan_stage_broadcast_join(spark, sf_dir):
+    """orders_bloom_prefilter leaves the row filtering to the planner:
+    building the DataFrame runs no Spark job, and in the AQE final plan
+    the orders scan feeds a BroadcastHashJoin inside its own stage, so
+    non-matching orders are dropped before any exchange."""
     from currency_etl_spark.queries.extras import orders_bloom_prefilter
 
-    p = plan_of(orders_bloom_prefilter(spark, sf_dir))
-    assert "xxhash64" in p and "getbit" in p  # probe predicate in-plan
-    assert "BroadcastHashJoin" in p
-    assert not re.findall(r"SortMergeJoin|ShuffledHashJoin", p)
-    assert "pythonUDF" not in p and "BatchEvalPython" not in p
+    sc = spark.sparkContext
+    orders_bloom_prefilter(spark, sf_dir).collect()  # warm the table cache
+    group = "test-bloom-prefilter-build"
+    sc.setJobGroup(group, group)
+    try:
+        df = orders_bloom_prefilter(spark, sf_dir)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan()
+    assert final.isFinalPlan()
+    path = _plan_path(
+        final.executedPlan(),
+        lambda n: n.getClass().getSimpleName() == "FileSourceScanExec"
+        and "orders.parquet" in n.toString(),
+    )
+    assert path is not None, final.toString()
+    names = [n.getClass().getSimpleName() for n in path]
+    joins = [i for i, n in enumerate(names) if n == "BroadcastHashJoinExec"]
+    assert joins, names
+    below_join = names[joins[-1] + 1:]
+    assert not [n for n in below_join if "Exchange" in n or "QueryStage" in n], names
 
 
 def test_knn_graph_bucketed_equi_joins_only(spark, sf_dir):

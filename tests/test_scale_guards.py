@@ -16,9 +16,8 @@ for the patterns that kill a plan at 100 TB —
     a new entry that global-sorts an unbounded relation fails here
     until it's either rewritten or its bound is argued in this table.
 
-This is the executable form of the round-5 verdict's anti-pattern sweep
-(which found exactly the three ntile entries this round's rewiring
-cleared)."""
+This is the executable form of an anti-pattern sweep: a global sort
+over an unbounded relation runs in one task however many cores exist."""
 
 from __future__ import annotations
 

@@ -104,7 +104,7 @@ def test_screen_candidates_subset_of_batch_incremental(spark):
 
 
 def test_documents_stream_landing_dirs_are_collision_free(spark, tmp_path):
-    """r9 (r8 advice): the landing dir is keyed by basename PLUS a hash
+    """The landing dir is keyed by basename PLUS a hash
     of the absolute sf_dir, so two same-basename corpus dirs get
     DISTINCT landing dirs — the second run can no longer swap the
     landing file under the first run's live readStream (the old
@@ -185,7 +185,7 @@ def test_streaming_knn_screen_is_stateless(spark):
 def test_knn_screen_twins_agree_at_non_default_nprobe(spark):
     """The recall knob must not be a point where the twins can drift:
     knn_incremental takes nprobe= and the stream builder threads the
-    same kwarg (round-10 verdict item 6). Run the stream job at a
+    same kwarg. Run the stream job at a
     NON-default nprobe through its own memory sink, elect with the
     shared screen_top1, and require bit-identity with the batch entry
     at the same nprobe."""

@@ -128,8 +128,8 @@ def test_staleness_dl_drift_alone_trips_rebuild(spark, tmp_path):
 
 
 def test_staleness_reads_stored_index(spark):
-    """Plan pin (the round-13 verdict's 'zero extra documents scans
-    beyond the batch'): the stored side reads the memoized tf
+    """Plan pin (zero extra documents scans beyond the batch): the
+    stored side reads the memoized tf
     checkpoint, and the batch slice is tokenized exactly once — inside
     its own checkpoint build (the knn_index_staleness pattern) — so the
     FINAL plan holds zero parquet scans and fans the audit's five

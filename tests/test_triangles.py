@@ -1,4 +1,4 @@
-"""supplier_triangle_stats invariants (round-15 verdict item 7).
+"""supplier_triangle_stats invariants.
 
 Degree-ordered triangle counting over the shared sparsified supplier
 affinity graph: pinned against a pure-python re-derivation (third

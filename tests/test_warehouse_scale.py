@@ -1,18 +1,19 @@
-"""Scale-path storage tests: partitioned upsert rewrites only touched
-partitions; latest-partition reads are partition-pruned (checked in the
-physical plan, not just the results)."""
+"""Scale-path storage tests: partitioned upsert and bronze re-landing
+rewrite only touched partitions; latest-partition reads are
+partition-pruned (checked in the physical plan, not just the results)."""
 
 from __future__ import annotations
 
 import datetime as _dt
 import glob
+import json
 import os
 
 import pytest
 
 from pyspark.sql import functions as F
 
-from currency_etl_spark.sinks import read_latest_silver, write_silver
+from currency_etl_spark.sinks import read_latest_silver, write_bronze, write_silver
 from currency_etl_spark.transforms import transform_rates
 from currency_etl_spark.sources import read_nbu_json
 from currency_etl_spark.warehouse import ParquetUpsertTable
@@ -73,6 +74,48 @@ def test_partitioned_upsert_preserves_untouched_rows(spark, tmp_path):
     assert after[("EUR", _dt.date(2024, 2, 5))] == 55.55
     changed = {k for k in before if before[k] != after[k]}
     assert changed == {("EUR", _dt.date(2024, 2, 5))}
+
+
+def test_bronze_rewrite_replaces_only_its_partition(spark, tmp_path):
+    """write_bronze lands records as received, one ingest_date partition
+    per landing: re-landing a date replaces that partition's files and
+    leaves every other date's files untouched, and the JSON reads back
+    as the records that came in."""
+    recs = nbu_records(days=4)
+    day1, day2 = recs[:8], recs[8:16]
+    reissued = [dict(r, rate=round(r["rate"] + 1, 2)) for r in day1[:3]]
+    bronze = str(tmp_path / "bronze")
+    by_key = lambda r: (r["exchangedate"], r["cc"])  # noqa: E731
+
+    def land(rows, name, date):
+        raw = write_raw_json(rows, str(tmp_path / "raw" / name))
+        write_bronze(read_nbu_json(spark, raw), bronze, date)
+
+    def files(date):
+        return {
+            p: os.path.getmtime(p)
+            for p in glob.glob(f"{bronze}/ingest_date={date}/*.json")
+        }
+
+    def read_back(date):
+        rows = []
+        for p in files(date):
+            with open(p, encoding="utf-8") as f:
+                rows += [json.loads(line) for line in f if line.strip()]
+        return sorted(rows, key=by_key)
+
+    land(day1, "d1.json", "2024-01-01")
+    land(day2, "d2.json", "2024-01-02")
+    day1_files, day2_files = files("2024-01-01"), files("2024-01-02")
+    assert day1_files and day2_files
+    land(reissued, "d1b.json", "2024-01-01")
+
+    parts = sorted(os.path.basename(p) for p in glob.glob(f"{bronze}/ingest_date=*"))
+    assert parts == ["ingest_date=2024-01-01", "ingest_date=2024-01-02"]
+    assert files("2024-01-02") == day2_files
+    assert not set(files("2024-01-01")) & set(day1_files)
+    assert read_back("2024-01-01") == sorted(reissued, key=by_key)
+    assert read_back("2024-01-02") == sorted(day2, key=by_key)
 
 
 def test_latest_silver_is_partition_pruned(spark, tmp_path):

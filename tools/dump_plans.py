@@ -206,11 +206,12 @@ HEADLINERS = {
         "sort."
     ),
     "orders_bloom_prefilter": (
-        "Bloom-prefiltered join. Check: the getbit/xxhash64 membership "
-        "Filter sits directly on the orders scan branch BELOW the "
-        "BroadcastHashJoin — fact rows drop before any exchange; the "
-        "bitmap is an array literal inside the Filter condition, not a "
-        "join input."
+        "Selective-dimension join, filtered by the planner. Check: the "
+        "filtered customer side is a BroadcastExchange and the orders scan "
+        "feeds the BroadcastHashJoin with no Exchange between them — "
+        "non-matching orders drop in the scan stage. Above the broadcast "
+        "threshold the join would shuffle and Spark's runtime Bloom filter "
+        "would prune the orders side instead."
     ),
     "events_quantile_rollup": (
         "Mergeable quantile rollup. Check: the daily summary aggregate "
