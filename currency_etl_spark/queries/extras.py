@@ -2589,20 +2589,6 @@ ZORDER_RANGE_SPLITS = 32
 RANK_SKEW_CAP = 2_000_000
 
 
-def _adaptive_rank_segments(
-    df: DataFrame, key: str, kmin: int, kmax: int, max_rows: int
-) -> "list[tuple[int, int, int]]":
-    """Skew-adaptive key segmentation: sorted (lo, hi, count) intervals
-    partitioning [kmin, kmax]'s populated keys, each holding ≤max_rows
-    rows or exactly one key (the unsplittable floor). Level 0 cuts the
-    range into ZORDER_RANGE_SPLITS even splits; each level after re-cuts
-    ONLY the oversized intervals (all of them counted in one job), so the
-    interval width shrinks ×splits per level and heavy skew costs
-    O(log_splits(range)) counting jobs. Driver traffic is the per-level
-    interval counts — ≤ splits · |oversized| rows, never data rows."""
-    return _refine_segments(df, key, [(kmin, kmax)], [], max_rows)
-
-
 def _refine_segments(
     df: DataFrame,
     key: str,
@@ -2610,12 +2596,17 @@ def _refine_segments(
     final: "list[tuple[int, int, int]]",
     max_rows: int,
 ) -> "list[tuple[int, int, int]]":
-    """The refinement loop behind _adaptive_rank_segments, callable with
-    an arbitrary starting frontier: ``pending`` intervals get recursively
-    range-split (one counting job per level covering ALL oversized
-    intervals) until every populated interval holds ≤max_rows rows or is
-    one key wide; ``final`` carries intervals already known small enough
-    (e.g. from distributed_global_rank's fused level-0 histogram)."""
+    """Skew-adaptive key segmentation: sorted (lo, hi, count) intervals
+    partitioning the populated keys of the ``pending`` intervals, each
+    holding ≤max_rows rows or exactly one key (the unsplittable floor).
+    Each level cuts every pending interval into ZORDER_RANGE_SPLITS even
+    splits and re-cuts ONLY the oversized ones (all of them counted in
+    one job), so the interval width shrinks ×splits per level and heavy
+    skew costs O(log_splits(range)) counting jobs. ``final`` carries
+    intervals already known small enough (e.g. from
+    distributed_global_rank's fused level-0 histogram). Driver traffic is
+    the per-level interval counts — ≤ splits · |oversized| rows, never
+    data rows."""
     final = list(final)
     while pending:
         widths = [((hi - lo) // ZORDER_RANGE_SPLITS) + 1 for lo, hi in pending]
@@ -2727,7 +2718,7 @@ def _tb_subsegments(
     splittable down to the cap; a string tiebreak passes its 60-bit
     byte-prefix from _tb_order_expr, where prefix-sharing runs may stay
     oversized in one segment — the same accepted floor as equal integer
-    tiebreaks). Same batched recursion as _adaptive_rank_segments: one
+    tiebreaks). Same batched recursion as _refine_segments: one
     counting job per level covers every hot key's pending tiebreak
     intervals, so N hot keys cost O(log) jobs total, not O(N). Returns
     {key value: sorted (tlo, thi, count) intervals partitioning that

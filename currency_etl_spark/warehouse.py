@@ -148,10 +148,9 @@ class ParquetUpsertTable:
             return
         df = self._maybe_cluster(self.read().coalesce(target_files))
         if self.partition_cols:
-            tmp_cols = self.partition_cols
-            df.write.mode("overwrite").partitionBy(*tmp_cols).parquet(self.path + "__compact")
-            import shutil
-
+            df.write.mode("overwrite").partitionBy(*self.partition_cols).parquet(
+                self.path + "__compact"
+            )
             old = self.path + "__pre_compact"
             os.rename(self.path, old)
             os.rename(self.path + "__compact", self.path)

@@ -19,7 +19,7 @@ PACKAGE = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__)
 ALLOWED_SITES = {
     ("__main__.py", "main"): "CLI report rows — reference-scale (analyze.py parity), not a data-plane operator",
     ("corpus_pipeline.py", "build_training_corpus"): "manifest rows per emitted shard — O(shards), not O(docs)",
-    ("currency_queries.py", "run_queries"): "the 11 reference report queries return currency-scale row sets (analyze.py parity)",
+    ("currency_queries.py", "run_queries"): "one row per currency from a single grouped query",
     ("forecast.py", "render_png"): "chart sink renders a days-sized series — matplotlib needs local arrays",
     ("notify.py", "send_report"): "telegram message rows — reference-scale report output",
     ("pipeline.py", "backfill"): "distinct partition-date list — O(days)",

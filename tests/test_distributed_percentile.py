@@ -93,7 +93,7 @@ def test_adaptive_global_rank_matches_plain_row_number(spark):
     from pyspark.sql import functions as F
 
     from currency_etl_spark.queries.extras import (
-        _adaptive_rank_segments,
+        _refine_segments,
         distributed_global_rank,
     )
 
@@ -114,7 +114,7 @@ def test_adaptive_global_rank_matches_plain_row_number(spark):
     )
 
     ext = df.agg(F.min("k"), F.max("k")).collect()[0]
-    segs = _adaptive_rank_segments(df, "k", ext[0], ext[1], 256)
+    segs = _refine_segments(df, "k", [(ext[0], ext[1])], [], 256)
     # every multi-key segment respects the cap; only the 1020 spike's
     # single-key segment may exceed it
     for lo, hi, c in segs:

@@ -8,6 +8,7 @@ from __future__ import annotations
 import datetime as _dt
 import json
 import os
+import re
 
 import pandas as pd
 import pytest
@@ -19,6 +20,7 @@ from currency_etl_spark.reports import structure_report, text_report
 from currency_etl_spark.sources import read_nbu_json
 from currency_etl_spark.transforms import StrictParseError, transform_rates
 from currency_etl_spark.warehouse import ParquetUpsertTable
+from tests.analyze_oracle import assert_same_answers, oracle_queries
 from tests.fixtures import START, nbu_records, rate_for, write_raw_json
 
 TODAY = str(START + _dt.timedelta(days=45))  # pinned "now" for interval queries
@@ -93,6 +95,9 @@ def test_upsert_ignore_mode_first_wins(spark, raw_df, tmp_path):
 # -- the 11 analytics queries vs Python goldens ------------------------------
 
 
+_SCHEMA = "cc string, rate double, txt string, exchangedate date, rate_per_100 double"
+
+
 def _rates_df(spark, days_per_cc: dict[str, int]):
     rows = []
     for cc, n in days_per_cc.items():
@@ -100,9 +105,7 @@ def _rates_df(spark, days_per_cc: dict[str, int]):
             rows.append(
                 (cc, rate_for(cc, d), "x", START + _dt.timedelta(days=d), rate_for(cc, d) * 100)
             )
-    return spark.createDataFrame(
-        rows, "cc string, rate double, txt string, exchangedate date, rate_per_100 double"
-    )
+    return spark.createDataFrame(rows, _SCHEMA)
 
 
 def test_queries_match_python_golden(spark):
@@ -141,6 +144,44 @@ def test_range_year_window_excludes_old(spark):
     in_window = usd[n - 1 - 365 :]
     assert res["usd_range_year"][0]["min_usd"] == min(in_window)
     assert res["usd_range_year"][0]["max_usd"] == max(in_window)
+
+
+def test_queries_match_reference_sql_on_null_and_empty_warehouses(spark):
+    """NULL cc is not a currency, a NULL rate on the newest row makes the
+    last rate and the month change NULL, a NULL date sorts after every
+    day, and an empty warehouse gives NULL/0 rows and empty lists — all as
+    the reference's 11 SQL strings answer them."""
+    d = [START + _dt.timedelta(days=i) for i in range(4)]
+    nulls = [
+        (None, 1.0, "x", d[0], 100.0),
+        ("USD", 2.0, "x", d[0], 200.0),
+        ("USD", None, "x", d[3], None),
+        ("USD", 3.0, "x", None, 300.0),
+        ("EUR", 4.0, "x", d[1], 400.0),
+    ]
+    for rows in (nulls, []):
+        df = spark.createDataFrame(rows, _SCHEMA)
+        assert_same_answers(
+            run_queries(spark, df, today=TODAY), oracle_queries(spark, df, TODAY)
+        )
+
+
+def test_run_queries_is_one_grouped_scan(spark):
+    """After a warm call, answering the 11 questions runs at most 3 Spark
+    jobs (one scan and its shuffle), not one scan per question."""
+    df = _rates_df(spark, {"USD": 40, "EUR": 40, "GBP": 40})
+    run_queries(spark, df, today=TODAY)
+    sc = spark.sparkContext
+    group = "test-run-queries-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        res = run_queries(spark, df, today=TODAY)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(jobs) <= 3, jobs
+    assert res["unique_currencies"] == [{"num_currencies": 3}]
 
 
 # -- forecast (§2.11) --------------------------------------------------------
@@ -186,7 +227,10 @@ def test_report_structure_and_text(spark):
     assert "USD change in 12 days" in txt
     assert "EUR change in 30 days" in txt
     # signed {:+.2f} formatting
-    assert "+".join(txt.split("+")[:1]) or True
+    changes = [ln for ln in txt.splitlines() if " change in " in ln]
+    assert len(changes) == 2
+    for ln in changes:
+        assert re.fullmatch(r"(USD|EUR) change in \d+ days: [+-]\d+\.\d{2} UAH", ln), ln
     assert any(s in txt for s in ("+", "-"))
     json.dumps(rep)  # JSON-safe
 

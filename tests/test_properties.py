@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from currency_etl_spark.currency_queries import run_queries
 from currency_etl_spark.forecast import rolling_avg
 from currency_etl_spark.warehouse import ParquetUpsertTable
+from tests.analyze_oracle import assert_same_answers, oracle_queries
 
 START = _dt.date(2024, 1, 1)
 
@@ -93,6 +94,30 @@ def test_change_month_clamp_any_history_length(spark, n):
     res = run_queries(spark, df, today=str(START + _dt.timedelta(days=n)))
     expect = vals[-1] - vals[len(vals) - min(n, 31)]
     assert res["usd_change_month"][0]["diff_usd"] == pytest.approx(expect)
+
+
+@given(
+    lengths=st.fixed_dictionaries({cc: st.integers(0, 45) for cc in ("USD", "EUR", "GBP")}),
+    cut=st.integers(0, 61),
+    rnd=st.randoms(use_true_random=False),
+)
+@_PROP_SETTINGS
+def test_fused_queries_match_reference_sql(spark, lengths, cut, rnd):
+    """run_queries' one grouped scan gives the 11 reference SQL strings'
+    answers on any warehouse: 0-3 currencies, empty and under-31-day
+    histories with gaps, and a `today` whose 365-day window drops the
+    first `cut` days."""
+    rows = [
+        (cc, v, "x", START + _dt.timedelta(days=day), v * 100)
+        for cc, n in lengths.items()
+        for day in rnd.sample(range(61), n)
+        for v in [rnd.uniform(1, 100)]
+    ]
+    df = spark.createDataFrame(
+        rows, "cc string, rate double, txt string, exchangedate date, rate_per_100 double"
+    )
+    today = str(START + _dt.timedelta(days=365 + cut))
+    assert_same_answers(run_queries(spark, df, today=today), oracle_queries(spark, df, today))
 
 
 def test_multiprobe_dominates_single_probe(spark, sf_dir):
