@@ -1,6 +1,6 @@
 """End-to-end training-corpus pipeline: the north-star use case
-(BASELINE.json) composed from the engine's operator families as ONE lazy
-plan per stage, writing a partitioned corpus + a stats report.
+(BASELINE.json) composed from the engine's operator families as ONE
+written plan: a partitioned corpus, plus the rows left after each stage.
 
 Stages (each a catalog-tested operator family):
   1. quality gate + normalization       (docs_clean_corpus semantics),
@@ -13,19 +13,26 @@ Stages (each a catalog-tested operator family):
   4. language allow-list filter          (lang_id family)
   5. deterministic token-budget sampling (content-hash modulus, stable
      across runs/engines/cluster sizes — docs_deterministic_sample)
-  6. partitioned write (lang) + one-pass profile of the result
+  6. partitioned write (lang); the stage counts and the token total are
+     observed (DataFrame.observe) on the write's own jobs
 
-Scale: stages communicate by DataFrame lineage (no intermediate
-materialization except the clustering fixpoint); every shuffle carries
-digests/ids, never text; the output is lang-partitioned so downstream
+Scale: the build is ONE written plan, with no stage count() and no
+read-back; only the cluster map (dedup_clusters, a memoized fixpoint) is
+materialized ahead of it. The output is lang-partitioned so downstream
 training jobs prune to their language mix.
+
+Observation condition: n_input and n_after_quality are observed in map
+stages below the survivor window's shuffle, so if Spark re-runs a lost
+map stage they can over-count. n_after_dedup, n_after_lang, n_final and
+total_tokens sit in the write's result stage, where Spark merges each
+partition's update once.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from currency_etl_spark.queries.llm_ops import dedup_clusters
@@ -54,8 +61,9 @@ def build_training_corpus(
     # 3-gram ratio (docs_repetition_score semantics); None = no gate
     scrub_pii: bool = False,  # mask emails/long digit runs in the output
 ) -> CorpusStats:
-    docs = table(spark, sf_dir, "documents")
-    n_input = docs.count()
+    seen = {k: Observation() for k in ("input", "quality", "dedup", "lang", "final")}
+    rows = F.count(F.lit(1)).alias("n")
+    docs = table(spark, sf_dir, "documents").observe(seen["input"], rows)
 
     t = F.split(F.col("text"), " ")
     scored = docs.select(
@@ -77,6 +85,7 @@ def build_training_corpus(
             (nsh - F.size(F.array_distinct(shl))) / nsh.cast("double")
         )
         quality = quality.filter(rep <= max_rep_ratio)
+    quality = quality.observe(seen["quality"], rows)
     if scrub_pii:
         from currency_etl_spark.queries.llm_ops import PII_EMAIL, PII_LONGNUM
 
@@ -88,20 +97,20 @@ def build_training_corpus(
                 "<NUM>",
             ),
         )
-    n_quality = quality.count()
 
     # near-dup clusters over the LSH candidate graph; docs absent from the
     # graph are their own cluster. Keep the lowest doc_id per cluster.
     clusters = dedup_clusters(spark, sf_dir)  # (doc_id, cluster_id)
-    labeled = quality.join(clusters, "doc_id", "left").withColumn(
-        "cluster_id", F.coalesce("cluster_id", F.col("doc_id"))
+    deduped = (
+        quality.join(clusters, "doc_id", "left")
+        .withColumn("cluster_id", F.coalesce("cluster_id", F.col("doc_id")))
+        .withColumn("first", F.min("doc_id").over(Window.partitionBy("cluster_id")))
+        .filter(F.col("doc_id") == F.col("first"))
+        .drop("first")
+        .observe(seen["dedup"], rows)
     )
-    keep = labeled.groupBy("cluster_id").agg(F.min("doc_id").alias("doc_id"))
-    deduped = labeled.join(keep.select("doc_id"), "doc_id", "left_semi")
-    n_dedup = deduped.count()
 
-    lang_kept = deduped.filter(F.col("lang").isin(*langs))
-    n_lang = lang_kept.count()
+    lang_kept = deduped.filter(F.col("lang").isin(*langs)).observe(seen["lang"], rows)
 
     sampled = lang_kept.filter(
         (F.conv(F.substring(F.md5("text"), 1, 4), 16, 10).cast("long") % sample_mod) == 0
@@ -109,20 +118,17 @@ def build_training_corpus(
 
     (
         sampled.select("doc_id", "lang", "source", "n_tokens", "text")
+        .observe(seen["final"], rows, F.sum("n_tokens").cast("long").alias("tok"))
         .write.mode("overwrite")
         .partitionBy("lang")
         .parquet(out_path)
     )
-
-    out = spark.read.parquet(out_path)
-    agg = out.agg(
-        F.count("*").alias("n"), F.sum("n_tokens").cast("long").alias("tok")
-    ).collect()[0]
+    n = {k: o.get["n"] for k, o in seen.items()}
     return CorpusStats(
-        n_input=n_input,
-        n_after_quality=n_quality,
-        n_after_dedup=n_dedup,
-        n_after_lang=n_lang,
-        n_final=agg["n"],
-        total_tokens=agg["tok"],
+        n_input=n["input"],
+        n_after_quality=n["quality"],
+        n_after_dedup=n["dedup"],
+        n_after_lang=n["lang"],
+        n_final=n["final"],
+        total_tokens=seen["final"].get["tok"],
     )

@@ -21,8 +21,9 @@ import json
 from pyspark.sql.datasource import DataSource, DataSourceReader
 from pyspark.sql.types import StructType
 
+from currency_etl_spark.sources import NBU_RAW_SCHEMA
+
 NBU_URL = "https://bank.gov.ua/NBUStatService/v1/statdirectory/exchange?json"
-NBU_SCHEMA_DDL = "r030 bigint, txt string, rate double, cc string, exchangedate string"
 
 
 class NBUDataSource(DataSource):
@@ -30,8 +31,8 @@ class NBUDataSource(DataSource):
     def name(cls) -> str:
         return "nbu"
 
-    def schema(self) -> str:
-        return NBU_SCHEMA_DDL
+    def schema(self) -> StructType:
+        return NBU_RAW_SCHEMA
 
     def reader(self, schema: StructType) -> "NBUReader":
         return NBUReader(self.options)

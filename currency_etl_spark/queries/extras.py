@@ -5584,10 +5584,15 @@ EQUIDEPTH_BUCKETS = 10
         "lineitem_price_histogram's equi-WIDTH bins). The boundary "
         "percentiles are computed DISTRIBUTED: ordering by cent-"
         "quantized price (a monotone integer key, so (cents, price) "
-        "order IS price order), distributed_global_rank assigns the "
-        "exact global row number via value-range splits + parallel "
-        "per-split windows, and the <=2(B-1) rows holding the floor/"
-        "ceil ranks of each interpolation position are the only rows "
+        "order IS price order), _values_at_ranks selects the rows at "
+        "the floor/ceil ranks of each interpolation position: a "
+        "collected split histogram routes each rank to its value-range "
+        "split, and one filtered window numbers only the splits that "
+        "hold a wanted rank. Numbering every row with "
+        "distributed_global_rank and filtering the ranks gives the "
+        "same boundaries but measured slower (4 cores, 10 calls each: "
+        "sf0.1 median 0.51 s vs 0.74 s, sf0.01 0.24 s vs 0.27 s). The "
+        "<=2(B-1) selected rows are the only rows "
         "collected — never the value multiset that Spark's builtin "
         "percentile() merges into one single-node map (the prior "
         "form; 3.4 s of its 3.9 s at sf0.1, and an OOM at 100 TB). "

@@ -20,7 +20,7 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from currency_etl_spark.catalog import CATALOG, register
@@ -1334,12 +1334,6 @@ def docs_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _minhash_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared LSH candidate-pair builder (used by dedup_minhash_lsh and
-    dedup_clusters)."""
-    return dedup_minhash_lsh(spark, sf_dir)
-
-
 @register(
     "dedup_clusters",
     oracle=f"""
@@ -1409,7 +1403,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _build_cluster_map(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = _minhash_candidate_pairs(spark, sf_dir)
+    pairs = dedup_minhash_lsh(spark, sf_dir)
     edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")).unionByName(
         pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
     )
@@ -1433,7 +1427,7 @@ def _propagate_min_labels(edges: DataFrame) -> DataFrame:
     from currency_etl_spark.operators.ckpt import chain_checkpoint, swap_checkpoint
 
     edges = swap_checkpoint("cc_edges", edges)
-    # labels₀ is DERIVED, not checkpointed (r17): it is read only by
+    # labels₀ is DERIVED, not checkpointed: it is read only by
     # iteration 1's plan (join side + union side — two executions of a
     # distinct over the already-checkpointed graph-sized edge relation),
     # so materializing it bought lineage truncation nobody needs and
@@ -1446,14 +1440,11 @@ def _propagate_min_labels(edges: DataFrame) -> DataFrame:
     )
     # Min-label propagation until fixpoint (diameter-bounded; typically 2-4).
     # One join + union + min-agg per iteration (message passing), not the
-    # two-join least/coalesce form. Convergence check rides on monotonicity:
+    # two-join least/coalesce form. Convergence rides on monotonicity:
     # labels only ever DECREASE, so sum(cluster_id) is strictly decreasing
-    # until the fixpoint — a 1-row agg over the just-checkpointed labels
-    # replaces a join-based changed-row count (one cheap action, no join).
-    # The check compares CONSECUTIVE iteration sums (r17): the old
-    # labels₀ pre-sum collect ran one extra 1-row job per build and only
-    # ever saved an iteration on an edgeless graph (candidate pairs
-    # empty), where the iterations are free anyway.
+    # until the fixpoint. The sum is observed on the iteration's own
+    # checkpoint job (it sits in that job's result stage, so each
+    # partition's update merges once): no extra action per iteration.
     # Each iteration checkpoints — without lineage truncation, iteration
     # k replays all k-1 predecessors and the loop goes quadratic.
     # chain_checkpoint releases iteration k-1's blocks only AFTER k is
@@ -1464,17 +1455,20 @@ def _propagate_min_labels(edges: DataFrame) -> DataFrame:
         msgs = edges.join(labels, edges.dst == labels.node).select(
             edges.src.alias("node"), "cluster_id"
         )
+        seen = Observation()
         labels = chain_checkpoint(
             "cc_labels",
             msgs.unionByName(labels.select("node", "cluster_id"))
             .groupBy("node")
-            .agg(F.min("cluster_id").alias("cluster_id")),
+            .agg(F.min("cluster_id").alias("cluster_id"))
+            .observe(seen, F.sum("cluster_id").alias("s")),
         )
-        cur_sum = labels.agg(F.sum("cluster_id")).collect()[0][0]
+        cur_sum = seen.get["s"]
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
-    return labels.select(F.col("node").alias("doc_id"), "cluster_id").orderBy("doc_id")
+    # row order is left to the reader: every consumer joins or sorts
+    return labels.select(F.col("node").alias("doc_id"), "cluster_id")
 
 
 @register(

@@ -159,11 +159,3 @@ def read_nbu_json(spark: SparkSession, path: str) -> DataFrame:
     replaces the reference's per-file Python loop (SURVEY §2.1 S2/S6).
     """
     return spark.read.schema(NBU_RAW_SCHEMA).option("multiLine", "true").json(path)
-
-
-def latest_partition(df: DataFrame, part_col: str = "ingest_date") -> DataFrame:
-    """Latest-partition selection via max() + filter — Catalyst turns this
-    into partition pruning on a Hive-layout table, replacing the reference's
-    lexicographic glob sort (src/transform.py:12-15; SURVEY §2.1 S3)."""
-    latest = df.select(F.max(part_col).alias("p")).collect()[0]["p"]
-    return df.filter(F.col(part_col) == F.lit(latest))

@@ -18,13 +18,11 @@ PACKAGE = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__)
 #: (file relative to the package, enclosing function) → why it's bounded.
 ALLOWED_SITES = {
     ("__main__.py", "main"): "CLI report rows — reference-scale (analyze.py parity), not a data-plane operator",
-    ("corpus_pipeline.py", "build_training_corpus"): "manifest rows per emitted shard — O(shards), not O(docs)",
     ("currency_queries.py", "run_queries"): "one row per currency from a single grouped query",
     ("forecast.py", "render_png"): "chart sink renders a days-sized series — matplotlib needs local arrays",
     ("notify.py", "send_report"): "telegram message rows — reference-scale report output",
-    ("pipeline.py", "backfill"): "distinct partition-date list — O(days)",
+    ("pipeline.py", "backfill"): "distinct input-file list — O(files), one per ingest day",
     ("sinks.py", "read_latest_silver"): "1-row max(partition) lookup",
-    ("sources.py", "latest_partition"): "partition directory list — O(partitions)",
     ("warehouse.py", "merge_upsert"): "distinct touched-partition list for pruned dynamic overwrite — O(partitions)",
     ("streaming/jobs.py", "_staged_late_dir"): "fixture staging for the late-replay landing dir (test scaffolding, built once per corpus version), not the streaming operator",
     ("operators/multimodal.py", "size_balanced"): "per-partition byte totals for bin packing — O(partitions)",
@@ -34,7 +32,6 @@ ALLOWED_SITES = {
     ("queries/extras.py", "_refine_segments"): "per-level interval counts — ≤ splits·|oversized intervals| rows, never data rows",
     ("queries/extras.py", "distributed_global_rank"): "≤130-row log2-magnitude histogram (count + extrema per bucket) — the fused single driver job",
     ("queries/extras.py", "_tb_subsegments"): "per-hot-key tiebreak extrema (≤ |hot keys| rows) + per-level interval counts — ≤ splits·|oversized intervals| rows, never data rows",
-    ("queries/llm_ops.py", "_propagate_min_labels"): "connected-components convergence check — 1-row changed-count per iteration",
     ("queries/training.py", "_bpe_train_build"): "1-row argmax merge winner per step (≤ BPE_MERGES rows total) — the scalar iterative-training decision (bpe_merge_loop body, shared with docs_bpe_encode); BFS convergence-check precedent",
 }
 
