@@ -79,11 +79,24 @@ def build_training_corpus(
     if max_rep_ratio is not None:
         from currency_etl_spark.queries.llm_ops import _shingles
 
-        shl = _shingles(F.split(F.col("text"), " "))
-        nsh = F.size(shl)
-        rep = F.when(nsh == 0, F.lit(0.0)).otherwise(
-            (nsh - F.size(F.array_distinct(shl))) / nsh.cast("double")
-        )
+        def let(value, body):
+            # bind ``value`` to a lambda variable: the optimizer never
+            # inlines it into ``body``, and expressions inside a lambda
+            # escape common-subexpression elimination, so each reference
+            # would otherwise recompute it per row
+            return F.transform(F.array(value), body)[0]
+
+        def rep_ratio(shl):
+            nsh = F.size(shl)
+            return F.when(nsh == 0, F.lit(0.0)).otherwise(
+                (nsh - F.size(F.array_distinct(shl))) / nsh.cast("double")
+            )
+
+        # the token array and the shingle array are each built once per
+        # document: passed as plain expressions, split(text) lands inside
+        # every element_at of the shingle lambda (three tokenizations per
+        # shingle) and the shingles are rebuilt for each size()
+        rep = let(F.split(F.col("text"), " "), lambda t: let(_shingles(t), rep_ratio))
         quality = quality.filter(rep <= max_rep_ratio)
     quality = quality.observe(seen["quality"], rows)
     if scrub_pii:

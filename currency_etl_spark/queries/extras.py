@@ -347,11 +347,11 @@ def approx_distinct_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # then meet in a tiny per-group broadcast join.
     #
     # The users pass dedups (type, user) FIRST, then counts and sketches
-    # the deduped relation (r17): countDistinct's rewrite otherwise keys
-    # the PARTIAL aggregate by (type, user) and drags the co-grouped
+    # the deduped relation: countDistinct's rewrite otherwise keys the
+    # PARTIAL aggregate by (type, user) and drags the co-grouped
     # approx_count_distinct's ~400-column HLL buffer through every one
-    # of those groups (plan audit: a 412-column intermediate row per
-    # (type, user) — measured 1.53 → 0.85 s standalone min-of-3). The
+    # of those groups (a 412-column intermediate row per (type, user) in
+    # the plan — measured 1.53 → 0.85 s standalone min-of-3). The
     # sketch is duplicate-insensitive (each register keeps the max over
     # hashed values, and duplicates hash identically), so HLL over the
     # deduped relation is bit-identical to HLL over the raw stream.
@@ -583,15 +583,15 @@ def q19_disjunctive_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "global window the oracle spells (its plain ntile/lag/lead is "
         "the semantic spec). The distributed form: the exact global rank "
         "comes from distributed_global_rank on the 1e2-quantized price "
-        "(injective on distinct prices, so the split key orders "
-        "identically to the double; skew-adaptive default, so every "
-        "rank task is cap-bounded), the decile is NTILE's closed form "
+        "(injective on distinct prices, so the key orders identically "
+        "to the double; a range-partitioned sort numbered by the "
+        "distributed sequence id), the decile is NTILE's closed form "
         "(n div 10 per tile, first n mod 10 tiles one larger), and "
-        "lag/lead need no window at all: the rank is exact and DENSE, "
-        "so the previous row IS rank-1 and the next IS rank+1 — two "
-        "rank-keyed equi-joins on the checkpointed ranked relation, "
-        "hash-parallel at any scale. No fixed split count anywhere; at "
-        "100 TB every |orders|-sized stage stays parallel."
+        "lag/lead need no per-row window or join: the rank is exact and "
+        "DENSE, so a decile's summed steps telescope to its last price "
+        "minus the previous decile's last price (min_by/max_by over the "
+        "rank), and only the decile holding the global last rank lacks "
+        "a lead. At 100 TB every |orders|-sized stage stays parallel."
     ),
 )
 def order_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -608,11 +608,8 @@ def order_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round6(last_price_d - last_price_{d-1}) (decile 1: last - first,
     # its first step is COALESCE'd to 0), and count(lead(...)) equals
     # n_orders minus one for the decile holding the global last rank.
-    # One |orders|-sized pass (rank window + min_by/max_by aggregate),
-    # then a ≤10-row finishing window — the previous shape paid THREE
-    # window computations (column pruning de-dedups the self-joins'
-    # exchange subtrees, so ReusedExchange never fired) plus an eager
-    # checkpoint round-trip.
+    # One |orders|-sized pass (the rank's sort + a min_by/max_by
+    # aggregate), then a ≤10-row finishing window.
     ranked = distributed_global_rank(keyed, "__k", "o_orderkey", with_total=True)
     t = ranked.select(
         "o_totalprice",
@@ -866,9 +863,9 @@ def _rfm_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc=(
         "RFM customer segmentation: recency anchored to max(o_orderdate) "
         "(no wall clock), frequency, exact-decimal monetary; quartile "
-        "scores via distributed_ntile — value-range splits + parallel "
-        "per-split windows + the closed-form NTILE bucket, never an "
-        "unpartitioned ORDER BY window, so each score stays parallel at "
+        "scores via distributed_ntile — a range-partitioned sort, the "
+        "distributed sequence id and the closed-form NTILE bucket, never "
+        "an unpartitioned ORDER BY window, so each score stays parallel at "
         "a billion customers (the oracle's plain ntile is the semantic "
         "spec the distributed form must and does reproduce). Monetary "
         "ranks on its exact 1e4-quantized int64 twin (the decimal sum is "
@@ -879,13 +876,13 @@ def _rfm_base(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def customer_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialized customers-sized base, shared with customers_rfm_segments:
-    # three chained ntile helpers each carry extrema/count/offset
-    # side-aggregates that would otherwise re-execute the orders rollup
-    # lineage multiply (measured 5.3 s -> ~1 s at sf0.1)
+    # each of the three ntile helpers reads its input for the range
+    # sample, the sort and the row count, which would otherwise
+    # re-execute the orders rollup lineage each time
     base = _rfm_base(spark, sf_dir)
     # three INDEPENDENT slim score relations off the checkpoint (chaining
-    # the helpers would nest their side-aggregates — each would re-run
-    # the previous helper's window), joined back on the customer key
+    # the helpers would nest them — each would re-run the previous
+    # helper's sort), joined back on the customer key
     r = distributed_ntile(
         base.select("o_custkey", "recency_days"), 4, F.col("recency_days"), "o_custkey", "r_score"
     ).select("o_custkey", "r_score")
@@ -1442,7 +1439,8 @@ SKEW_BUCKETS = 64
         "GROUP BY when not. Both plans produce bit-identical per-type "
         "decimal-exact totals — which is exactly what the plain-GROUP-BY "
         "oracle asserts — and the decision inputs travel in the output "
-        "(top_key_share round 6, salted flag) so the choice itself is "
+        "(top_key_share rounded to 6 decimals, salted flag) so the "
+        "choice itself is "
         "graded. event_type is the graded key: 5 values over the corpus "
         f"(top share ~0.2 >> 1/{SKEW_BUCKETS}) — the classic "
         "low-cardinality hot-key aggregation where phase-1 salting "
@@ -1893,7 +1891,7 @@ def events_mv_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 def events_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NULL-ts rows are excluded in BOTH engines: Spark's groupBy would
     # otherwise create a d=NULL daily group that the oracle's
-    # count(DISTINCT date) skips (the round-4 class of silent corpus drift)
+    # count(DISTINCT date) skips — a silent row-count drift between them
     e = (
         table(spark, sf_dir, "events")
         .filter(F.col("ts").isNotNull())
@@ -2234,13 +2232,12 @@ def orders_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
 def events_sliding_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "events")
     pairs = e.select(F.to_date("ts").alias("d"), "user_id").distinct()
-    # r17 (guide §1.2/§2.4): the previous form derived a `days` dimension
-    # from pairs (re-executing the whole events-scan + distinct subtree —
-    # Catalyst does not dedupe common subplans) and semi-joined the
-    # exploded fanout against it to drop window-end days with no data.
-    # That filter is equivalent to HAVING dau >= 1 (a day exists in the
-    # data iff some user has a pair exactly on it), so the days subtree
-    # and the semi-join are gone. The two countDistincts (which planned
+    # One events scan + distinct: a separate `days` dimension derived
+    # from pairs would re-execute the whole scan + distinct subtree
+    # (Catalyst does not dedupe common subplans), and the semi-join it
+    # fed to drop window-end days with no data is HAVING dau >= 1 (a
+    # day exists in the data iff some user has a pair exactly on it).
+    # The two countDistincts (which planned
     # as an Expand, doubling every exploded row into the shuffle) become
     # an explicit two-level aggregate: dedup (day, user) first — carrying
     # a 0/1 "active on the window-end day itself" flag, duplicate-safe
@@ -2574,470 +2571,48 @@ def events_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: Z-order audit knobs: interleaved bits per dimension, rows per simulated
-#: file, and the number of deterministic value-range splits used for the
-#: distributed global rank.
+#: file, and the number of deterministic value-range splits per level of
+#: the percentile selection (_values_at_ranks).
 ZORDER_BITS = 16
 ZORDER_BUCKET_ROWS = 256
 ZORDER_RANGE_SPLITS = 32
-
-#: Default per-task row bound for distributed_global_rank/distributed_ntile:
-#: the skew-adaptive path splits any key range — and any single hot key's
-#: tie run, via its integer tiebreak — until no rank task sorts more rows
-#: than this. 2M (key, tiebreak) pairs ≈ tens of MB of sort input per task
-#: at cluster scale; every test-SF relation sits far below it, so locally
-#: the segmentation ends at its one fused histogram job.
-RANK_SKEW_CAP = 2_000_000
-
-
-def _refine_segments(
-    df: DataFrame,
-    key: str,
-    pending: "list[tuple[int, int]]",
-    final: "list[tuple[int, int, int]]",
-    max_rows: int,
-) -> "list[tuple[int, int, int]]":
-    """Skew-adaptive key segmentation: sorted (lo, hi, count) intervals
-    partitioning the populated keys of the ``pending`` intervals, each
-    holding ≤max_rows rows or exactly one key (the unsplittable floor).
-    Each level cuts every pending interval into ZORDER_RANGE_SPLITS even
-    splits and re-cuts ONLY the oversized ones (all of them counted in
-    one job), so the interval width shrinks ×splits per level and heavy
-    skew costs O(log_splits(range)) counting jobs. ``final`` carries
-    intervals already known small enough (e.g. from
-    distributed_global_rank's fused level-0 histogram). Driver traffic is
-    the per-level interval counts — ≤ splits · |oversized| rows, never
-    data rows."""
-    final = list(final)
-    while pending:
-        widths = [((hi - lo) // ZORDER_RANGE_SPLITS) + 1 for lo, hi in pending]
-        seg = None
-        sub = None
-        for i, ((lo, hi), w) in enumerate(zip(pending, widths)):
-            in_seg = (F.col(key) >= lo) & (F.col(key) <= hi)
-            seg = F.when(in_seg, i) if seg is None else seg.when(in_seg, i)
-            # integer div — float division would lose exactness on wide keys
-            s = F.expr(f"({key} - {lo}) div {w}")
-            sub = F.when(in_seg, s) if sub is None else sub.when(in_seg, s)
-        counts = (
-            df.select(seg.alias("__seg"), sub.alias("__sub"))
-            .filter(F.col("__seg").isNotNull())
-            .groupBy("__seg", "__sub")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .collect()
-        )
-        by_seg: dict = {}
-        for r in counts:
-            by_seg.setdefault(r["__seg"], []).append((r["__sub"], r["__n"]))
-        nxt = []
-        for i, ((lo, hi), w) in enumerate(zip(pending, widths)):
-            for s, c in sorted(by_seg.get(i, [])):
-                slo = lo + s * w
-                shi = min(hi, slo + w - 1)
-                if c <= max_rows or slo == shi:
-                    final.append((slo, shi, c))
-                else:
-                    nxt.append((slo, shi))
-        pending = nxt
-    return sorted(final)
-
-
-#: int64 sentinels marking "no tiebreak restriction" on a rank segment.
-_TB_MIN, _TB_MAX = -(2**63), 2**63 - 1
-
-
-def _log_bucket_sql(key: str) -> str:
-    """SQL for the log2-magnitude bucket of int64 ``key`` — a monotone
-    (order-preserving, hence range-disjoint) map of the full int64 domain
-    onto ≤130 bucket ids, computable per-row with no data extrema:
-    non-negative keys take 64 + bit-length (65..128), negative keys take
-    64 − bit-length of −(key+1) (1..64; the +1 shift keeps INT64_MIN in
-    range), NULL keys map to NULL. distributed_global_rank groups on this
-    to fuse extrema + null-count + level-0 segment counts into ONE job,
-    and reuses it as the broadcast hash-join key onto the segment table."""
-    return (
-        f"CASE WHEN {key} IS NULL THEN NULL "
-        f"WHEN {key} >= 0 THEN 64 + length(bin({key})) "
-        f"ELSE 64 - length(bin(-({key} + 1))) END"
-    )
-
-
-def _log_bucket(v: int) -> int:
-    """Driver-side twin of _log_bucket_sql (bin(0) = '0' has length 1,
-    hence the max(1, bit_length))."""
-    if v >= 0:
-        return 64 + max(1, v.bit_length())
-    return 64 - max(1, (-(v + 1)).bit_length())
-
-
-def _is_integral(dt) -> bool:
-    from pyspark.sql import types as T
-
-    return isinstance(dt, (T.LongType, T.IntegerType, T.ShortType, T.ByteType))
-
-
-def _tb_order_expr(df: DataFrame, tiebreak: str) -> "str | None":
-    """SQL expression producing an int64 MONOTONE in the tiebreak's sort
-    order — the range-splittable image _tb_subsegments divides on.
-    Integral tiebreaks split on themselves. STRING tiebreaks (r9, round-8
-    verdict item 6 — previously a documented single-task floor) split on
-    their 60-bit byte-prefix value: the first 15 hex digits of the UTF-8
-    encoding, RIGHT-PADDED to 15 before conv — padding is what keeps the
-    mapping order-preserving for short strings ('az' must stay below 'b':
-    0x617A00… < 0x620000…; unpadded, 0x617A > 0x62). Spark compares
-    strings bytewise, so byte-prefix order IS string order; ties ON the
-    prefix (strings sharing 7.5 leading bytes) simply land in one
-    segment, where the in-segment window orders by the real column. NULL
-    maps to NULL (hex/encode propagate), so the NULL-tiebreak guard in
-    _tb_subsegments is unaffected. Returns None for any other type — the
-    documented fallback floor, now only non-integral-non-string."""
-    from pyspark.sql import types as T
-
-    dt = df.schema[tiebreak].dataType
-    if _is_integral(dt):
-        return tiebreak
-    if isinstance(dt, T.StringType):
-        return (
-            f"CAST(conv(rpad(substring(hex(encode({tiebreak}, 'UTF-8')), 1, 15),"
-            f" 15, '0'), 16, 10) AS BIGINT)"
-        )
-    return None
-
-
-def _tb_subsegments(
-    df: DataFrame,
-    key: str,
-    tiebreak: str,
-    hot_keys: "list",
-    max_rows: int,
-    order_expr: "str | None" = None,
-) -> "dict[int, list[tuple[int, int, int]]]":
-    """Second-level segmentation for hot keys: a single-key run larger
-    than max_rows cannot be divided on the key, but its ties CAN be
-    range-split on the tiebreak's int64 ORDER IMAGE (``order_expr``,
-    default the tiebreak itself — an integer row id is unique, so always
-    splittable down to the cap; a string tiebreak passes its 60-bit
-    byte-prefix from _tb_order_expr, where prefix-sharing runs may stay
-    oversized in one segment — the same accepted floor as equal integer
-    tiebreaks). Same batched recursion as _refine_segments: one
-    counting job per level covers every hot key's pending tiebreak
-    intervals, so N hot keys cost O(log) jobs total, not O(N). Returns
-    {key value: sorted (tlo, thi, count) intervals partitioning that
-    key's order-image range}.
-
-    ``None`` in hot_keys means the NULL-key block (r8, verdict item 4):
-    its rows match ``key IS NULL`` instead of an equality, so a
-    null-heavy relation no longer funnels through one window task.
-
-    Keys whose ties include NULL tiebreaks are omitted (caller keeps the
-    unsplittable-floor segment): a NULL never satisfies a between-range
-    join, and silently dropping rows is the exact bug class the NULL-key
-    sentinel split guards against on the key side."""
-
-    tbx = order_expr or tiebreak
-
-    def key_pred(k):
-        return F.col(key).isNull() if k is None else (F.col(key) == k)
-
-    sel = None
-    for k in hot_keys:
-        sel = key_pred(k) if sel is None else (sel | key_pred(k))
-    ext = (
-        df.filter(sel)
-        .groupBy(key)
-        .agg(
-            F.min(F.expr(tbx)).alias("tlo"),
-            F.max(F.expr(tbx)).alias("thi"),
-            F.count(F.when(F.col(tiebreak).isNull(), F.lit(1))).alias("tnull"),
-        )
-        .collect()
-    )
-    pending = [
-        (None if r[key] is None else int(r[key]), int(r["tlo"]), int(r["thi"]))
-        for r in ext
-        if not r["tnull"] and r["tlo"] is not None
-    ]
-    out: dict = {}
-    while pending:
-        # overflow armor (r8): the per-row split expression below computes
-        # `tiebreak - lo` in int64 — an interval spanning both int64 ends
-        # (hi - lo ≥ 2^63) would overflow it. Halve such intervals at the
-        # sign boundary driver-side first: each half's span then fits, and
-        # every recursion sub-interval keeps its half's sign. (The KEY side
-        # needs no such armor — its refinement intervals nest inside one
-        # log-bucket, same sign by construction.)
-        safe = []
-        for k, lo, hi in pending:
-            if hi - lo >= 2**63:
-                safe.append((k, lo, -1))
-                safe.append((k, 0, hi))
-            else:
-                safe.append((k, lo, hi))
-        pending = safe
-        widths = [((hi - lo) // ZORDER_RANGE_SPLITS) + 1 for _, lo, hi in pending]
-        seg = None
-        sub = None
-        for i, ((k, lo, hi), w) in enumerate(zip(pending, widths)):
-            in_seg = (
-                key_pred(k)
-                & (F.expr(tbx) >= lo)
-                & (F.expr(tbx) <= hi)
-            )
-            seg = F.when(in_seg, i) if seg is None else seg.when(in_seg, i)
-            s = F.expr(f"(({tbx}) - ({lo})) div {w}")
-            sub = F.when(in_seg, s) if sub is None else sub.when(in_seg, s)
-        counts = (
-            df.select(seg.alias("__seg"), sub.alias("__sub"))
-            .filter(F.col("__seg").isNotNull())
-            .groupBy("__seg", "__sub")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .collect()
-        )
-        by_seg: dict = {}
-        for r in counts:
-            by_seg.setdefault(r["__seg"], []).append((r["__sub"], r["__n"]))
-        nxt = []
-        for i, ((k, lo, hi), w) in enumerate(zip(pending, widths)):
-            for s, c in sorted(by_seg.get(i, [])):
-                slo = lo + s * w
-                shi = min(hi, slo + w - 1)
-                if c <= max_rows or slo == shi:
-                    out.setdefault(k, []).append((slo, shi, c))
-                else:
-                    nxt.append((k, slo, shi))
-        pending = nxt
-    return {k: sorted(v) for k, v in out.items()}
-
-
-def _ranked_null_block(
-    df: DataFrame, key: str, tiebreak: str, nnull: int, max_rows: int
-) -> DataFrame:
-    """Rank the NULL-key rows (they rank FIRST, ordered by the tiebreak).
-    When the block exceeds the cap and the tiebreak is splittable
-    (integral, or — since r9 — string via its 60-bit byte-prefix order
-    image), it range-splits on the tiebreak through the same
-    _tb_subsegments device as hot non-null keys (r8, verdict item 4) —
-    rank = segment offset + per-segment row_number, each window task
-    cap-bounded — instead of one partitionBy(lit(0)) task, which was the
-    rank path's last single-task floor. Remaining floors: a NULL-laden
-    or non-integral-non-string tiebreak keeps the single-task fallback
-    (documented; a NULL tiebreak never satisfies the between-range
-    join), and >cap rows sharing one 7.5-byte string prefix stay in one
-    segment (the string analog of equal integer tiebreaks)."""
-    from pyspark.sql import Window as W
-
-    nulls = df.filter(F.col(key).isNull())
-    tb = None
-    tbx = _tb_order_expr(df, tiebreak)
-    if nnull > max_rows and tbx is not None:
-        tb = _tb_subsegments(nulls, key, tiebreak, [None], max_rows, order_expr=tbx).get(
-            None
-        )
-    if not tb:
-        return nulls.withColumn(
-            "rank",
-            F.row_number().over(W.partitionBy(F.lit(0)).orderBy(tiebreak)).cast("long"),
-        )
-    rows, off = [], 0
-    for tlo, thi, tc in tb:
-        rows.append((tlo, thi, off))
-        off += tc
-    segs = df.sparkSession.createDataFrame(rows, "__ntlo long, __nthi long, __noff long")
-    # broadcast range join onto the ≤(nnull/cap · splits)-row segment
-    # table; each segment's window sorts ≤max_rows rows in parallel
-    return (
-        nulls.join(
-            F.broadcast(segs),
-            (F.expr(tbx) >= F.col("__ntlo")) & (F.expr(tbx) <= F.col("__nthi")),
-        )
-        .withColumn(
-            "rank",
-            (
-                F.col("__noff")
-                + F.row_number().over(W.partitionBy("__ntlo").orderBy(tiebreak))
-            ).cast("long"),
-        )
-        .drop("__ntlo", "__nthi", "__noff")
-    )
 
 
 def distributed_global_rank(
     df: DataFrame,
     key: str,
     tiebreak: str,
-    max_split_rows: int = RANK_SKEW_CAP,
     with_total: bool = False,
 ) -> DataFrame:
     """Exact global ROW_NUMBER over (key, tiebreak) without a single-task
-    global window. Returns df + a ``rank`` column.
+    global window. Returns df + a ``rank`` column (long, 1-based).
 
-    NULL keys rank FIRST (Spark's ASC default), ordered by tiebreak, as
-    their own block, so every input row appears in the output exactly
-    once. ``with_total=True`` additionally attaches ``__ntot`` (the total
-    row count, identical on every row) as a literal the driver already
-    knows — callers that need n (NTILE's closed form) read it instead of
-    re-scanning the input.
+    One plan: ``orderBy(key, tiebreak)`` is Spark's range-partitioned
+    sort — its RangePartitioner samples the composite (key, tiebreak)
+    order, so a hot key's tie run spreads over several range partitions
+    by its tiebreak, and NULL keys rank FIRST (ASC NULLS FIRST) ordered
+    by the tiebreak, like any other key. The distributed sequence id
+    then numbers the sorted rows by partition index and position
+    (``AttachDistributedSequenceExec``: zipWithIndex over the sorted
+    RDD). The sampled partition bounds decide only which task sorts a
+    row, never its rank, so re-runs agree with the oracle's ROW_NUMBER
+    wherever (key, tiebreak) is unique. Besides the query's own job this
+    costs the range sample's job and one job counting the sorted
+    partitions, which the sequence id caches for that count and releases
+    when the query ends. ``with_total=True`` also
+    attaches ``__ntot`` (the total row count, identical on every row)
+    from a broadcast one-row count in the same plan — callers that need
+    n (NTILE's closed form) read it instead of a driver round-trip."""
+    # the internal function pandas-on-Spark's 'distributed-sequence'
+    # default index attaches (InternalFrame.attach_distributed_sequence_column)
+    from pyspark.sql.internal import InternalFunction
 
-    The deterministic twin of repartitionByRange + zipWithIndex: segment
-    bounds come from exact data extrema and integer arithmetic, never
-    from Spark's sampling RangePartitioner (whose boundaries — and
-    therefore any downstream fixed-size bucketing — vary run to run), so
-    re-runs and the oracle agree bit-for-bit.
-
-    ONE fused driver job — a ≤130-group log2-magnitude histogram
-    (_log_bucket_sql) carrying count + exact min/max per bucket — yields
-    the null count, the key extrema, AND the level-0 segmentation at
-    once; only buckets over the cap pay further counting jobs
-    (_refine_segments). Offsets are plain prefix sums of the
-    already-known segment counts, and the plan is a broadcast HASH join
-    on the bucket id (range bounds as residual predicates) onto the tiny
-    segment relation plus a parallel per-segment window. No task sorts
-    more than ``max_split_rows``: key-range splits first, and a
-    single-key run larger than the cap (a hot small-domain key — e.g.
-    frequency=1 holding half the customers) re-splits on its TIEBREAK's
-    int64 order image via _tb_subsegments (the integer tiebreak itself,
-    or a string tiebreak's 60-bit byte-prefix); the NULL-key block
-    (which ranks first) splits through the same device when it exceeds
-    the cap (_ranked_null_block). Remaining unsplittable floors, each
-    documented there: equal (key, tiebreak) pairs, shared 7.5-byte
-    string prefixes, non-integral-non-string tiebreaks, and
-    NULL-tiebreak ties. At test SFs every relation is below the default
-    cap, so the histogram job is the only driver job;
-    tests/test_distributed_percentile.py forces low caps to exercise the
-    refinement."""
-    from pyspark.sql import Window as W
-
-    hist = (
-        df.groupBy(F.expr(_log_bucket_sql(key)).alias("__b"))
-        .agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.min(key).alias("__lo"),
-            F.max(key).alias("__hi"),
-        )
-        .collect()
+    out = df.orderBy(key, tiebreak).select(
+        "*", (InternalFunction.distributed_sequence_id() + 1).alias("rank")
     )
-    nnull = sum(int(r["__n"]) for r in hist if r["__b"] is None)
-    buckets = sorted(
-        (int(r["__lo"]), int(r["__hi"]), int(r["__n"]))
-        for r in hist
-        if r["__b"] is not None
-    )
-    null_part = _ranked_null_block(df, key, tiebreak, nnull, max_split_rows)
-    if not buckets:
-        # every row's key is NULL (or df is empty): the null segment IS
-        # the relation
-        out = null_part
-        return (
-            out.withColumn("__ntot", F.lit(nnull).cast("long"))
-            if with_total
-            else out
-        )
-    nonnull = df.filter(F.col(key).isNotNull())
-    total = sum(c for _, _, c in buckets)
-    if all(c <= max_split_rows for _, _, c in buckets):
-        # the histogram just PROVED every log-bucket fits one task's sort
-        # cap — no segment table needed at all: the bucket id is already
-        # a per-row expression and the bucket offsets are already known
-        # driver-side (prefix sums of the histogram counts), so rank =
-        # offset[bucket] + per-bucket row_number. Zero joins, and the
-        # window stays PARTITIONED (by __rank_bucket — up to ~130
-        # parallel cap-bounded sort tasks, never a single-task global
-        # sort); a bucket over the cap takes the segmented path below.
-        whens, off = [], nnull
-        for lo, _hi, c in buckets:
-            whens.append(f"WHEN {_log_bucket(lo)} THEN {off}L")
-            off += c
-        off_case = f"CASE __rank_bucket {' '.join(whens)} END"
-        out = (
-            nonnull.withColumn(
-                "__rank_bucket", F.expr(_log_bucket_sql(key)).cast("long")
-            )
-            .withColumn(
-                "rank",
-                (
-                    F.expr(off_case)
-                    + F.row_number().over(
-                        W.partitionBy("__rank_bucket").orderBy(key, tiebreak)
-                    )
-                ).cast("long"),
-            )
-            .drop("__rank_bucket")
-        )
-        if nnull:
-            out = null_part.unionByName(out)
-        return (
-            out.withColumn("__ntot", F.lit(nnull + total).cast("long"))
-            if with_total
-            else out
-        )
-    ok = [(lo, hi, c) for lo, hi, c in buckets if c <= max_split_rows or lo == hi]
-    oversized = [(lo, hi) for lo, hi, c in buckets if c > max_split_rows and lo != hi]
-    segs = _refine_segments(nonnull, key, oversized, ok, max_split_rows)
-    hot = [lo for lo, hi, c in segs if lo == hi and c > max_split_rows]
-    tbsegs: dict = {}
-    tbx = _tb_order_expr(nonnull, tiebreak)
-    if hot and tbx is not None:
-        tbsegs = _tb_subsegments(nonnull, key, tiebreak, hot, max_split_rows, order_expr=tbx)
-    # refinement only ever SUBDIVIDES level-0 buckets, so every segment
-    # nests inside exactly one bucket — the bucket id is a pure
-    # arithmetic function of the key on both sides, which turns the
-    # segment join into a broadcast HASH join on __pid0 with the range
-    # bounds as residual predicates. Each row then compares only against
-    # its own bucket's segments instead of the whole segment relation
-    # (a nested-loop range join is linear in |segments| per row — the
-    # scale trap when |rows|/cap is large).
-    rows, off, sid = [], nnull, 0  # non-null ranks start after the null block
-    for lo, hi, c in segs:
-        pid0 = _log_bucket(lo)
-        if lo == hi and lo in tbsegs:
-            # hot key: its tie run splits into tiebreak-bounded segments,
-            # ordered by tlo — within one key, (key, tiebreak) order IS
-            # tiebreak order, so the prefix-sum offsets stay exact
-            for tlo, thi, tc in tbsegs[lo]:
-                rows.append((pid0, lo, hi, tlo, thi, sid, off))
-                off += tc
-                sid += 1
-        else:
-            rows.append((pid0, lo, hi, _TB_MIN, _TB_MAX, sid, off))
-            off += c
-            sid += 1
-    segs_df = df.sparkSession.createDataFrame(
-        rows,
-        "__pid0 long, __lo long, __hi long, __tlo long, __thi long, "
-        "__sid long, __off long",
-    )
-    keyed = nonnull.withColumn("__pid0", F.expr(_log_bucket_sql(key)).cast("long"))
-    cond = (
-        (keyed["__pid0"] == segs_df["__pid0"])
-        & (F.col(key) >= F.col("__lo"))
-        & (F.col(key) <= F.col("__hi"))
-    )
-    if tbsegs:
-        # the tiebreak restriction applies only to tb-split segments:
-        # gating on the sentinel bounds keeps NULL-tiebreak rows (NULL
-        # never passes a between-range predicate) flowing into their
-        # ordinary segment. Built only when tb-splits exist — the order
-        # image (tbx) is BIGINT then (_tb_order_expr gate: the tiebreak
-        # itself when integral, the 60-bit byte-prefix when string), so
-        # the bound comparisons never need a cross-type coercion
-        cond = cond & (
-            ((F.col("__tlo") == _TB_MIN) & (F.col("__thi") == _TB_MAX))
-            | (
-                (F.expr(tbx) >= F.col("__tlo"))
-                & (F.expr(tbx) <= F.col("__thi"))
-            )
-        )
-    d = keyed.join(F.broadcast(segs_df), cond).drop("__pid0")
-    rank = F.col("__off") + F.row_number().over(
-        W.partitionBy("__sid").orderBy(key, tiebreak)
-    )
-    out = d.withColumn("rank", rank.cast("long")).drop(
-        "__lo", "__hi", "__tlo", "__thi", "__sid", "__off"
-    )
-    if nnull:
-        out = null_part.unionByName(out)
-    # `off` finished as nnull + sum(segment counts) — the exact total,
-    # already known driver-side: attach as a literal, no extra job
-    return out.withColumn("__ntot", F.lit(off).cast("long")) if with_total else out
+    if with_total:
+        out = out.crossJoin(F.broadcast(df.agg(F.count(F.lit(1)).alias("__ntot"))))
+    return out
 
 
 def distributed_ntile(
@@ -3046,29 +2621,23 @@ def distributed_ntile(
     key,
     tiebreak: str,
     out_col: str,
-    max_split_rows: int = RANK_SKEW_CAP,
 ) -> DataFrame:
     """Exact NTILE(n) OVER (ORDER BY key ASC, tiebreak ASC) without an
     unpartitioned window: distributed_global_rank supplies the global
-    row number via value-range splits + parallel per-split windows, and
-    the tile index follows from the closed form both engines define
-    NTILE by — base = n div k rows per tile, the first n mod k tiles one
-    row larger. DESC orderings negate the key; double keys must be
-    quantized to int64 by the caller (exactness rule) so the range-split
-    integer arithmetic applies. NULL keys rank first (Spark's ASC NULLS
-    FIRST — note DuckDB defaults to NULLS LAST; the graded callers feed
-    non-null keys). Adds ``out_col`` (int, 1-based) and preserves every
-    input column — every input row appears exactly once.
-    ``max_split_rows`` passes through to distributed_global_rank's
-    skew-adaptive segmentation.
+    row number from a range-partitioned sort, and the tile index follows
+    from the closed form both engines define NTILE by — base = n div k
+    rows per tile, the first n mod k tiles one row larger. DESC orderings
+    negate the key; double keys must be quantized to int64 by the caller
+    (exactness rule). NULL keys rank first (Spark's ASC NULLS FIRST —
+    note DuckDB defaults to NULLS LAST; the graded callers feed non-null
+    keys). Adds ``out_col`` (int, 1-based) and preserves every input
+    column — every input row appears exactly once.
 
-    The row count NTILE's closed form needs rides out of the rank
-    helper's own split counts (``with_total=True``) — no second scan of
-    ``df``."""
+    The row count NTILE's closed form needs rides in with the rank
+    (``with_total=True``) as a broadcast one-row count, never a collected
+    scalar."""
     d = df.withColumn("__ntile_key", key.cast("long"))
-    ranked = distributed_global_rank(
-        d, "__ntile_key", tiebreak, max_split_rows, with_total=True
-    )
+    ranked = distributed_global_rank(d, "__ntile_key", tiebreak, with_total=True)
     base = f"(__ntot div {n_tiles})"
     rem = f"(__ntot % {n_tiles})"
     tile = (
@@ -3086,7 +2655,7 @@ def distributed_ntile(
 #: is comfortably one task's sort; every graded SF sits far below it, so
 #: the recursion is exercised by tests (which force it down), not by the
 #: bench.
-PERCENTILE_MAX_SPLIT_ROWS = 1 << 22
+PERCENTILE_MAX_WINDOW_ROWS = 1 << 22
 
 
 def _values_at_ranks(
@@ -3095,7 +2664,7 @@ def _values_at_ranks(
     kmin: int,
     kmax: int,
     ranks: "list[int]",
-    max_split_rows: int,
+    max_window_rows: int,
 ) -> dict:
     """Values at the given 1-based ranks of ``d`` ordered by
     (``__q_key``, ``col``) — distributed selection by recursive range
@@ -3129,7 +2698,7 @@ def _values_at_ranks(
     terminal = {
         pid: lrs
         for pid, lrs in need.items()
-        if count_by_pid[pid] <= max_split_rows or width == 1
+        if count_by_pid[pid] <= max_window_rows or width == 1
     }
     got: dict = {}
     if terminal:
@@ -3153,7 +2722,7 @@ def _values_at_ranks(
         sub_kmax = min(kmax, sub_kmin + width - 1)
         sub = dd.filter(F.col("__pid") == pid).drop("__pid")
         sub_vals = _values_at_ranks(
-            sub, col, sub_kmin, sub_kmax, sorted(lrs), max_split_rows
+            sub, col, sub_kmin, sub_kmax, sorted(lrs), max_window_rows
         )
         got.update({off_by_pid[pid] + lr: v for lr, v in sub_vals.items()})
     return got
@@ -3164,7 +2733,7 @@ def _exact_percentiles_distributed(
     col: str,
     qs: "list[float]",
     scale: int = 100,
-    max_split_rows: int = PERCENTILE_MAX_SPLIT_ROWS,
+    max_window_rows: int = PERCENTILE_MAX_WINDOW_ROWS,
 ) -> "list[float]":
     """Exact interpolated percentiles of a 2-decimal ``col`` without the
     single-node value-map merge of Spark's builtin ``percentile()``
@@ -3178,10 +2747,10 @@ def _exact_percentiles_distributed(
     position by recursive range splitting: a collected
     ≤ZORDER_RANGE_SPLITS-row split histogram routes each rank to its
     (split, local index); small splits window together in one job,
-    skew-bloated splits (> ``max_split_rows``) re-split their own key
+    skew-bloated splits (> ``max_window_rows``) re-split their own key
     subrange — width shrinks ×splits per level, so even a fully
     degenerate distribution resolves in O(log_splits(range)) histogram
-    jobs with no task ever sorting more than ``max_split_rows`` rows
+    jobs with no task ever sorting more than ``max_window_rows`` rows
     (ties on ONE key are the floor: a single key can't range-split, and
     its run resolves in one window). Driver traffic is histograms plus
     ≤2·len(qs) probed rows at any data size. Interpolation mirrors
@@ -3189,7 +2758,7 @@ def _exact_percentiles_distributed(
     ``(hi-pos)*v_lo + (pos-lo)*v_hi`` (weighted two-point form) so the
     returned doubles are bit-identical to the builtin's — asserted in
     tests/test_distributed_percentile.py, including with
-    ``max_split_rows`` forced low enough to recurse."""
+    ``max_window_rows`` forced low enough to recurse."""
     import math
 
     vals = df.select(
@@ -3208,7 +2777,7 @@ def _exact_percentiles_distributed(
         {int(math.floor(p)) + 1 for p in positions}
         | {int(math.ceil(p)) + 1 for p in positions}
     )
-    got = _values_at_ranks(vals, col, kmin, kmax, want, max_split_rows)
+    got = _values_at_ranks(vals, col, kmin, kmax, want, max_window_rows)
     out = []
     for p in positions:
         lo, hi = int(math.floor(p)), int(math.ceil(p))
@@ -3288,12 +2857,11 @@ def _morton_sql(u: str, h: str, bits: int = ZORDER_BITS) -> str:
         "so the 2-D probe touches a fraction of the files — min/max "
         "file-skipping is exactly what parquet/Delta stats give at "
         "100 TB. The global file rank is computed WITHOUT a single-task "
-        "global window: deterministic value-range splits (exact "
-        "(max-min)/32 arithmetic, not sampled boundaries) partition the "
-        "sort key, per-split offsets come from a 32-row cumulative "
-        "window, and each split ranks locally in parallel — the "
-        "deterministic twin of repartitionByRange + zipWithIndex, "
-        "oracle-proven equal to the plain global ROW_NUMBER."
+        "global window: distributed_global_rank's range-partitioned sort "
+        "on (key, event_id) numbered by the distributed sequence id "
+        "(zipWithIndex over the sorted partitions) — the sampled "
+        "partition bounds pick which task sorts a row, never its rank, "
+        "so it is oracle-proven equal to the plain global ROW_NUMBER."
     ),
 )
 def events_zorder_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3308,12 +2876,10 @@ def events_zorder_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("u").alias("min_u"),
         F.max("u").alias("max_u"),
     )
-    # checkpointed ONCE: both layouts' distributed ranks evaluate their
-    # input three times each (extrema agg, split counts, ranked join), so
-    # without this the events scan + Morton interleave runs ~6x; the
-    # materialized relation is exactly what OPTIMIZE ZORDER would stage
-    # before rewriting files (measured 2.5 s -> 2.1 s standalone sf0.1;
-    # the remaining cost is the two ranks' window shuffles, not the scan)
+    # checkpointed ONCE: each layout's rank reads its input for the range
+    # sample and again for the sort, so without this the events scan +
+    # Morton interleave runs ~4x; the materialized relation is exactly
+    # what OPTIMIZE ZORDER would stage before rewriting files
     z = swap_checkpoint(
         "zorder_audit_z",
         base.crossJoin(F.broadcast(s))
@@ -3323,11 +2889,9 @@ def events_zorder_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def bucketed(df: DataFrame, key: str) -> DataFrame:
         return (
-            # the default skew-adaptive rank: the keys are uniform by
-            # construction (shuffled uids / Morton codes) so no tb-splits
-            # ever trigger, but the cap still governs SEGMENT COUNT —
-            # |events|/cap parallel rank tasks at 100 TB instead of the
-            # lazy path's fixed 32
+            # a range-partitioned sort: the rank runs in as many
+            # parallel sort tasks as the shuffle has partitions, so the
+            # task count scales with |events| at 100 TB
             distributed_global_rank(df, key, "event_id")
             .withColumn("bucket", F.expr(f"(rank - 1) div {ZORDER_BUCKET_ROWS}"))
             .groupBy("bucket")
@@ -3610,8 +3174,8 @@ def events_hourly_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def events_type_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the (type, day) rollup is tiny and feeds FOUR references (span,
     # the type list, and the gap-filled grid that self-joins) —
-    # unmaterialized, each re-ran the events scan + daily aggregate
-    # (r16 plan audit: 6 parquet scans → 1)
+    # unmaterialized, each re-runs the events scan + daily aggregate
+    # (6 parquet scans in the plan instead of 1)
     daily = swap_checkpoint(
         "typecorr_daily",
         table(spark, sf_dir, "events")
@@ -3695,9 +3259,10 @@ def events_type_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "RFM customer segmentation — recency/frequency/monetary quintile "
         "scores (ties broken by custkey so both engines cut identically) "
         "folded into named segments. One orders aggregate per customer, "
-        "then three distributed_ntile passes — value-range splits + "
-        "parallel per-split windows + closed-form NTILE buckets, never "
-        "an unpartitioned ORDER BY window, so each score stays parallel "
+        "then three distributed_ntile passes — range-partitioned sorts "
+        "numbered by the distributed sequence id + closed-form NTILE "
+        "buckets, never an unpartitioned ORDER BY window, so each score "
+        "stays parallel "
         "at a billion customers while the oracle's plain ntile(5) "
         "remains the semantic spec. Monetary ranks on its exact 1e4-"
         "quantized int64 twin (injective on distinct values — ordering "
@@ -3799,11 +3364,11 @@ def customers_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         "decimal revenue and the cumulative share — the 80/20 diagnostic "
         "behind assortment and capacity planning. The rank runs on the "
         "parts-sized AGGREGATE (|parts| rows, not |lineitem|) through "
-        "distributed_global_rank — value-range splits + parallel "
-        "per-split windows, DESC via exact key negation — and the row "
-        "count rides out of the rank helper's own split counts "
-        "(with_total); the only remaining ordered window touches the "
-        "10-row decile curve."
+        "distributed_global_rank — a range-partitioned sort numbered "
+        "by the distributed sequence id, DESC via exact key negation — "
+        "and the row count rides in with the rank as a broadcast "
+        "one-row count (with_total); the only remaining ordered window "
+        "touches the 10-row decile curve."
     ),
 )
 def parts_revenue_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3815,9 +3380,9 @@ def parts_revenue_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(F.col("l_extendedprice").cast("decimal(18,4)")).alias("revenue"))
     )
     # materialize the parts-sized rollup once: the distributed rank
-    # evaluates its input three times (extrema, split counts, ranked
-    # join) and the grand total once more — without this the lineitem
-    # scan + groupBy would re-run each time
+    # reads its input for the range sample, the sort and the row count,
+    # and the grand total once more — without this the lineitem scan +
+    # groupBy would re-run each time
     rev = swap_checkpoint("parts_pareto_rev", rev)
     # revenue DESC == negated exact int64 key ASC (decimal(18,4)·10⁴ is
     # an exact integer), partkey tie-break unchanged
@@ -3909,11 +3474,11 @@ def orders_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The distinct (orderkey, partkey) basket relation feeds FOUR
     # branches (frequent-part table, both self-join sides, the n_orders
     # scalar); Catalyst does not dedupe common subplans, so unmaterialized
-    # it re-ran the lineitem scan + distinct shuffle five times (plan
-    # audit r16: 5 parquet scans + 5 distinct HashAggregates → 1).
+    # it re-runs the lineitem scan + distinct shuffle five times (5 parquet
+    # scans + 5 distinct HashAggregates in the plan instead of 1).
     # Materialize it once — at 100 TB this is the persist(MEMORY_AND_DISK)
     # a production basket job would put on its deduped fact anyway
-    # (guide §5: reused AND expensive to recompute).
+    # (reused AND expensive to recompute).
     li = swap_checkpoint(
         "basket_li",
         table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct(),
@@ -4152,9 +3717,10 @@ def events_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         "half), counted per (from, to) cell — the upgrade/churn movement "
         "table behind lifecycle marketing. Each half is one partial-agg "
         "pass over orders into a once-materialized customers-sized "
-        "aggregate; the quartile comes from distributed_ntile (value-"
-        "range splits + parallel per-split windows + closed-form NTILE "
-        "bucket — no unpartitioned window even at a billion customers; "
+        "aggregate; the quartile comes from distributed_ntile (a range-"
+        "partitioned sort numbered by the distributed sequence id + "
+        "closed-form NTILE bucket — no unpartitioned window even at a "
+        "billion customers; "
         "the oracle's plain ntile is the semantic spec) keyed on the "
         "exact 1e4-scaled integer twin of the DECIMAL(18,4) spend, with "
         "custkey tie-breaks so both engines cut identically; the FULL "
@@ -4176,9 +3742,9 @@ def customers_segment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("m")
     )
     o = orders.crossJoin(F.broadcast(mid))
-    # BOTH halves come out of ONE orders pass (r17, guide §2.3
-    # aggregate-before-shuffle): the per-half filter+aggregate form
-    # scanned and shuffled the fact table twice — a conditional decimal
+    # BOTH halves come out of ONE orders pass (aggregate before the
+    # shuffle): a per-half filter+aggregate form scans and shuffles the
+    # fact table twice — a conditional decimal
     # sum per half in a single custkey-keyed aggregate is the identical
     # relation pair (a customer enters a half iff it has an order there,
     # i.e. its conditional sum is non-NULL; sums over the same rows).
@@ -4458,8 +4024,8 @@ def events_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the gap-filled daily series is days-sized (≪ events) and feeds FOUR
     # consumers (mean, denominator, both lag-pair sides) — unmaterialized,
-    # each re-ran the events scan + daily aggregate + extrema join
-    # (r16 plan audit: 10 parquet scans → 2)
+    # each re-runs the events scan + daily aggregate + extrema join
+    # (10 parquet scans in the plan instead of 2)
     series = swap_checkpoint(
         "acf_series",
         days.join(daily, "day", "left").select(
@@ -4886,8 +4452,8 @@ def nation_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     sup = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     # the supplier-revenue rollup feeds the per-nation totals AND the
     # share projection — unmaterialized, the lineitem scan + join +
-    # groupBy re-ran once per reference (3x including the duplicated
-    # totals broadcast below; r16 plan audit: 7 parquet scans → 3).
+    # groupBy re-run once per reference (3x including the duplicated
+    # totals broadcast below; 7 parquet scans in the plan instead of 3).
     # The checkpoint is |suppliers|-sized.
     rev = swap_checkpoint(
         "hhi_rev",
@@ -5180,7 +4746,7 @@ def supplier_reach_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The graph is MATERIALIZED before recursing: a temp view is a
     # LOGICAL plan, so without this every recursion round would re-run
     # the aggregate + window + self-join that build the edge list
-    # (measured 6.3 s -> ~1 s at sf0.1). Since r16 the edge list is the
+    # (measured 6.3 s -> ~1 s at sf0.1). The edge list is the graph
     # family's shared memoized artifact (one build per session per SF,
     # read by this BFS and supplier_triangle_stats alike — the dedup
     # family's shared-index shape; memo_checkpoint keeps the same
@@ -5514,12 +5080,12 @@ def events_dn_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     # first-purchase date rides every activity row via a user-keyed
-    # window (r17, guide §2.4): the old first-aggregate + checkpoint
-    # grid + (user, day) equi-join back to p executed the distinct
-    # purchase subtree TWICE (two events scans + two distinct shuffles,
-    # Catalyst does not dedupe common subplans) and paid a join shuffle.
-    # With f in-row, "retained at N" is just datediff(d, f) == N — a
-    # p-row at d = f+N exists iff the old join hit, and d <= m always
+    # window: a first-aggregate + (user, day) equi-join back to p would
+    # execute the distinct purchase subtree TWICE (two events scans + two
+    # distinct shuffles, Catalyst does not dedupe common subplans) and
+    # pay a join shuffle. With f in-row, "retained at N" is just
+    # datediff(d, f) == N — a p-row at d = f+N exists iff that join
+    # would hit, and d <= m always
     # (d is an event date, m the max event date), so the oracle's
     # target <= m guard on the hit side is implied. Eligibility counts
     # once per user off the d == f row (exactly one per user: the min).
@@ -5589,9 +5155,12 @@ EQUIDEPTH_BUCKETS = 10
         "collected split histogram routes each rank to its value-range "
         "split, and one filtered window numbers only the splits that "
         "hold a wanted rank. Numbering every row with "
-        "distributed_global_rank and filtering the ranks gives the "
-        "same boundaries but measured slower (4 cores, 10 calls each: "
-        "sf0.1 median 0.51 s vs 0.74 s, sf0.01 0.24 s vs 0.27 s). The "
+        "distributed_global_rank (a full range-partitioned sort) and "
+        "filtering the ranks gives the same boundaries; measured on 4 "
+        "cores, 10 alternating calls each, selection vs rank + filter: "
+        "sf0.1 median 0.51 s vs 0.60 s, sf0.01 0.26 s vs 0.18 s. "
+        "Selection is kept: it wins at the larger scale, where it "
+        "sorts only the splits holding a wanted rank. The "
         "<=2(B-1) selected rows are the only rows "
         "collected — never the value multiset that Spark's builtin "
         "percentile() merges into one single-node map (the prior "
@@ -5661,8 +5230,9 @@ def lineitem_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         "G = 2·Σ(i·xᵢ)/(n·Σx) − (n+1)/n over spend ranked ascending "
         "with custkey tie-breaks. The rank runs on the customers-sized "
         "AGGREGATE (never |orders|) through distributed_global_rank — "
-        "value-range splits + parallel per-split windows, so no task "
-        "sorts the whole relation even at billions of customers — and "
+        "a range-partitioned sort numbered by the distributed sequence "
+        "id, so no task sorts the whole relation even at billions of "
+        "customers — and "
         "the rank-weighted sum folds in exact DECIMAL so the one-row "
         "result is bit-identical in both engines."
     ),
@@ -5674,12 +5244,12 @@ def customers_spend_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(F.col("o_totalprice").cast("decimal(18,4)")).alias("s"))
     )
     # materialize the customers-sized rollup once: the distributed rank
-    # evaluates its input three times (extrema, split counts, ranked
-    # join) — without this the orders scan + groupBy would re-run each
-    # time (same rationale as customer_rfm / events_zorder_audit)
+    # reads its input for the range sample and again for the sort —
+    # without this the orders scan + groupBy would re-run each time
+    # (same rationale as customer_rfm / events_zorder_audit)
     spend = swap_checkpoint("spend_gini", spend)
     # decimal(18,4) quantizes exactly: ORDER BY s == ORDER BY s·10⁴ as
-    # int64 (the helper's range-split arithmetic needs an integer key)
+    # int64
     keyed = spend.withColumn("__k", F.expr("CAST(s * 10000 AS BIGINT)"))
     ranked = distributed_global_rank(keyed, "__k", "o_custkey").select(
         "s", F.col("rank").alias("i")
@@ -6012,7 +5582,8 @@ def orders_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "broadcast). NULL keys are excluded — they never match in an "
         "equi-join, so they don't load join shuffles. Numerics: counts "
         "exact int64 end to end; skew_ratio is one exact int product "
-        f"(max x {SKEW_BUCKETS}) over one division, round 6. Scale "
+        f"(max x {SKEW_BUCKETS}) over one division, rounded to 6 "
+        "decimals. Scale "
         "shape: the per-key pre-aggregation is map-side-combinable (the "
         "SAME partial-agg cost the audited shuffle itself would pay — "
         "the audit is never more expensive than the join it de-risks); "

@@ -187,6 +187,14 @@ def _affinity_edges_sql(cap: int) -> str:
         )"""
 
 
+#: Most suppliers one part may keep after the top-``cap`` filter in
+#: supplier_affinity_edges: its pair generation builds a part's
+#: O(fanout²) supplier pairs in one row, so a hub part above this fails
+#: the build with a named error instead of exhausting a task's memory.
+#: TPC-H-shaped data has a fanout of 11-52.
+AFFINITY_MAX_FANOUT = 128
+
+
 def supplier_affinity_edges(spark: SparkSession, sf_dir: str, cap: int) -> DataFrame:
     """The MEMOIZED symmetric distinct edge list (a, b) of the
     primary-part supplier affinity graph — each supplier's top-``cap``
@@ -245,14 +253,26 @@ def supplier_affinity_edges(spark: SparkSession, sf_dir: str, cap: int) -> DataF
         # suppliers after the top-`cap` filter) would need the dedup
         # treatment *as a semantics change*; on TPC-H-shaped data the
         # fanout is 11-52 (tests/test_bfs_recursive.py pins the
-        # test-corpus max), far below any buffer concern. Output is
-        # set-identical to the join form: same (a, b), a != b, both
-        # directions, distinct.
+        # test-corpus max), far below any buffer concern; a part above
+        # AFFINITY_MAX_FANOUT fails the build through raise_error inside
+        # the plan (no extra job). Output is set-identical to the join
+        # form: same (a, b), a != b, both directions, distinct.
+        ss = F.col("ss")
+        bounded = F.when(F.size(ss) <= AFFINITY_MAX_FANOUT, ss).otherwise(
+            F.raise_error(
+                F.format_string(
+                    "supplier_affinity_edges: part %d keeps %d suppliers, "
+                    f"above AFFINITY_MAX_FANOUT={AFFINITY_MAX_FANOUT}",
+                    "p",
+                    F.size(ss),
+                )
+            )
+        )
         und = (
             sp.groupBy("p")
             .agg(F.sort_array(F.collect_list("s")).alias("ss"))
             .filter(F.size("ss") > 1)
-            .select(F.explode(_ordered_pairs(F.col("ss"))).alias("e"))
+            .select(F.explode(_ordered_pairs(bounded)).alias("e"))
             .select(F.col("e.doc_a").alias("a"), F.col("e.doc_b").alias("b"))
             .distinct()
         )

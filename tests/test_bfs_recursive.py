@@ -83,7 +83,9 @@ def test_affinity_posting_list_fanout_bounded(spark, sf_dir):
     )
     sp = rev.groupby("l_suppkey").head(BFS_TOP_PARTS)
     fanout = sp.groupby("l_partkey").l_suppkey.nunique()
-    assert fanout.max() <= 128, (
+    from currency_etl_spark.queries.graph import AFFINITY_MAX_FANOUT
+
+    assert fanout.max() <= AFFINITY_MAX_FANOUT, (
         f"hub part fanout {fanout.max()} — the in-row pair array is "
         "O(fanout^2); revisit the posting-list design note in graph.py"
     )
@@ -99,6 +101,39 @@ def test_affinity_posting_list_fanout_bounded(spark, sf_dir):
             for v in ss[i + 1:]:
                 und.add((u, v))
     assert n_sym == 2 * len(und)
+
+
+def test_affinity_hub_part_fails_the_build(spark, tmp_path):
+    """A part that keeps more than AFFINITY_MAX_FANOUT suppliers after the
+    top-cap filter fails the edge build with a named error from inside
+    the plan; a part at the bound builds its full pair set."""
+    import pandas as pd
+    import pytest
+
+    from currency_etl_spark.queries.graph import (
+        AFFINITY_MAX_FANOUT,
+        supplier_affinity_edges,
+    )
+
+    def corpus(name, n_suppliers):
+        d = tmp_path / name
+        d.mkdir()
+        pd.DataFrame(
+            {
+                "l_suppkey": pd.Series(range(1, n_suppliers + 1), dtype="int64"),
+                "l_partkey": pd.Series([1] * n_suppliers, dtype="int64"),
+                "l_extendedprice": [100.0] * n_suppliers,
+            }
+        ).to_parquet(d / "lineitem.parquet", index=False)
+        return str(d)
+
+    n = AFFINITY_MAX_FANOUT
+    at_bound = corpus("at_bound", n)
+    assert supplier_affinity_edges(spark, at_bound, BFS_TOP_PARTS).count() == n * (n - 1)
+    with pytest.raises(Exception, match="AFFINITY_MAX_FANOUT"):
+        supplier_affinity_edges(spark, corpus("hub", n + 1), BFS_TOP_PARTS)
+    # a failed build leaves the memo usable
+    assert supplier_affinity_edges(spark, at_bound, BFS_TOP_PARTS).count() == n * (n - 1)
 
 
 def test_bfs_repeat_invocation_shares_then_releases_checkpoint(spark, sf_dir):

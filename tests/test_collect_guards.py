@@ -29,9 +29,6 @@ ALLOWED_SITES = {
     ("queries/extras.py", "events_adaptive_salted_agg"): "1-row audit globals (hottest-key rows, total rows) — the AQE-style runtime plan decision; 1 row by construction (a single max/sum over the per-key relation)",
     ("queries/extras.py", "_exact_percentiles_distributed"): "1-row extrema/count aggregate",
     ("queries/extras.py", "_values_at_ranks"): "≤32-row split histogram per recursion level, ≤2·|qs| probed rank rows",
-    ("queries/extras.py", "_refine_segments"): "per-level interval counts — ≤ splits·|oversized intervals| rows, never data rows",
-    ("queries/extras.py", "distributed_global_rank"): "≤130-row log2-magnitude histogram (count + extrema per bucket) — the fused single driver job",
-    ("queries/extras.py", "_tb_subsegments"): "per-hot-key tiebreak extrema (≤ |hot keys| rows) + per-level interval counts — ≤ splits·|oversized intervals| rows, never data rows",
     ("queries/training.py", "_bpe_train_build"): "1-row argmax merge winner per step (≤ BPE_MERGES rows total) — the scalar iterative-training decision (bpe_merge_loop body, shared with docs_bpe_encode); BFS convergence-check precedent",
 }
 

@@ -180,3 +180,19 @@ def test_warm_corpus_build_is_one_written_plan(spark, funnel_dir, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(jobs) <= 8, jobs
+
+
+def test_repetition_gate_tokenizes_each_document_once(spark, funnel_dir, tmp_path):
+    """The repetition gate's shingles index a token array bound once per
+    document: the written plan never re-splits the text inside the
+    shingle lambda (an element_at over split(text) per token read), the
+    shape that made a gated build ~20x slower than an ungated one."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    n0 = store.executionsCount()
+    build_training_corpus(spark, funnel_dir, str(tmp_path / "c"), max_rep_ratio=0.5)
+    execs = store.executionsList(int(n0), int(store.executionsCount() - n0))
+    plans = [execs.apply(i).physicalPlanDescription() for i in range(execs.size())]
+    written = [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p]
+    assert len(written) == 1, [p[:200] for p in plans]
+    assert "element_at(split(" not in written[0]
+    assert "transform(array(split(text" in written[0]

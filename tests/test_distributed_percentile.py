@@ -65,144 +65,123 @@ def test_empty_input_yields_nans(spark):
 def test_skewed_split_recursion_matches_builtin(spark):
     """Force the skew path: 95% of rows sit in a band 1/1000th of the key
     range, so the first-level histogram routes the median ranks into one
-    bloated split; with max_split_rows far below its count the helper
+    bloated split; with max_window_rows far below its count the helper
     must re-split that split's subrange (several levels) and still return
     the builtin's exact doubles. Also covers the unsplittable floor: a
-    one-key run larger than max_split_rows terminates via width == 1."""
+    one-key run larger than max_window_rows terminates via width == 1."""
     rows = [(round(100.0 + (i % 50) * 0.01, 2),) for i in range(9500)]
     rows += [(round(float(1 + i * 997 % 100000) / 100, 2),) for i in range(500)]
     df = spark.createDataFrame(rows, "price double").repartition(8)
     qs = [0.05, 0.25, 0.5, 0.75, 0.95]
-    mine = _exact_percentiles_distributed(df, "price", qs, max_split_rows=64)
+    mine = _exact_percentiles_distributed(df, "price", qs, max_window_rows=64)
     want = _builtin(df, "price", qs)
     assert _bits(mine) == _bits(want)
 
     # degenerate: every row one key — the single split can't range-split
     # and must resolve as the width-1 terminal despite exceeding the cap
     const = spark.createDataFrame([(7.25,)] * 300, "price double").repartition(4)
-    mine_c = _exact_percentiles_distributed(const, "price", qs, max_split_rows=10)
+    mine_c = _exact_percentiles_distributed(const, "price", qs, max_window_rows=10)
     want_c = _builtin(const, "price", qs)
     assert _bits(mine_c) == _bits(want_c)
 
 
-def test_adaptive_global_rank_matches_plain_row_number(spark):
-    """distributed_global_rank under a low max_split_rows must
-    assign exactly the ranks of ROW_NUMBER() OVER (ORDER BY key, tiebreak)
-    while bounding every segment to the cap (single-key runs excepted)."""
+def _row_number(df, key="k", tiebreak="tb"):
+    """The semantic spec: ROW_NUMBER() OVER (ORDER BY key, tiebreak) —
+    one unpartitioned window, fine at test sizes."""
     from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
 
-    from currency_etl_spark.queries.extras import (
-        _refine_segments,
-        distributed_global_rank,
+    return df.withColumn(
+        "rank", F.row_number().over(W.orderBy(key, tiebreak)).cast("long")
     )
 
-    # 90% of keys jammed into [1000, 1049], a 500-row single-key spike at
-    # 1020, and a sparse tail out to 10^9 — level-0 even splits put nearly
-    # everything in one split
+
+def _ranks(df, key="k", tiebreak="tb"):
+    """(key, tiebreak, rank) rows sorted by rank — NULL-safe, unlike a
+    plain tuple sort."""
+    return sorted(
+        (tuple(r) for r in df.select(key, tiebreak, "rank").collect()),
+        key=lambda r: r[2],
+    )
+
+
+def _assert_rank_is_row_number(df, key="k", tiebreak="tb"):
+    from currency_etl_spark.queries.extras import distributed_global_rank
+
+    got = _ranks(distributed_global_rank(df, key, tiebreak), key, tiebreak)
+    assert got == _ranks(_row_number(df, key, tiebreak), key, tiebreak)
+    return got
+
+
+def _partitions_by_key(df, key="k", tiebreak="tb"):
+    """{key: set of range partitions its ranked rows sit in}, read at 4
+    shuffle partitions with AQE's post-shuffle coalescing off, so the
+    sort's range partitions are the partitions observed (coalescing only
+    ever merges small ones)."""
+    from currency_etl_spark.queries.extras import distributed_global_rank
+
+    spark = df.sparkSession
+    confs = {
+        "spark.sql.shuffle.partitions": "4",
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    old = {c: spark.conf.get(c) for c in confs}
+    for c, v in confs.items():
+        spark.conf.set(c, v)
+    try:
+        rows = (
+            distributed_global_rank(df, key, tiebreak)
+            .select(key, F.spark_partition_id().alias("pid"))
+            .collect()
+        )
+    finally:
+        for c, v in old.items():
+            spark.conf.set(c, v)
+    out: dict = {}
+    for r in rows:
+        out.setdefault(r[key], set()).add(r["pid"])
+    return out
+
+
+def test_adaptive_global_rank_matches_plain_row_number(spark):
+    """distributed_global_rank assigns exactly the ranks of ROW_NUMBER()
+    OVER (ORDER BY key, tiebreak) on a skewed key: 90% of keys jammed into
+    [1000, 1049], a 500-row single-key spike at 1020 and a sparse tail out
+    to 10^9."""
     rows = [(1000 + (i * 7) % 50, i) for i in range(4000)]
     rows += [(1020, 100000 + i) for i in range(500)]
     rows += [((i * 997) % 1000000000, 200000 + i) for i in range(300)]
     df = spark.createDataFrame(rows, "k long, tb long").repartition(8)
-
-    got = distributed_global_rank(df, "k", "tb", max_split_rows=256)
-    want = df.withColumn(
-        "rank", F.row_number().over(W.orderBy("k", "tb")).cast("long")
-    )
-    assert sorted(got.select("k", "tb", "rank").collect()) == sorted(
-        want.select("k", "tb", "rank").collect()
-    )
-
-    ext = df.agg(F.min("k"), F.max("k")).collect()[0]
-    segs = _refine_segments(df, "k", [(ext[0], ext[1])], [], 256)
-    # every multi-key segment respects the cap; only the 1020 spike's
-    # single-key segment may exceed it
-    for lo, hi, c in segs:
-        assert c <= 256 or lo == hi, (lo, hi, c)
-    assert sum(c for _, _, c in segs) == df.count()
-
-
-def test_log_bucket_sql_matches_python_at_int64_edges(spark):
-    """_log_bucket (driver-side, routes segments to their hash-join
-    bucket) and _log_bucket_sql (per-row, the join key and the fast
-    path's window partition) MUST agree on every int64 — a divergence
-    silently drops rows from the rank join. Pin the edges the hypothesis
-    property test (±1e12) never reaches, monotonicity across sign
-    boundaries, and the full bucket-id range claim (1..128)."""
-    from pyspark.sql import functions as F
-
-    from currency_etl_spark.queries.extras import _log_bucket, _log_bucket_sql
-
-    edges = [
-        -(2**63), -(2**63) + 1, -(2**62), -(2**32), -3, -2, -1,
-        0, 1, 2, 3, 2**32, 2**62, 2**63 - 1,
-    ]
-    df = spark.createDataFrame([(v,) for v in edges], "k long")
-    got = {
-        r["k"]: r["b"]
-        for r in df.select("k", F.expr(_log_bucket_sql("k")).alias("b")).collect()
-    }
-    for v in edges:
-        assert got[v] == _log_bucket(v), (v, got[v], _log_bucket(v))
-        assert 1 <= got[v] <= 128, (v, got[v])
-    # monotone non-decreasing in key order => bucket ranges are disjoint
-    buckets = [_log_bucket(v) for v in sorted(edges)]
-    assert buckets == sorted(buckets)
-    # NULL keys map to the NULL bucket (they take the sentinel segment)
-    nb = (
-        spark.createDataFrame([(None,)], "k long")
-        .select(F.expr(_log_bucket_sql("k")).alias("b"))
-        .collect()[0]["b"]
-    )
-    assert nb is None
+    got = _assert_rank_is_row_number(df)
+    assert [r[2] for r in got] == list(range(1, len(rows) + 1))
 
 
 def test_adaptive_rank_extreme_span_segmented_path(spark):
-    """Force the SEGMENTED path (cap smaller than a bucket's population)
-    on keys spanning both int64 extremes: refinement intervals nest
-    inside single log-buckets (same sign, bounded span), so the
-    `(key - lo) div w` split arithmetic can never overflow int64 even
-    though kmax - kmin would. Ranks must equal the plain ROW_NUMBER."""
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
-    from currency_etl_spark.queries.extras import distributed_global_rank
-
+    """Keys AND tiebreaks spanning both int64 ends rank exactly: the
+    sort compares values, it never subtracts them, so no span can
+    overflow. Covers a hot key whose ties spread over the whole int64
+    tiebreak domain and a NULL-key block with tiebreaks at both ends."""
     lo, hi = -(2**63), 2**63 - 1
     rows = [(lo, 0), (lo + 1, 1), (hi, 2), (hi - 1, 3), (0, 4), (-1, 5)]
-    # populate one bucket past the cap so refinement actually runs:
-    # bucket of [2^62, 2^63-1] gets 40 spread keys (cap=8 below)
     rows += [(2**62 + i * (2**56), 100 + i) for i in range(40)]
-    # and a hot single key beyond the cap to cross tb-splitting with
-    # the extreme-span layout
     rows += [(2**62, 1000 + i) for i in range(20)]
+    # hot key 5: ties across the whole int64 tiebreak domain
+    rows += [(5, lo + i * (hi // 12)) for i in range(24)]
+    rows += [(5, hi - i) for i in range(4)]
+    # NULL-key block with tiebreaks at both extremes
+    rows += [(None, lo + i * (hi // 9)) for i in range(18)]
+    rows += [(None, hi), (None, hi - 7)]
     df = spark.createDataFrame(rows, "k long, tb long").repartition(4)
-
-    got = sorted(
-        distributed_global_rank(df, "k", "tb", max_split_rows=8)
-        .select("k", "tb", "rank")
-        .collect()
-    )
-    want = sorted(
-        df.withColumn("rank", F.row_number().over(W.orderBy("k", "tb")).cast("long"))
-        .select("k", "tb", "rank")
-        .collect()
-    )
-    assert got == want
+    _assert_rank_is_row_number(df)
 
 
 def test_adaptive_rank_property_random_keys(spark):
     """Property: for arbitrary key multisets — negative keys, huge gaps,
-    heavy ties — the adaptive path assigns exactly ROW_NUMBER() OVER
-    (ORDER BY key, tiebreak). Hypothesis drives the key distribution;
-    example count is small because each example runs real Spark jobs."""
+    heavy ties — the rank is exactly ROW_NUMBER() OVER (ORDER BY key,
+    tiebreak). Hypothesis drives the key distribution and the input
+    partition count; example count is small because each example runs
+    real Spark jobs."""
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
-
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
-    from currency_etl_spark.queries.extras import distributed_global_rank
 
     @given(
         keys=st.lists(
@@ -210,82 +189,44 @@ def test_adaptive_rank_property_random_keys(spark):
             min_size=1,
             max_size=60,
         ),
-        cap=st.integers(min_value=1, max_value=8),
+        parts=st.integers(min_value=1, max_value=8),
     )
     @settings(derandomize=True, max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
-    def check(keys, cap):
+    def check(keys, parts):
         df = spark.createDataFrame(
             [(k, i) for i, k in enumerate(keys)], "k long, tb long"
-        )
-        got = sorted(
-            distributed_global_rank(df, "k", "tb", max_split_rows=cap)
-            .select("k", "tb", "rank")
-            .collect()
-        )
-        want = sorted(
-            df.withColumn(
-                "rank", F.row_number().over(W.orderBy("k", "tb")).cast("long")
-            )
-            .select("k", "tb", "rank")
-            .collect()
-        )
-        assert got == want
+        ).repartition(parts)
+        _assert_rank_is_row_number(df)
 
     check()
 
 
 def test_global_rank_null_keys_rank_first_both_paths(spark):
     """NULL keys must not vanish: ROW_NUMBER semantics under Spark's ASC
-    default put NULLs FIRST (ordered by tiebreak), ranked as their own
-    leading block (a NULL key would fall out of the segment equi-join —
-    the silent row-drop this pins). Both paths — the default cap, where
-    every log-bucket fits and ranks by its own window, and a tiny cap,
-    which forces the segmented join and a split NULL block — must equal
-    the plain global ROW_NUMBER and preserve the row count; the all-NULL
-    degenerate relation must also survive."""
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
+    default put NULLs FIRST, ordered by tiebreak. A mixed relation and
+    an all-NULL one both equal the plain global ROW_NUMBER and keep every
+    row."""
     from currency_etl_spark.queries.extras import distributed_global_rank
 
     rows = [(k, i) for i, k in enumerate([5, None, 17, None, 5, 1000, None, -3])]
     df = spark.createDataFrame(rows, "k long, tb long").repartition(4)
-    by_tb = lambda r: r["tb"]  # noqa: E731 — None keys break tuple sort
-    want = sorted(
-        df.withColumn("rank", F.row_number().over(W.orderBy("k", "tb")).cast("long"))
-        .select("k", "tb", "rank")
-        .collect(),
-        key=by_tb,
-    )
-    for kwargs in ({}, {"max_split_rows": 2}):
-        got = sorted(
-            distributed_global_rank(df, "k", "tb", **kwargs)
-            .select("k", "tb", "rank")
-            .collect(),
-            key=by_tb,
-        )
-        assert got == want, kwargs
-    # all-NULL keys: the null block IS the relation (the no-buckets
-    # branch)
+    got = _assert_rank_is_row_number(df)
+    assert [r[0] for r in got[:3]] == [None, None, None]
     all_null = spark.createDataFrame(
         [(None, i) for i in range(6)], "k long, tb long"
+    ).repartition(3)
+    got = sorted(
+        (r["tb"], r["rank"])
+        for r in distributed_global_rank(all_null, "k", "tb").collect()
     )
-    for kwargs in ({}, {"max_split_rows": 3}):
-        got = sorted(
-            (r["tb"], r["rank"])
-            for r in distributed_global_rank(all_null, "k", "tb", **kwargs).collect()
-        )
-        assert got == [(i, i + 1) for i in range(6)], kwargs
+    assert got == [(i, i + 1) for i in range(6)]
 
 
 def test_distributed_ntile_null_keys_and_total(spark):
     """distributed_ntile must keep NULL-key rows (tile 1 first — Spark
     NTILE over ASC NULLS FIRST) and compute tile boundaries against the
-    TRUE row count. Before the with_total rewiring the NULL rows were
-    dropped by the rank join while still inflating the count — every
-    boundary shifted. Pin against Spark's own ntile."""
+    TRUE row count. Pin against Spark's own ntile."""
     from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
 
     from currency_etl_spark.queries.extras import distributed_ntile
 
@@ -307,80 +248,62 @@ def test_distributed_ntile_null_keys_and_total(spark):
 
 
 def test_hot_key_tie_run_splits_on_tiebreak(spark):
-    """A single-key run larger than the cap — the old unsplittable floor
-    — must re-split on the integer tiebreak: every resulting segment
-    holds <= cap rows, and the end-to-end ranks still equal plain
-    ROW_NUMBER. This is the skew case that matters for small-domain ntile
-    keys (frequency=1 holding half the customers)."""
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
-    from currency_etl_spark.queries.extras import (
-        _tb_subsegments,
-        distributed_global_rank,
-    )
-
-    # one hot key (7) with 900 tied rows, two cold keys around it
+    """A hot key's tie run is not one task's sort: the range partitioner
+    samples the composite (key, tiebreak) order, so the run of key 7
+    (900 of 910 rows) spreads over several range partitions by its
+    tiebreak — and the ranks still equal plain ROW_NUMBER."""
     rows = [(7, i) for i in range(900)]
     rows += [(3, 10000 + i) for i in range(5)]
     rows += [(9, 20000 + i) for i in range(5)]
     df = spark.createDataFrame(rows, "k long, tb long").repartition(8)
+    _assert_rank_is_row_number(df)
+    assert len(_partitions_by_key(df)[7]) >= 2
 
-    segs = _tb_subsegments(df, "k", "tb", [7], 64)
-    assert list(segs) == [7]
-    assert sum(c for _, _, c in segs[7]) == 900
-    assert all(c <= 64 for _, _, c in segs[7]), segs[7]
-    # intervals tile the tiebreak range in order without overlap
-    bounds = [(lo, hi) for lo, hi, _ in segs[7]]
-    assert bounds == sorted(bounds)
-    assert all(a_hi < b_lo for (_, a_hi), (b_lo, _) in zip(bounds, bounds[1:]))
 
-    got = sorted(
-        distributed_global_rank(df, "k", "tb", max_split_rows=64)
-        .select("k", "tb", "rank")
-        .collect()
-    )
-    want = sorted(
-        df.withColumn("rank", F.row_number().over(W.orderBy("k", "tb")).cast("long"))
-        .select("k", "tb", "rank")
-        .collect()
-    )
-    assert got == want
+def test_rank_leaves_no_persisted_rdd(spark):
+    """The sequence id caches the sorted RDD while it counts partition
+    sizes; the cache must be released when the query ends, so repeated
+    rank calls (collect, count, a noop write, a downstream aggregate)
+    leave the context's persistent RDDs unchanged."""
+    from currency_etl_spark.queries.extras import distributed_global_rank, distributed_ntile
+
+    df = spark.createDataFrame(
+        [(i % 13, i) for i in range(2000)], "k long, tb long"
+    ).repartition(4)
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    for _ in range(2):
+        distributed_global_rank(df, "k", "tb").collect()
+        distributed_global_rank(df, "k", "tb", with_total=True).count()
+        distributed_global_rank(df, "k", "tb").write.format("noop").mode("overwrite").save()
+        distributed_ntile(df, 4, F.col("k"), "tb", "q").groupBy("q").count().collect()
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) == before
 
 
 def test_hot_key_null_tiebreaks_fall_back_without_row_drop(spark):
-    """A hot key whose ties include NULL tiebreaks keeps the unsplittable
-    floor (a NULL never passes a between-range join), and no row drops:
-    every input row appears exactly once with plain ROW_NUMBER's rank
-    (NULLS FIRST tiebreak order)."""
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
+    """A hot key whose ties include NULL tiebreaks loses no row: every
+    input row appears exactly once with plain ROW_NUMBER's rank (NULLS
+    FIRST tiebreak order)."""
+    rows = [(7, i) for i in range(200)] + [(7, None), (7, None), (2, 1), (11, 1)]
     from currency_etl_spark.queries.extras import distributed_global_rank
 
-    rows = [(7, i) for i in range(200)] + [(7, None), (7, None), (2, 1), (11, 1)]
     df = spark.createDataFrame(rows, "k long, tb long").repartition(4)
-    got = distributed_global_rank(df, "k", "tb", max_split_rows=32)
-    assert got.count() == len(rows)
-    want = df.withColumn(
-        "rank", F.row_number().over(W.orderBy("k", "tb")).cast("long")
-    )
-    key = lambda r: (r["k"], -1 if r["tb"] is None else 0, r["tb"] or 0)  # noqa: E731
-    assert sorted(got.select("k", "tb", "rank").collect(), key=key) == sorted(
-        want.select("k", "tb", "rank").collect(), key=key
-    )
+    got = _ranks(distributed_global_rank(df, "k", "tb"))
+    want = _ranks(_row_number(df))
+    assert len(got) == len(rows)
+    # the two (7, NULL) rows tie on (key, tiebreak): either may take
+    # either rank, so compare the (key, tiebreak) at each rank
+    assert [r[:2] for r in got] == [r[:2] for r in want]
 
 
 def test_hot_key_single_tiebreak_value_is_terminal(spark):
-    """Degenerate: a hot key whose ties also tie on the tiebreak cannot
-    split at all (width-1 terminal) — ranks within the run are then
-    arbitrary but must still be a permutation of the ROW_NUMBER range,
-    and the cold keys' ranks must be exact."""
+    """Degenerate: a hot key whose ties also tie on the tiebreak — ranks
+    within the run are then arbitrary but must be a permutation of the
+    ROW_NUMBER range, and the other keys' ranks must be exact."""
     from currency_etl_spark.queries.extras import distributed_global_rank
 
     rows = [(5, 42)] * 100 + [(1, 1), (9, 9)]
     df = spark.createDataFrame(rows, "k long, tb long").repartition(4)
-    got = distributed_global_rank(df, "k", "tb", max_split_rows=10)
+    got = distributed_global_rank(df, "k", "tb")
     by_key = {}
     for r in got.collect():
         by_key.setdefault(r["k"], []).append(r["rank"])
@@ -390,81 +313,42 @@ def test_hot_key_single_tiebreak_value_is_terminal(spark):
 
 
 def test_hot_key_string_tiebreak_falls_back(spark):
-    """Non-integral tiebreaks can't range-split, so a hot key keeps the
-    floor — and the join must not build a tiebreak-vs-bounds comparison
-    at all (a string tiebreak would need a cross-type coercion there).
-    Ranks must equal plain ROW_NUMBER over (key, string tiebreak)."""
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
-    from currency_etl_spark.queries.extras import distributed_global_rank
-
+    """A STRING tiebreak orders a hot key's ties bytewise, exactly as
+    ROW_NUMBER over (key, string tiebreak) does."""
     rows = [(7, f"u{i:04d}") for i in range(120)] + [(1, "a"), (9, "z")]
     df = spark.createDataFrame(rows, "k long, tb string").repartition(4)
-    got = sorted(
-        distributed_global_rank(df, "k", "tb", max_split_rows=16)
-        .select("k", "tb", "rank")
-        .collect()
-    )
-    want = sorted(
-        df.withColumn("rank", F.row_number().over(W.orderBy("k", "tb")).cast("long"))
-        .select("k", "tb", "rank")
-        .collect()
-    )
-    assert got == want
+    _assert_rank_is_row_number(df)
 
 
 def test_tb_split_property_small_domain_keys(spark):
-    """Property: tiny key domains force every key hot at small caps —
-    the tb-split path must still assign exactly ROW_NUMBER() OVER
-    (ORDER BY key, tiebreak) for arbitrary key multisets."""
+    """Property: tiny key domains make every key hot — the rank must
+    still equal ROW_NUMBER() OVER (ORDER BY key, tiebreak) for arbitrary
+    key multisets."""
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
-    from currency_etl_spark.queries.extras import distributed_global_rank
-
     @given(
         keys=st.lists(st.integers(min_value=0, max_value=3), min_size=1, max_size=50),
-        cap=st.integers(min_value=1, max_value=6),
+        parts=st.integers(min_value=1, max_value=6),
     )
     @settings(derandomize=True, max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
-    def check(keys, cap):
+    def check(keys, parts):
         df = spark.createDataFrame(
             [(k, i * 7 % 1000) for i, k in enumerate(keys)], "k long, tb long"
-        )
-        got = sorted(
-            distributed_global_rank(df, "k", "tb", max_split_rows=cap)
-            .select("k", "tb", "rank")
-            .collect()
-        )
-        want = sorted(
-            df.withColumn(
-                "rank", F.row_number().over(W.orderBy("k", "tb")).cast("long")
-            )
-            .select("k", "tb", "rank")
-            .collect()
-        )
-        assert got == want
+        ).repartition(parts)
+        _assert_rank_is_row_number(df)
 
     check()
 
 
 def test_corpus_scale_skewed_ntile_matches_builtin(spark, sf_dir):
-    """Full-corpus skew rehearsal: per-customer order counts are a
+    """Corpus skew rehearsal: per-customer order counts are a
     small-domain, low-end-heavy key (many customers share frequency
-    1-3), so a small cap forces real tiebreak sub-splits. The
-    distributed ntile must equal SQL NTILE over (key, custkey) on the
-    actual corpus, and every tb segment must respect the cap."""
+    1-3). The distributed ntile must equal SQL NTILE over (key, custkey)
+    on the actual corpus."""
     from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
 
-    from currency_etl_spark.queries.extras import (
-        _tb_subsegments,
-        distributed_ntile,
-    )
+    from currency_etl_spark.queries.extras import distributed_ntile
     from currency_etl_spark.sources import table
 
     freq = (
@@ -472,12 +356,9 @@ def test_corpus_scale_skewed_ntile_matches_builtin(spark, sf_dir):
         .groupBy("o_custkey")
         .agg(F.count(F.lit(1)).alias("f"))
     )
-    cap = 8
     got = {
         r["o_custkey"]: r["q"]
-        for r in distributed_ntile(
-            freq, 4, F.col("f"), "o_custkey", "q", max_split_rows=cap
-        ).collect()
+        for r in distributed_ntile(freq, 4, F.col("f"), "o_custkey", "q").collect()
     }
     want = {
         r["o_custkey"]: r["q"]
@@ -486,103 +367,24 @@ def test_corpus_scale_skewed_ntile_matches_builtin(spark, sf_dir):
         ).collect()
     }
     assert got == want and len(got) > 0
-
-    # at least one frequency value is hot at this cap (sf0.001: ~20 customers share a frequency), and its tb
-    # segments are all within bounds
-    counts = {r["f"]: r["n"] for r in freq.groupBy("f").agg(F.count(F.lit(1)).alias("n")).collect()}
-    hot = [k for k, n in counts.items() if n > cap]
-    assert hot, f"corpus not skewed at cap={cap}? counts={counts}"
-    segs = _tb_subsegments(freq.withColumn("__k", F.col("f")), "__k", "o_custkey", hot, cap)
-    for k in hot:
-        assert sum(c for _, _, c in segs[k]) == counts[k]
-        assert all(c <= cap for _, _, c in segs[k])
+    # the corpus really is skewed: some frequency is shared by many
+    # customers (sf0.001: ~20 share one)
+    n_max = freq.groupBy("f").count().agg(F.max("count")).collect()[0][0]
+    assert n_max > 8, n_max
 
 
 def test_adaptive_rank_null_block_segments_on_tiebreak(spark):
-    """A majority-NULL key whose block
-    exceeds the cap must range-split on the integer TIEBREAK through
-    _tb_subsegments — the rank path's last single-task floor — while
-    assigning exactly the ranks of ROW_NUMBER() OVER (ORDER BY k, tb)
-    (NULL keys first). A non-integral tiebreak keeps the documented
-    single-task fallback with no row loss."""
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
-    from currency_etl_spark.queries.extras import (
-        _tb_subsegments,
-        distributed_global_rank,
-    )
-
+    """A majority-NULL key ranks first, ordered by its tiebreak, and the
+    NULL block is no single task's sort: it spreads over several range
+    partitions by the tiebreak. A DOUBLE tiebreak ranks the same."""
     rows = [(None, i) for i in range(900)]
     rows += [(int(i % 37), 1000 + i) for i in range(100)]
     df = spark.createDataFrame(rows, "k long, tb long").repartition(8)
-    by_tb = lambda r: r["tb"]  # noqa: E731 — None keys break tuple sort
-    want = sorted(
-        df.withColumn("rank", F.row_number().over(W.orderBy("k", "tb")).cast("long"))
-        .select("k", "tb", "rank")
-        .collect(),
-        key=by_tb,
-    )
-    got = sorted(
-        distributed_global_rank(df, "k", "tb", max_split_rows=128)
-        .select("k", "tb", "rank")
-        .collect(),
-        key=by_tb,
-    )
-    assert got == want
-    # the device really splits: every NULL segment is cap-bounded and the
-    # partition covers the whole block
-    segs = _tb_subsegments(df.filter(F.col("k").isNull()), "k", "tb", [None], 128)[None]
-    assert len(segs) >= 2, "NULL block did not split"
-    assert all(c <= 128 for _, _, c in segs), segs
-    assert sum(c for _, _, c in segs) == 900
-    # non-integral tiebreak: single-task fallback, ranks still exact
+    got = _assert_rank_is_row_number(df)
+    assert len(_partitions_by_key(df)[None]) >= 2
     dfd = df.withColumn("tb", F.col("tb").cast("double"))
-    gotd = sorted(
-        distributed_global_rank(dfd, "k", "tb", max_split_rows=128)
-        .select("k", "tb", "rank")
-        .collect(),
-        key=by_tb,
-    )
-    assert [(r["k"], int(r["tb"]), r["rank"]) for r in gotd] == [
-        (r["k"], r["tb"], r["rank"]) for r in want
-    ]
-
-
-def test_tb_subsegments_extreme_tiebreak_span(spark):
-    """r8 overflow armor: a hot key (and the NULL-key block) whose
-    TIEBREAK values span both int64 ends must still split and rank
-    exactly — `tb - lo` in the split expression would overflow int64
-    without the driver-side sign-halving of oversized intervals."""
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
-    from currency_etl_spark.queries.extras import distributed_global_rank
-
-    lo, hi = -(2**63), 2**63 - 1
-    # hot key 5: 24 ties spread across the whole int64 tiebreak domain
-    rows = [(5, lo + i * (hi // 12)) for i in range(24)]
-    rows += [(5, hi - i) for i in range(4)]
-    # NULL-key block: 20 rows, tiebreaks at both extremes
-    rows += [(None, lo + i * (hi // 9)) for i in range(18)]
-    rows += [(None, hi), (None, hi - 7)]
-    # background keys so buckets exist
-    rows += [(i, 10**6 + i) for i in range(10)]
-    df = spark.createDataFrame(rows, "k long, tb long").repartition(4)
-    by_tb = lambda r: (r["tb"], r["rank"])  # noqa: E731
-    got = sorted(
-        distributed_global_rank(df, "k", "tb", max_split_rows=8)
-        .select("k", "tb", "rank")
-        .collect(),
-        key=by_tb,
-    )
-    want = sorted(
-        df.withColumn("rank", F.row_number().over(W.orderBy("k", "tb")).cast("long"))
-        .select("k", "tb", "rank")
-        .collect(),
-        key=by_tb,
-    )
-    assert got == want
+    gotd = _assert_rank_is_row_number(dfd)
+    assert [(k, int(t), r) for k, t, r in gotd] == got
 
 
 def test_deciles_telescoping_matches_per_row_lag(spark):
@@ -636,105 +438,22 @@ def test_deciles_telescoping_matches_per_row_lag(spark):
         assert got == want, (n, got[:3], want[:3])
 
 
-def test_string_tiebreak_prefix_is_order_preserving(spark):
-    """The 60-bit byte-prefix order image (_tb_order_expr) must be
-    MONOTONE in Spark's bytewise string order — including the short-
-    string pad case ('az' < 'b' must survive the mapping) and multibyte
-    UTF-8 — since segment boundaries in the image must never split a
-    string-ordered run out of order."""
-    from pyspark.sql import functions as F
-
-    from currency_etl_spark.queries.extras import _tb_order_expr
-
-    vals = ["", "a", "az", "b", "ba", "zzzzzzzzzzzzzzzz", "zzzzzzzzzzzzzzzz!",
-            "Ω", "é", "~", "0", "00", "0a", "aaaaaaaa", "aaaaaaab"]
-    df = spark.createDataFrame([(v,) for v in vals], "tb string")
-    tbx = _tb_order_expr(df, "tb")
-    rows = df.select("tb", F.expr(tbx).alias("p")).collect()
-    by_str = [r["p"] for r in sorted(rows, key=lambda r: r["tb"].encode("utf-8"))]
-    assert by_str == sorted(by_str), list(zip(sorted(v.encode() for v in vals), by_str))
-    # non-splittable types still return None (the documented floor)
-    dfd = df.select(F.lit(1.5).alias("tb"))
-    assert _tb_order_expr(dfd, "tb") is None
-
-
 def test_adaptive_rank_string_tiebreak_splits(spark):
-    """A majority-NULL key with a STRING
-    tiebreak under the cap must range-split on the tiebreak's byte-prefix
-    order image — no partitionBy(lit(0)) single-task fallback — while
-    assigning exactly ROW_NUMBER() OVER (ORDER BY k, tb)'s ranks; the
-    same applies to a hot non-null key with string ties."""
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
+    """STRING tiebreaks: a majority-NULL key block and a hot non-null key
+    with unique string ties rank exactly as ROW_NUMBER() OVER (ORDER BY
+    k, tb), and both runs spread over several range partitions; NULL
+    string tiebreaks lose no row."""
+    from currency_etl_spark.queries.extras import distributed_global_rank
 
-    from currency_etl_spark.queries.extras import (
-        _tb_order_expr,
-        _tb_subsegments,
-        distributed_global_rank,
-    )
-
-    # majority-NULL key block (900 rows) + a hot non-null key (500 rows
-    # of key 7) + cold keys, all with unique string tiebreaks
     rows = [(None, f"n{i:05d}x") for i in range(900)]
     rows += [(7, f"h{i:05d}") for i in range(500)]
     rows += [(int(i % 11) + 100, f"c{i:04d}") for i in range(50)]
     df = spark.createDataFrame(rows, "k long, tb string").repartition(8)
-    by_tb = lambda r: r["tb"]  # noqa: E731 — None keys break tuple sort
-    want = sorted(
-        df.withColumn("rank", F.row_number().over(W.orderBy("k", "tb")).cast("long"))
-        .select("k", "tb", "rank")
-        .collect(),
-        key=by_tb,
-    )
-    got = sorted(
-        distributed_global_rank(df, "k", "tb", max_split_rows=128)
-        .select("k", "tb", "rank")
-        .collect(),
-        key=by_tb,
-    )
-    assert got == want
-    # both the NULL block and the hot key really split, cap-bounded
-    tbx = _tb_order_expr(df, "tb")
-    nsegs = _tb_subsegments(
-        df.filter(F.col("k").isNull()), "k", "tb", [None], 128, order_expr=tbx
-    )[None]
-    hsegs = _tb_subsegments(df, "k", "tb", [7], 128, order_expr=tbx)[7]
-    for segs, n in ((nsegs, 900), (hsegs, 500)):
-        assert len(segs) >= 2, "string tiebreak block did not split"
-        assert all(c <= 128 for _, _, c in segs), segs
-        assert sum(c for _, _, c in segs) == n
-    # NULL-tiebreak ties keep the fallback with no row loss
+    _assert_rank_is_row_number(df)
+    parts = _partitions_by_key(df)
+    assert len(parts[None]) >= 2 and len(parts[7]) >= 2, parts
     df2 = spark.createDataFrame(
         [(None, None), (None, "a"), (1, "b")], "k long, tb string"
     )
-    got2 = distributed_global_rank(df2, "k", "tb", max_split_rows=1).collect()
+    got2 = distributed_global_rank(df2, "k", "tb").collect()
     assert sorted(r["rank"] for r in got2) == [1, 2, 3]
-
-
-def test_string_prefix_monotone_property(spark):
-    """Hypothesis sweep of the r9 byte-prefix mapping: for ANY pair of
-    strings, Spark-order(s1, s2) must never contradict prefix-order —
-    the mapping is monotone (ties allowed when 7.5-byte prefixes agree).
-    Checked in pure Python against the exact same arithmetic the SQL
-    performs (hex, rpad to 15, base-16), which the engine-parity test
-    above already ties to the Spark expression."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    def prefix60(s: str) -> int:
-        h = s.encode("utf-8").hex().upper()[:15]
-        return int(h.ljust(15, "0"), 16)
-
-    @given(st.text(max_size=24), st.text(max_size=24))
-    @settings(derandomize=True, max_examples=300, deadline=None)
-    def check(s1, s2):
-        b1, b2 = s1.encode("utf-8"), s2.encode("utf-8")
-        p1, p2 = prefix60(s1), prefix60(s2)
-        if b1 < b2:
-            assert p1 <= p2, (s1, s2)
-        elif b1 > b2:
-            assert p1 >= p2, (s1, s2)
-        else:
-            assert p1 == p2
-
-    check()

@@ -330,24 +330,39 @@ def test_bigram_surprisal_two_content_exchanges_pruned_scan(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" in p
 
 
+def _rank_exchanges(p: str) -> "list[str]":
+    """Partitioning of the first exchange below each
+    AttachDistributedSequence (the sequence-id rank) in a formatted plan.
+    The rank's child is a linear Project/Sort/Exchange chain, so the next
+    Exchange line in the tree is the one it reads."""
+    tree = p.split("\n\n", 1)[0].splitlines()
+    out = []
+    for i, line in enumerate(tree):
+        if "AttachDistributedSequence" not in line:
+            continue
+        for below in tree[i + 1 :]:
+            m = re.search(r"Exchange \((\d+)\)", below)
+            if m:
+                args = re.search(
+                    rf"\({m.group(1)}\) Exchange\nInput \[\d+\]: \[[^\]]*\]\n"
+                    r"Arguments: (\w+)",
+                    p,
+                )
+                out.append(args.group(1))
+                break
+    return out
+
+
 def test_zorder_rank_windows_are_partitioned(spark, sf_dir):
-    """The only per-row windows in the z-order audit must be partitioned by
-    the adaptive range segment (__sid) — an unpartitioned row_number over
-    the fact relation is the single-task bottleneck
-    distributed_global_rank exists to avoid."""
+    """Both z-order audit layouts rank the fact relation through a
+    range-partitioned sort (a rangepartitioning exchange under each
+    sequence-id rank) — never an unpartitioned row_number window, the
+    single-task bottleneck distributed_global_rank exists to avoid."""
     from currency_etl_spark.queries.extras import events_zorder_audit
 
     p = plan_of(events_zorder_audit(spark, sf_dir))
-    rn_windows = re.findall(r"row_number\(\) windowspecdefinition\(([^)]*)\)", p)
-    assert rn_windows, p
-    for spec in rn_windows:
-        head = spec.split(",")[0].strip()
-        # __sid = the segmented path; __rank_bucket = the cap-gated
-        # log-bucket fast path (the fused histogram PROVED every bucket
-        # fits max_split_rows before choosing it — a bucket over the cap
-        # reverts the plan to the __sid form). Both are partitioned,
-        # cap-bounded sorts — never a single-task global window.
-        assert head.startswith("__sid") or head.startswith("__rank_bucket"), spec
+    assert _rank_exchanges(p) == ["rangepartitioning"] * 2, p
+    assert "row_number()" not in p
 
 
 def test_market_basket_topk_and_broadcast_prefilter(spark, sf_dir):
@@ -413,14 +428,11 @@ def test_stats_trio_broadcast_only_no_fact_reshuffle(spark, sf_dir):
 
 
 def test_ntile_entries_have_no_unpartitioned_fact_window(spark, sf_dir):
-    """order_value_deciles, customer_rfm and
-    customers_rfm_segments must never funnel the fact/customer relation
-    through an unpartitioned ORDER BY window. After the
-    distributed_ntile rewiring, every per-row window is partitioned by
-    the range split (__pid); the only legitimately unpartitioned windows
-    are the 32-row boundary/offset cumsums, which order BY __pid itself
-    — so an unpartitioned windowspec whose first sort column is not
-    __pid is a regression."""
+    """The rank and ntile entries never funnel the fact/customer relation
+    through an unpartitioned ORDER BY window: every rank is a sequence id
+    over a rangepartitioning exchange, ntile() is gone (the closed-form
+    bucket replaces it), and the only unpartitioned windows order the
+    ≤10-row decile curve."""
     from currency_etl_spark.queries.extras import (
         customer_rfm,
         customers_rfm_segments,
@@ -430,33 +442,21 @@ def test_ntile_entries_have_no_unpartitioned_fact_window(spark, sf_dir):
         parts_revenue_pareto,
     )
 
-    for fn in (
-        order_value_deciles,
-        customer_rfm,
-        customers_rfm_segments,
-        customers_segment_migration,
-        customers_spend_gini,
-        parts_revenue_pareto,
+    for fn, n_ranks in (
+        (order_value_deciles, 1),
+        (customer_rfm, 3),
+        (customers_rfm_segments, 3),
+        (customers_segment_migration, 2),
+        (customers_spend_gini, 1),
+        (parts_revenue_pareto, 1),
     ):
         p = plan_of(fn(spark, sf_dir))
-        # ntile() itself is gone — replaced by the closed-form bucket
         assert "ntile(" not in p, fn.__name__
-        specs = re.findall(r"windowspecdefinition\(([^)]*)\)", p)
-        # entries whose ranked base is checkpointed read ExistingRDD (the
-        # windows already ran inside the checkpoint) — window-free is
-        # fine there; everywhere else the specs must be present (deciles
-        # since the r8 rewire plans its rank window + 10-row lag inline)
-        assert specs or "ExistingRDD" in p, fn.__name__
-        for spec in specs:
+        assert _rank_exchanges(p) == ["rangepartitioning"] * n_ranks, fn.__name__
+        for spec in re.findall(r"windowspecdefinition\(([^)]*)\)", p):
             head = spec.split(",")[0]
-            unpartitioned = " ASC" in head or " DESC" in head
-            if unpartitioned:
-                # pareto's cumulative-share window orders the 10-row
-                # decile curve — bounded by construction
-                assert "__pid" in head or head.startswith("decile#"), (
-                    fn.__name__,
-                    spec,
-                )
+            if " ASC" in head or " DESC" in head:
+                assert head.startswith("decile#"), (fn.__name__, spec)
 
 
 def test_equidepth_histogram_distributed_boundaries(spark, sf_dir):

@@ -7,9 +7,9 @@ for the patterns that kill a plan at 100 TB —
   * ``BatchEvalPython`` (a row-at-a-time Python UDF on the hot path —
     Arrow-batched operators are the only allowed Python data path), and
   * an unpartitioned ``ORDER BY`` window over an unbounded relation
-    (one task sorts everything). The repo's rule: per-row windows over
-    fact/document/customer-scale relations go through the __pid
-    range-split machinery (distributed_global_rank / distributed_ntile);
+    (one task sorts everything). The repo's rule: per-row ranks over
+    fact/document/customer-scale relations go through the range-
+    partitioned sort (distributed_global_rank / distributed_ntile);
     a global window is legitimate ONLY over a relation whose size is
     bounded by something other than the data volume (vocab caps, days,
     months, tile counts). Those are enumerated below WITH their bound —
@@ -82,7 +82,7 @@ ALLOWED_GLOBAL_WINDOWS = {
         "per-decile rollup",
         "the telescoped sum_steps lag runs on the ≤10-row decile curve; "
         "the order ranking itself goes through distributed_global_rank "
-        "(no orders-sized window or self-join remains — r8 rewire)",
+        "(no orders-sized window or self-join remains)",
     ),
     "parts_revenue_pareto": (
         "per-decile revenue rollup",
@@ -126,9 +126,8 @@ def test_global_windows_are_enumerated_and_bounded(plans):
         for s in re.findall(r"windowspecdefinition\(([^)]*)\)", p):
             head = s.split(",")[0]
             # partitioned windows put partition cols first; an ORDER BY
-            # column leads only when the spec is unpartitioned. __pid is
-            # the range-split machinery's own (legitimate) 32-row cumsum.
-            if (" ASC" in head or " DESC" in head) and "__pid" not in head:
+            # column leads only when the spec is unpartitioned
+            if " ASC" in head or " DESC" in head:
                 bad.add(head.strip())
         if bad and name not in ALLOWED_GLOBAL_WINDOWS:
             offenders[name] = sorted(bad)
@@ -210,8 +209,7 @@ def test_allowlist_entries_still_use_global_windows(plans):
     for name in ALLOWED_GLOBAL_WINDOWS:
         p = plans[name]
         has = any(
-            (" ASC" in s.split(",")[0] or " DESC" in s.split(",")[0])
-            and "__pid" not in s.split(",")[0]
+            " ASC" in s.split(",")[0] or " DESC" in s.split(",")[0]
             for s in re.findall(r"windowspecdefinition\(([^)]*)\)", p)
         )
         if not has:

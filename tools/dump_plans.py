@@ -228,14 +228,11 @@ HEADLINERS = {
         "BroadcastNestedLoopJoin of a 1-row relation."
     ),
     "events_zorder_audit": (
-        "Z-order layout audit. Check: every per-row row_number window is "
-        "PARTITIONED — by __rank_bucket (the fused histogram proved every "
-        "log-bucket under the cap, so ranks are driver-known bucket "
-        "offsets + per-bucket local windows, the shape at these SFs) or, "
-        "once a bucket exceeds the cap, by the refined segment __sid "
-        "entering via BroadcastHashJoin; either way segment/bucket count "
-        "scales with |rows|/cap and no unpartitioned window ever sees "
-        "the fact relation."
+        "Z-order layout audit. Check: each layout's rank is "
+        "AttachDistributedSequence over a Sort fed by a rangepartitioning "
+        "Exchange on (key, event_id) — the range partitioner spreads the "
+        "fact relation over parallel sort tasks; no row_number window "
+        "ever sees the fact relation."
     ),
     "docs_inverted_index": (
         "Inverted-index build. Check: one exchange to (doc, term) tf "
@@ -283,20 +280,18 @@ HEADLINERS = {
         "Segment migration matrix. Check: each half is one partial-agg "
         "pass over orders into a checkpointed customers-sized base; the "
         "data-derived midpoint enters as a 1-row broadcast; the quartile "
-        "is distributed_ntile on the default skew-adaptive path — every "
-        "per-row row_number Window partitions on __rank_bucket (cap-"
-        "proven log-buckets with driver-known offsets; over-cap buckets "
-        "revert to __sid segments via BroadcastHashJoin); the halves "
-        "align via FULL OUTER SortMergeJoin on custkey (correctly NOT "
-        "broadcastable)."
+        "is distributed_ntile — AttachDistributedSequence over a "
+        "rangepartitioning Exchange + Sort, the row count a broadcast "
+        "1-row aggregate; the halves align via FULL OUTER SortMergeJoin "
+        "on custkey (correctly NOT broadcastable)."
     ),
     "order_value_deciles": (
-        "Distributed ntile with TELESCOPED lag/lead (r8). Check: ntile() "
-        "absent (closed-form bucket from the rank); exactly ONE "
-        "orders-sized Window — the skew-bounded rank, partitioned on "
-        "__rank_bucket — feeding a min_by/max_by decile aggregate; the "
-        "only other window is the 10-row finishing lag ordered by "
-        "decile; NO self-joins and NO checkpoint (per-row steps over a "
+        "Distributed ntile with TELESCOPED lag/lead. Check: ntile() "
+        "absent (closed-form bucket from the rank); the orders-sized "
+        "rank is AttachDistributedSequence over a rangepartitioning "
+        "Exchange + Sort, feeding a min_by/max_by decile aggregate; the "
+        "only window is the 10-row finishing lag ordered by decile; NO "
+        "self-joins and NO checkpoint (per-row steps over a "
         "rank-contiguous decile telescope to boundary differences)."
     ),
     "dedup_semantic": (
@@ -316,23 +311,19 @@ HEADLINERS = {
         "stream-static joins against the stored index, no state store."
     ),
     "customers_spend_gini": (
-        "Closed-form Gini over the distributed rank (skew-adaptive "
-        "path). Check: the per-row row_number Window partitions on "
-        "__rank_bucket — cap-proven log-buckets of the 1e4-quantized "
-        "spend with driver-known offsets (an over-cap bucket reverts to "
-        "__sid segments via BroadcastHashJoin); no unpartitioned window "
-        "anywhere; the rank-weighted sum folds as a plain partial/final "
-        "HashAggregate to one row."
+        "Closed-form Gini over the distributed rank. Check: the rank is "
+        "AttachDistributedSequence over a rangepartitioning Exchange + "
+        "Sort of the 1e4-quantized spend; no window anywhere; the "
+        "rank-weighted sum folds as a plain partial/final HashAggregate "
+        "to one row."
     ),
     "parts_revenue_pareto": (
-        "Pareto curve over the distributed rank (skew-adaptive path). "
-        "Check: the part-revenue ranking Window partitions on "
-        "__rank_bucket — cap-proven log-buckets of the NEGATED 1e4-"
-        "quantized revenue (DESC without a descending global sort), "
-        "driver-known offsets, over-cap buckets reverting to __sid "
-        "segments; the row count is a driver-known literal (__ntot), "
-        "the grand total a 1-row BroadcastNestedLoopJoin; the only "
-        "ordered unpartitioned window runs on the 10-row decile curve."
+        "Pareto curve over the distributed rank. Check: the part-revenue "
+        "rank is AttachDistributedSequence over a rangepartitioning "
+        "Exchange + Sort of the NEGATED 1e4-quantized revenue; the row "
+        "count (__ntot) and the grand total enter as 1-row broadcasts; "
+        "the only ordered unpartitioned window runs on the 10-row decile "
+        "curve."
     ),
     "docs_shingle_novelty": (
         "Shingle novelty. Check: NO join at all since r16 — the first-"
