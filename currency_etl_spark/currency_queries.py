@@ -9,10 +9,11 @@ aggregates answer the average, the last rate, the 365-day range, the day
 count and the month change. The window sorts each currency oldest first,
 so AVG adds the rates in date order: on the date-sorted file
 `ParquetUpsertTable` writes, the order the reference's AVG query reads
-them in, so both give the same last digit. The driver spreads the
-one-row-per-currency result over the reference's {query_name: [row_dict]}
-shape, empty and NULL rows included. The 11 SQL strings live in the
-tests, as the oracle this query must match.
+them in, so both give the same last digit. `currency_groups` collects
+the one-row-per-currency result; `answers` spreads it over the
+reference's {query_name: [row_dict]} shape, empty and NULL rows
+included. The 11 SQL strings live in the tests, as the oracle this query
+must match.
 
 `today` replaces NOW() so results are deterministic (SURVEY §7.3).
 """
@@ -41,23 +42,25 @@ _PER_CURRENCY = """
     GROUP BY cc
 """
 
+Today = str | _dt.date | None
+Answers = dict[str, list[dict[str, Any]]]
+
 # A currency with no rows: the reference's aggregates read NULL and COUNT 0.
 _NO_ROWS = {"avg": None, "min_year": None, "max_year": None, "days": 0,
             "first_date": None, "last_date": None}
 
 
-def run_queries(
-    spark: SparkSession,
-    rates: DataFrame,
-    today: str | _dt.date | None = None,
-) -> dict[str, list[dict[str, Any]]]:
-    """The 11 answers as {query_name: [row_dict, ...]}, keyed, ordered and
-    shaped like analyze.py:123-133's fetch loop."""
-    if today is None:
-        today = _dt.date.today()
-    sql = _PER_CURRENCY.format(today=today)
-    per_cc = {r["cc"]: r.asDict() for r in spark.sql(sql, rates=rates).collect()}
-    out: dict[str, list[dict[str, Any]]] = {}
+def currency_groups(spark: SparkSession, rates: DataFrame, today: Today = None) -> dict:
+    """The grouped query's row per `cc` group of `rates` (NULL `cc`
+    included) as {cc: row_dict}; `days` is the group's row count."""
+    sql = _PER_CURRENCY.format(today=today or _dt.date.today())
+    return {r["cc"]: r.asDict() for r in spark.sql(sql, rates=rates).collect()}
+
+
+def answers(per_cc: dict) -> Answers:
+    """`currency_groups`' rows as the 11 answers, {query_name: [row_dict]},
+    keyed, ordered and shaped like analyze.py:123-133's fetch loop."""
+    out: Answers = {}
     for cur in ("usd", "eur"):
         r = per_cc.get(cur.upper())
         g = r or _NO_ROWS
@@ -72,3 +75,8 @@ def run_queries(
         out[f"{cur}_change_month"] = [{f"diff_{cur}": r["diff"]}] if r else []
     out["unique_currencies"] = [{"num_currencies": sum(cc is not None for cc in per_cc)}]
     return out
+
+
+def run_queries(spark: SparkSession, rates: DataFrame, today: Today = None) -> Answers:
+    """The 11 answers over `rates`, from one grouped query."""
+    return answers(currency_groups(spark, rates, today))

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+HORIZON = 5  # forecast days per currency, the reference's flat 5-day forecast
+
 
 def rolling_avg(rates: DataFrame, window: int = 7) -> DataFrame:
     """History + per-currency trailing mean (dags/currency_etl.py:41)."""
@@ -26,12 +28,13 @@ def rolling_avg(rates: DataFrame, window: int = 7) -> DataFrame:
     return rates.withColumn("avg_rate", F.avg("rate").over(w))
 
 
-def forecast_rates(rates: DataFrame, window: int = 7, horizon: int = 5) -> DataFrame:
+def forecast_rates(rates: DataFrame, window: int = 7, horizon: int = HORIZON) -> DataFrame:
     """Flat `horizon`-day forecast per currency.
 
     Returns (cc, exchangedate, rate, avg_rate, is_forecast): history rows
     carry rate + rolling avg; forecast rows carry rate=null and
-    avg_rate=last_avg — the union the reference plots.
+    avg_rate=last_avg — the union the reference plots. Every row of
+    `rates` plus `horizon` rows per `cc` group (NULL `cc` included).
     """
     hist = rolling_avg(rates, window)
     w_desc = W.partitionBy("cc").orderBy(F.desc("exchangedate"))

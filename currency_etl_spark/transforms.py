@@ -7,9 +7,11 @@ Reference semantics (src/transform.py:17-30, SURVEY.md §2.3):
   P4 keep cc ∈ allowed set (default USD/EUR)
 
 All four are Catalyst expressions: the projection prunes columns at the
-scan, the IN-filter pushes down, the derivation folds into codegen. The
-strict-parse contract is kept by counting unparsable rows (Spark's
-`to_date` yields null under ANSI-off) and raising like pandas would.
+scan, the IN-filter pushes down, the derivation folds into codegen, and
+the result is a plan with no job of its own. A row that fails P2 carries
+a NULL exchangedate; the load's NOT NULL key (cc, exchangedate) rejects
+it with `StrictParseError` and the count of such rows, before the
+warehouse changes (warehouse.ParquetUpsertTable.merge_upsert).
 """
 
 from __future__ import annotations
@@ -17,20 +19,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from currency_etl_spark.warehouse import NullKeyError
+
 DEFAULT_CURRENCIES = ("USD", "EUR")
 DATE_FMT = "dd.MM.yyyy"
 
-
-class StrictParseError(ValueError):
-    """Raised when exchangedate does not match dd.MM.yyyy — parity with the
-    reference's pandas `pd.to_datetime(..., format=...)` raising behavior
-    (src/transform.py:25)."""
+#: Raised when exchangedate does not match dd.MM.yyyy — parity with the
+#: reference's pandas `pd.to_datetime(..., format=...)` raising behavior
+#: (src/transform.py:25). A failed parse is a NULL key, so the load raises it.
+StrictParseError = NullKeyError
 
 
 def transform_rates(
     raw: DataFrame,
     currencies: tuple[str, ...] = DEFAULT_CURRENCIES,
-    strict: bool = True,
     keep: tuple[str, ...] = (),
 ) -> DataFrame:
     """raw NBU records → processed rates table.
@@ -39,19 +41,12 @@ def transform_rates(
     `keep` carries pipeline bookkeeping columns (e.g. ingest ordering)
     through the projection.
     """
-    out = (
+    return (
         # P2 uses try_to_date: under Spark 4's default ANSI mode a plain
         # to_date throws mid-task on the first bad row; try_to_date yields
-        # null so strict mode can count and report all bad rows itself.
+        # null, so the load can count and report all bad rows.
         raw.select("cc", "rate", "txt", "exchangedate", *keep)  # P1
         .withColumn("exchangedate", F.try_to_date("exchangedate", DATE_FMT))  # P2
         .withColumn("rate_per_100", F.col("rate") * F.lit(100))  # P3
         .filter(F.col("cc").isin(*currencies))  # P4
     )
-    if strict:
-        bad = out.filter(F.col("exchangedate").isNull()).count()
-        if bad:
-            raise StrictParseError(
-                f"{bad} row(s) failed strict {DATE_FMT} parse (reference raises here)"
-            )
-    return out

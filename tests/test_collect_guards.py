@@ -18,10 +18,9 @@ PACKAGE = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__)
 #: (file relative to the package, enclosing function) → why it's bounded.
 ALLOWED_SITES = {
     ("__main__.py", "main"): "CLI report rows — reference-scale (analyze.py parity), not a data-plane operator",
-    ("currency_queries.py", "run_queries"): "one row per currency from a single grouped query",
+    ("currency_queries.py", "currency_groups"): "one row per currency from a single grouped query",
     ("forecast.py", "render_png"): "chart sink renders a days-sized series — matplotlib needs local arrays",
     ("notify.py", "send_report"): "telegram message rows — reference-scale report output",
-    ("pipeline.py", "backfill"): "distinct input-file list — O(files), one per ingest day",
     ("sinks.py", "read_latest_silver"): "1-row max(partition) lookup",
     ("warehouse.py", "merge_upsert"): "distinct touched-partition list for pruned dynamic overwrite — O(partitions)",
     ("streaming/jobs.py", "_staged_late_dir"): "fixture staging for the late-replay landing dir (test scaffolding, built once per corpus version), not the streaming operator",

@@ -52,11 +52,55 @@ def test_transform_strict_parse_raises(spark, tmp_path):
     recs[0]["exchangedate"] = "2024-01-01"  # wrong format (ISO, not dd.MM.yyyy)
     path = write_raw_json(recs, str(tmp_path / "bad" / "response.json"))
     raw = read_nbu_json(spark, path)
-    with pytest.raises(StrictParseError):
-        transform_rates(raw)
-    # non-strict mirrors Spark's ANSI-off null behavior
-    lax = transform_rates(raw, strict=False)
+    # the transform mirrors Spark's ANSI-off null behavior...
+    lax = transform_rates(raw)
     assert lax.filter("exchangedate IS NULL").count() == 1
+    # ...and the load's NOT NULL key raises with the row count, writing nothing
+    t = ParquetUpsertTable(spark, str(tmp_path / "wh"), ["cc", "exchangedate"])
+    with pytest.raises(StrictParseError, match=r"^1 row\(s\) with a NULL key"):
+        t.merge_upsert(lax)
+    assert not t.exists()
+
+
+def _snapshot(path: str) -> dict[str, bytes]:
+    """Every file under ``path`` (data, markers, checksums) by content."""
+    out = {}
+    for root, _, files in os.walk(path):
+        for f in files:
+            full = os.path.join(root, f)
+            with open(full, "rb") as fh:
+                out[os.path.relpath(full, path)] = fh.read()
+    return out
+
+
+def _bad_landing(path: str) -> str:
+    """Days 40-41 with two USD/EUR records, and one GBP record (filtered
+    out before the load), whose exchangedate fails the dd.MM.yyyy parse."""
+    recs = nbu_records(days=42)[-8:]  # USD, EUR, GBP, PLN per day
+    recs[0]["exchangedate"] = "2024-02-10"  # USD
+    recs[5]["exchangedate"] = "11/02/2024"  # EUR
+    recs[6]["exchangedate"] = "bad"  # GBP
+    return write_raw_json(recs, path)
+
+
+def test_bad_landing_raises_and_leaves_warehouse_unchanged(spark, tmp_path):
+    """A bad landing through `run_pipeline` and through `backfill` raises
+    StrictParseError with its row count, leaves every warehouse file
+    byte-identical and leaves no temp directory behind."""
+    hist = tmp_path / "hist"
+    write_raw_json(nbu_records(days=40), str(hist / "exchange_2024-01-01.json"))
+    wh = str(tmp_path / "wh")
+    assert backfill(spark, str(hist / "exchange_*.json"), wh) == 80
+    before = _snapshot(wh)
+
+    bad = _bad_landing(str(hist / "exchange_2024-02-10.json"))
+    with pytest.raises(StrictParseError, match=r"^2 row\(s\) with a NULL key"):
+        run_pipeline(spark, bad, wh, today=TODAY)
+    assert _snapshot(wh) == before
+    with pytest.raises(StrictParseError, match=r"^2 row\(s\) with a NULL key"):
+        backfill(spark, str(hist / "exchange_*.json"), wh)
+    assert _snapshot(wh) == before
+    assert sorted(os.listdir(tmp_path)) == ["hist", "wh"]  # no wh__tmp_* left
 
 
 # -- warehouse upsert (K3) ---------------------------------------------------
@@ -146,20 +190,22 @@ def test_range_year_window_excludes_old(spark):
     assert res["usd_range_year"][0]["max_usd"] == max(in_window)
 
 
+_D = [START + _dt.timedelta(days=i) for i in range(4)]
+_NULL_ROWS = [
+    (None, 1.0, "x", _D[0], 100.0),
+    ("USD", 2.0, "x", _D[0], 200.0),
+    ("USD", None, "x", _D[3], None),
+    ("USD", 3.0, "x", None, 300.0),
+    ("EUR", 4.0, "x", _D[1], 400.0),
+]
+
+
 def test_queries_match_reference_sql_on_null_and_empty_warehouses(spark):
     """NULL cc is not a currency, a NULL rate on the newest row makes the
     last rate and the month change NULL, a NULL date sorts after every
     day, and an empty warehouse gives NULL/0 rows and empty lists — all as
     the reference's 11 SQL strings answer them."""
-    d = [START + _dt.timedelta(days=i) for i in range(4)]
-    nulls = [
-        (None, 1.0, "x", d[0], 100.0),
-        ("USD", 2.0, "x", d[0], 200.0),
-        ("USD", None, "x", d[3], None),
-        ("USD", 3.0, "x", None, 300.0),
-        ("EUR", 4.0, "x", d[1], 400.0),
-    ]
-    for rows in (nulls, []):
+    for rows in (_NULL_ROWS, []):
         df = spark.createDataFrame(rows, _SCHEMA)
         assert_same_answers(
             run_queries(spark, df, today=TODAY), oracle_queries(spark, df, TODAY)
@@ -252,6 +298,49 @@ def test_pipeline_end_to_end_and_idempotent(spark, tmp_path):
 
     out2 = run_pipeline(spark, raw, wh, reports_dir=reports, today=TODAY)  # rerun
     assert out2["report"] == out1["report"]
+
+
+def test_pipeline_op_runs_at_most_five_jobs(spark, tmp_path):
+    """A warm daily op runs only the jobs that make its outputs: the
+    MERGE's schema read of the current side, its shuffle and write, and
+    the analyze scan's two — no check, count or read-back job."""
+    raw = write_raw_json(nbu_records(days=40), str(tmp_path / "raw" / "response.json"))
+    wh = str(tmp_path / "wh")
+    reports = str(tmp_path / "reports")
+    run_pipeline(spark, raw, wh, reports_dir=reports, today=TODAY)
+    sc = spark.sparkContext
+    group = "test-pipeline-op-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        out = run_pipeline(spark, raw, wh, reports_dir=reports, today=TODAY)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(jobs) <= 5, jobs
+    assert out["forecast_rows"] == 80 + 2 * 5
+
+
+_GBP_ROWS = [(cc, rate_for(cc, d), "x", START + _dt.timedelta(days=d), rate_for(cc, d) * 100)
+             for cc in ("USD", "EUR", "GBP") for d in range(35)]
+
+
+@pytest.mark.parametrize("stored", ["nulls", "empty", "gbp"])
+@pytest.mark.parametrize("landed", [("USD", "EUR"), ("GBP",)])
+def test_forecast_rows_equals_forecast_count(spark, tmp_path, stored, landed):
+    """`forecast_rows`, derived from the analyze scan's group counts, is
+    the forecast's row count on a warehouse holding a NULL cc, a NULL date
+    and a NULL rate, on an empty one, and on one holding a currency (GBP)
+    the 11 answers never show; with USD/EUR landed, or only GBP, which the
+    transform filters out."""
+    rows = {"nulls": _NULL_ROWS, "empty": [], "gbp": _GBP_ROWS}[stored]
+    wh = str(tmp_path / "wh")
+    spark.createDataFrame(rows, _SCHEMA).write.parquet(wh)
+    raw = write_raw_json(nbu_records(days=40, currencies=landed),
+                         str(tmp_path / "raw" / "response.json"))
+    out = run_pipeline(spark, raw, wh, today=TODAY)
+    rates = ParquetUpsertTable(spark, wh, ["cc", "exchangedate"]).read()
+    assert out["forecast_rows"] == forecast_rates(rates).count()
 
 
 def test_backfill_glob_later_file_wins(spark, tmp_path):

@@ -181,3 +181,32 @@ def test_partitioned_upsert_null_partition_value_preserves_rows(spark, tmp_path)
     t.merge_upsert(fix)
     after = {r["k"]: r["v"] for r in t.read().collect()}
     assert after == {"a": 9.0, "b": 2.0, "c": 3.0}  # 'b' must survive
+
+
+def test_partitioned_upsert_null_key_raises_and_commits_nothing(spark, tmp_path):
+    # dynamic overwrite replaces partitions in place, so a NULL key must
+    # fail the write job itself: every partition file stays as it was
+    raw = write_raw_json(nbu_records(days=60), str(tmp_path / "raw" / "r.json"))
+    df = _month_partitioned(spark, read_nbu_json(spark, raw))
+    wh = str(tmp_path / "wh_part_null")
+    t = ParquetUpsertTable(spark, wh, ["cc", "exchangedate"], partition_cols=["month"])
+    t.merge_upsert(df)
+
+    def files():
+        out = {}
+        for root, _, names in os.walk(wh):
+            for n in names:
+                full = os.path.join(root, n)
+                with open(full, "rb") as fh:
+                    out[os.path.relpath(full, wh)] = (fh.read(), os.stat(full).st_mtime_ns)
+        return out
+
+    before = files()
+    fix = df.filter(F.col("exchangedate") == _dt.date(2024, 2, 10)).withColumn(
+        "rate", F.lit(77.77)
+    )
+    bad = fix.unionByName(fix.limit(1).withColumn("exchangedate", F.lit(None).cast("date")))
+    with pytest.raises(Exception, match="NULL key"):
+        t.merge_upsert(bad)
+    assert files() == before
+    assert t.read().filter("rate = 77.77").count() == 0
