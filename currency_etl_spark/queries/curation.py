@@ -437,10 +437,10 @@ def docs_source_token_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).where(F.col("w") != "")
     # the (source, word) frequency grid is vocab-sized and feeds FOUR
     # references (per-source totals, word totals → grand total, and the
-    # scoring join) — unmaterialized, each re-ran the documents scan +
-    # token explode + groupBy (r16 plan audit: 8 parquet scans → 1; the
-    # downstream agg/top-word branches then re-read checkpoint blocks,
-    # not parquet)
+    # scoring join) — unmaterialized, each would re-run the documents
+    # scan + token explode + groupBy; checkpointed, the plan holds one
+    # parquet scan and the downstream agg/top-word branches re-read
+    # checkpoint blocks, not parquet
     from currency_etl_spark.operators.ckpt import swap_checkpoint
 
     csw = swap_checkpoint(

@@ -604,8 +604,8 @@ def order_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # CONTIGUOUS decile telescope: every step is an exact ≤2-decimal
     # value (o_totalprice carries cents; a double difference of two
     # 2-decimal values rounds to 6 dp exactly), so the oracle's
-    # sum(round6(price_r - price_{r-1})) over decile d equals
-    # round6(last_price_d - last_price_{d-1}) (decile 1: last - first,
+    # sum(round(price_r - price_{r-1}, 6)) over decile d equals
+    # round(last_price_d - last_price_{d-1}, 6) (decile 1: last - first,
     # its first step is COALESCE'd to 0), and count(lead(...)) equals
     # n_orders minus one for the decile holding the global last rank.
     # One |orders|-sized pass (the rank's sort + a min_by/max_by
@@ -1350,36 +1350,25 @@ def events_range_join_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("skew", "aggregate"),
     doc=(
-        "Skew-proof aggregation, graded against the plain GROUP BY: top-20 "
-        "users by decimal-exact total via the two-phase salted aggregate "
-        "(operators/skew.salted_agg) — rows first group by (user_id, "
-        "hash-salt) so a pathological hot user spreads across 16 reducers, "
-        "then partials re-aggregate per user. The salt is a hash of "
-        "event_id, not rand(), so results are bit-identical to the direct "
-        "aggregation on any partitioning — which is exactly what this "
-        "oracle asserts. Decimal partials stay closed under re-aggregation."
+        "Hot-key aggregation, graded against the plain GROUP BY: top-20 "
+        "users by decimal-exact total. The plan is the plain per-user "
+        "GROUP BY: Spark plans it as a partial HashAggregate on the map "
+        "side and a final one after the user_id Exchange, so a "
+        "pathologically hot user ships one partial row per map task, "
+        "not its raw rows, to its reducer. Decimal partials are closed "
+        "under re-aggregation, so the result is bit-identical on any "
+        "partitioning, which is exactly what this oracle asserts."
     ),
 )
 def events_user_totals_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from currency_etl_spark.operators.skew import salted_agg
-
-    e = table(spark, sf_dir, "events").select(
-        "user_id", "event_id", F.col("value").cast("decimal(18,4)").alias("v")
-    )
-    totals = salted_agg(
-        e,
-        key="user_id",
-        salt_src="event_id",
-        aggs={
-            "total_dec": (F.sum, F.sum, "v"),
-            "n_events": (F.count, F.sum, "v"),
-        },
-    )
+    e = table(spark, sf_dir, "events")
     return (
-        totals.select(
-            "user_id",
-            F.col("total_dec").cast("double").alias("total_value"),
-            F.col("n_events").cast("long").alias("n_events"),
+        e.groupBy("user_id")
+        .agg(
+            F.sum(F.col("value").cast("decimal(18,4)"))
+            .cast("double")
+            .alias("total_value"),
+            F.count(F.lit(1)).alias("n_events"),
         )
         .orderBy(F.desc("total_value"), "user_id")
         .limit(20)
@@ -1388,8 +1377,9 @@ def events_user_totals_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: Bucket count for the shuffle-key skew audit (events_key_skew below) —
 #: stands in for the post-shuffle partition count whose load balance the
-#: audit predicts, and the threshold denominator for the adaptive salting
-#: decision (one key holding > 1/SKEW_BUCKETS of the rows => salt).
+#: audit predicts, and the threshold denominator of its hot-key verdict
+#: (one key holding > 1/SKEW_BUCKETS of the rows cannot be balanced by
+#: more partitions).
 SKEW_BUCKETS = 64
 
 
@@ -1422,84 +1412,56 @@ SKEW_BUCKETS = 64
     """,
     tags=("events", "skew", "aggregate", "scale"),
     doc=(
-        "Audit-keyed adaptive aggregation — the loop events_key_skew only "
-        "measures, closed: audit -> decision -> "
-        "mechanism. Step 1 runs the audit's decision aggregates on the "
-        "grouping key (per-key counts, map-side-combinable, scanning ONLY "
-        "the key column — strictly cheaper than the aggregation it "
-        "de-risks) and collects the single (hottest-key rows, total rows) "
-        "row. Step 2 applies the audit's published rule — one key holding "
-        f"more than 1/{SKEW_BUCKETS} of the rows cannot be fixed by more "
-        "partitions, only by salting — as an exact integer compare "
-        f"(topk x {SKEW_BUCKETS} > t), and picks the PHYSICAL plan the "
-        "way AQE picks skew-join splits from runtime stats: the "
-        "deterministic hash-salted two-phase aggregate "
-        "(operators/skew.salted_agg, same machinery as "
-        "events_user_totals_salted) when skewed, the plain one-phase "
-        "GROUP BY when not. Both plans produce bit-identical per-type "
-        "decimal-exact totals — which is exactly what the plain-GROUP-BY "
-        "oracle asserts — and the decision inputs travel in the output "
-        "(top_key_share rounded to 6 decimals, salted flag) so the "
-        "choice itself is "
-        "graded. event_type is the graded key: 5 values over the corpus "
-        f"(top share ~0.2 >> 1/{SKEW_BUCKETS}) — the classic "
-        "low-cardinality hot-key aggregation where phase-1 salting "
-        "spreads each type across 16 reducers. Scale shape: two scans "
-        "(key-column-only audit + the aggregation), both "
-        "map-side-combinable; the collected decision row is 1 row by "
-        "construction (a single max/sum over the per-key relation); no "
-        "data-sized relation crosses the driver."
+        "Audit-graded hot-key aggregation — the loop events_key_skew only "
+        "measures, closed: per-key decimal-exact totals plus the audit's "
+        "verdict on the same grouping key. The totals are the plain "
+        "GROUP BY, which Spark plans as a partial HashAggregate before "
+        "the key Exchange and a final one after it, so a hot key ships "
+        "one partial row per map task whatever its share. The verdict "
+        "inputs — hottest-key rows (topk) and total rows (t), both over "
+        "the non-NULL keys — are a max/sum over that same grouped "
+        "relation, cross-joined back as one broadcast row, so the whole "
+        "entry is one plan with no driver collect. The audit's published "
+        f"rule — one key holding more than 1/{SKEW_BUCKETS} of the rows "
+        "cannot be balanced by more partitions — travels in the output "
+        f"as an exact integer compare (salted = topk x {SKEW_BUCKETS} > "
+        "t) next to top_key_share (rounded to 6 decimals), so the "
+        "verdict itself is graded. event_type is the graded key: 5 "
+        f"values over the corpus (top share ~0.2 >> 1/{SKEW_BUCKETS}) — "
+        "the classic low-cardinality hot-key aggregation. Scale shape: "
+        "two events scans (the totals and a key-only count for the "
+        "verdict row), each combined map-side before its key shuffle, "
+        "and a 1-row broadcast; no data-sized relation crosses the "
+        "driver."
     ),
 )
 def events_adaptive_salted_agg(
     spark: SparkSession, sf_dir: str, *, key: str = "event_type"
 ) -> DataFrame:
-    from currency_etl_spark.operators.skew import salted_agg
-
-    e = table(spark, sf_dir, "events").filter(F.col(key).isNotNull())
-    # audit: per-key counts -> 1-row globals, collected as the runtime
-    # plan decision (AQE-style stats -> strategy choice)
-    g = (
-        e.groupBy(key)
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
+    totals = (
+        table(spark, sf_dir, "events")
+        .filter(F.col(key).isNotNull())
+        .groupBy(key)
         .agg(
-            F.max("n").cast("long").alias("topk"),
-            F.sum("n").cast("long").alias("t"),
-        )
-        .collect()[0]
-    )
-    # empty filtered relation (empty table / all-NULL key): the audit
-    # aggregates are NULL — fall through to the plain GROUP BY, which
-    # yields the same empty result the oracle returns
-    topk, t = (0, 1) if g["t"] is None else (g["topk"], g["t"])
-    salted = topk * SKEW_BUCKETS > t
-    src = e.select(key, "event_id", F.col("value").cast("decimal(18,4)").alias("v"))
-    if salted:
-        totals = salted_agg(
-            src,
-            key=key,
-            salt_src="event_id",
-            aggs={
-                "total_dec": (F.sum, F.sum, "v"),
-                # count ROWS (count(*) semantics, matching the plain
-                # branch and the oracle), not non-NULL values of v
-                "n_events": (lambda _c: F.count(F.lit(1)), F.sum, "v"),
-            },
-        )
-    else:
-        totals = src.groupBy(key).agg(
-            F.sum("v").alias("total_dec"),
+            F.sum(F.col("value").cast("decimal(18,4)")).alias("total_dec"),
             F.count(F.lit(1)).alias("n_events"),
         )
+    )
+    # an empty grouped relation gives a (NULL, NULL) verdict row, and the
+    # cross join with no totals rows is the oracle's empty result
+    g = totals.agg(
+        F.max("n_events").alias("topk"), F.sum("n_events").alias("t")
+    )
     return (
-        totals.select(
+        totals.crossJoin(F.broadcast(g))
+        .select(
             key,
             F.col("total_dec").cast("double").alias("total_value"),
-            F.col("n_events").cast("long").alias("n_events"),
-            F.round(
-                F.lit(topk).cast("double") / F.lit(t).cast("double"), 6
-            ).alias("top_key_share"),
-            F.lit(bool(salted)).alias("salted"),
+            "n_events",
+            F.round(F.col("topk").cast("double") / F.col("t"), 6).alias(
+                "top_key_share"
+            ),
+            (F.col("topk") * SKEW_BUCKETS > F.col("t")).alias("salted"),
         )
         .orderBy(key)
     )
@@ -4569,10 +4531,11 @@ def orders_sample_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc=(
         "Shuffle-key skew diagnostic: the heaviest user_id keys with "
         "their share of the table and skew factor (rows vs a perfectly "
-        "even spread) — the measurement that decides WHEN the salted "
-        "two-phase aggregate (events_user_totals_salted / "
-        "operators/skew.py) or AQE skew-join handling is worth its "
-        "cost. One partial-agg pass to key counts, a broadcast 1-row "
+        "even spread) — the measurement that decides WHEN a hot key "
+        "needs more than the partial aggregate Spark plans before every "
+        "grouping shuffle (events_user_totals_salted), e.g. AQE "
+        "skew-join splitting for a join on it. One partial-agg pass to "
+        "key counts, a broadcast 1-row "
         "stats scalar, TakeOrderedAndProject for the top-5 — the "
         "report itself never pays the skew it measures."
     ),
@@ -5566,8 +5529,9 @@ def orders_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc=(
         "Shuffle-key skew audit — the number a team reads BEFORE keying "
         "a 100 TB join or aggregation on a column, and the decision "
-        "input for the engine's skew machinery (operators/skew.py's "
-        "salted aggregate, AQE's skew-join splitting): per-key counts of the "
+        "input for AQE's skew-join splitting (aggregations need none: "
+        "Spark's partial aggregate combines a hot key map-side): "
+        "per-key counts of the "
         "candidate key (user_id), md5-bucketed into "
         f"{SKEW_BUCKETS} stand-in partitions (the same stable-hash "
         "idiom docs_shard_manifest routes with — deterministic across "
@@ -5576,10 +5540,10 @@ def orders_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "share, and hottest key, plus the two headline numbers: "
         "skew_ratio = max bucket load / ideal (t / buckets) — the "
         "straggler multiplier a hash shuffle of this key would pay — "
-        "and top_key_share, the single hottest key's row fraction (the "
-        "salting decision: one key holding >1/buckets of the data "
-        "cannot be fixed by MORE partitions, only by salting or "
-        "broadcast). NULL keys are excluded — they never match in an "
+        "and top_key_share, the single hottest key's row fraction (one "
+        "key holding >1/buckets of the data cannot be balanced by MORE "
+        "partitions, only by splitting it or broadcasting the other "
+        "side). NULL keys are excluded — they never match in an "
         "equi-join, so they don't load join shuffles. Numerics: counts "
         "exact int64 end to end; skew_ratio is one exact int product "
         f"(max x {SKEW_BUCKETS}) over one division, rounded to 6 "

@@ -98,10 +98,9 @@ def graph_pagerank_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem")
     # symmetric edge doubling as ONE in-row Generate (explode of the
     # 2-element struct array) instead of a self-union — the union's two
-    # branches each re-ran the lineitem scan AND the fact-sized distinct
-    # shuffle, because Catalyst does not dedupe common subplans (plan
-    # audit r16: 2 parquet scans + 2 distinct HashAggregates → 1;
-    # guide §2.4: remove shuffles outright).
+    # branches would each run the lineitem scan AND the fact-sized
+    # distinct shuffle, because Catalyst does not dedupe common subplans:
+    # one parquet scan and one distinct HashAggregate, not two.
     pairs = li.select(
         F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s")
     ).distinct()
@@ -228,11 +227,10 @@ def supplier_affinity_edges(spark: SparkSession, sf_dir: str, cap: int) -> DataF
         # pair generation via the dedup family's posting-list pattern
         # (groupBy part → sorted supplier list → in-row ordered-pair
         # explode) instead of the part-keyed self-join: the join form
-        # shuffled `sp` twice — re-running the lineitem aggregate + the
+        # shuffles `sp` twice — re-running the lineitem aggregate + the
         # top-`cap` window for EACH side, since Catalyst doesn't dedupe
-        # the common subplan — and generated both directed duplicates
-        # before the distinct (r16 build audit: the family's costliest
-        # memo at 1.7-3.2 s). One shuffle on p, undirected a<b pairs
+        # the common subplan — and generates both directed duplicates
+        # before the distinct. One shuffle on p, undirected a<b pairs
         # dedup FIRST (half the distinct's input), then the symmetric
         # doubling is an in-row Generate.
         #

@@ -429,7 +429,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # across branches, so the old count branch re-ran the whole shingle
     # explode. Zero-shingle docs get nsh=0 here vs no row in the exploded
     # form; they can never reach a pair, so the join result is identical.
-    # NOT checkpointed (r16 measured both ways): the two broadcast-side
+    # NOT checkpointed, a measured choice: the two broadcast-side
     # builds (ca / cb) DO re-run the documents scan + shingle chain, but
     # they overlap with the pair-generation stages on otherwise-idle
     # cores, while an eager checkpoint job serializes that same tokenize
@@ -658,12 +658,11 @@ def _overlap_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_common) from DF_CAP-capped 60-bit-digest posting lists — the
     family's ground-truth pair table. The verify stage
     (minhash_jaccard_est's `common`) and the recall calibration
-    (dedup_lsh_recall's `truth`) each computed this IDENTICAL relation
-    privately — the single most expensive sub-plan in both entries
+    (dedup_lsh_recall's `truth`) both need this IDENTICAL relation —
+    the single most expensive sub-plan in both entries
     (capped window + posting-list collect + pair explode + pair-keyed
-    count, ~1-2 s at sf0.1 each) paid twice per session (guide §1.2:
-    don't compute things twice; r16 plan audit). One memoized build now
-    serves both, under the family's standard one-live-per-tag release
+    count, ~1-2 s at sf0.1 each) would be paid twice per session. One
+    memoized build serves both, under the family's standard one-live-per-tag release
     discipline; pair count is bounded by the same DF_CAP posting-list
     cap, so the checkpoint is dup-rate-proportional, never all-pairs."""
     from currency_etl_spark.operators.ckpt import memo_checkpoint
@@ -852,7 +851,8 @@ _DUP_HITS_SQL = f"""
         "group-count row and a semi-join probe, so no DF_CAP is even "
         "needed; the duplicated-gram relation is dedup-rate-proportional "
         "and joins as a plain semi-join (AQE broadcasts when it fits; no "
-        "forced hint, per the round-6 broadcast discipline)."
+        "forced hint: a hint pinned at one scale turns into an "
+        "oversized broadcast at another)."
     ),
 )
 def docs_dup_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1007,9 +1007,9 @@ def docs_dup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: SemDeDup cluster-member budget and near-dup cosine threshold —
-#: the GRADED DEFAULTS of dedup_semantic's keyword parameters (round-8
-#: verdict item 4: a reuser must be able to set a deployment-appropriate
-#: threshold without editing module constants). The cap bounds
+#: the GRADED DEFAULTS of dedup_semantic's keyword parameters, so a
+#: reuser can set a deployment-appropriate threshold without editing
+#: module constants. The cap bounds
 #: intra-cluster pair generation to cap²/2 per cluster (the scale guard —
 #: at 100 TB k grows ∝ N so the per-cluster budget holds); the default
 #: threshold is calibrated to the synthetic corpus's similarity range
@@ -2714,9 +2714,9 @@ def _text_tf_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stored (doc_id, term, cnt) term-frequency relation — the inverted
     index's base table and the shared foundation of the whole retrieval
     family (docs_inverted_index, docs_index_lookup, docs_bm25_search,
-    docs_hybrid_search_rrf — which each built it from scratch until the
-    r13 bench showed the family paying the tokenize+explode+group scan
-    four times per session). Memoized per session/SF (memo tag
+    docs_hybrid_search_rrf — built privately, each would pay the
+    tokenize+explode+group scan, four times per session). Memoized per
+    session/SF (memo tag
     ``text_tf``): a production stack PERSISTS this index and the
     retrieval entries read it; only the first touch per session builds
     it. Doc length is derivable from it exactly (dl = sum(cnt) over the
@@ -2755,10 +2755,10 @@ def _text_dls_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, dl) document lengths over the stored tf relation —
     doc-count-sized; memoized per session/SF (memo tag ``text_dls``).
     Three retrieval families (docs_bm25_search, the hybrid arms, the
-    escalation ladder) each derived this groupBy privately, and inside
-    each plan it executed 2-4x (once per scoring join side plus once per
-    1-row stats broadcast it feeds) — up to ~10 token-relation shuffles
-    per session for one relation (guide §1.2; r16 plan audit). The 1-row
+    escalation ladder) read it; derived privately inside each plan it
+    would execute 2-4x (once per scoring join side plus once per 1-row
+    stats broadcast it feeds) — up to ~10 token-relation shuffles per
+    session for one relation. The 1-row
     BM25 stats aggregate stays per-entry: it reads this checkpoint, so
     it costs a doc-count-sized fold, not a token shuffle."""
     from currency_etl_spark.operators.ckpt import memo_checkpoint
@@ -3157,7 +3157,8 @@ _SQL_HYBRID_CTES = f"""toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM
         "quantization before the per-doc sum — the proven determinism "
         f"recipe), top-{HYBRID_ARM_N} by integer score. Semantic arm: "
         "cosine to doc 0's embedding (the 1:1 doc_id = vec_id linkage "
-        f"docs_embedding_coverage audits), round-6 keyed, top-"
+        f"docs_embedding_coverage audits), keyed on the cosine rounded "
+        f"to 6 decimals, top-"
         f"{HYBRID_ARM_N}. Fusion: per arm 1e9-quantized 1/(k + rank) as "
         "exact int64, summed (absent arm contributes 0), ranks carried "
         "in the output so a reader sees WHY a doc fused high — lexical "
@@ -3336,7 +3337,8 @@ def _hybrid_fused(lex: DataFrame, sem: DataFrame) -> DataFrame:
         "1-row aggregates); the expensive work is the arms themselves, "
         "which are the entry under evaluation, served from the memoized "
         "text_tf/text_df stored indexes. Exact integer counts; the two "
-        "round-6 shares are single IEEE divisions by the literal k."
+        "shares, rounded to 6 decimals, are single IEEE divisions by "
+        "the literal k."
     ),
 )
 def docs_hybrid_eval(
@@ -3482,9 +3484,9 @@ TEXT_STALE_TOP = 50
     doc=(
         "Text-index staleness audit — the maintenance rung the IVF "
         "family already has (knn_index_staleness / knn_incremental), "
-        "now for the retrieval family's stored text index (round-13 "
-        "verdict item 4): text_tf/text_df became persisted serving "
-        "artifacts in r13, and a serving index needs the "
+        "now for the retrieval family's stored text index: "
+        "text_tf/text_df are persisted serving artifacts, and a "
+        "serving index needs the "
         "batch-vs-stored-artifact drift check that tells the pipeline "
         "WHEN to rebuild. The arriving batch is the standard "
         "deterministic 10% slice (doc_id % 10 = 7, dedup_incremental's "
@@ -3503,8 +3505,8 @@ TEXT_STALE_TOP = 50
         "band 2*sb*ni < si*nb in decimal(38,0) — int64 token×doc "
         "products could wrap in Spark but raise in DuckDB at extreme "
         "scale), so the decision itself is bit-reproducible; "
-        "the two round-6 averages and the share are single IEEE "
-        "divisions of exact int64 totals. Scale shape: every relation "
+        "the two averages and the share, rounded to 6 decimals, are "
+        "single IEEE divisions of exact int64 totals. Scale shape: every relation "
         "is vocab- or batch-sized; the stored side reads the checkpoint "
         "(no corpus re-tokenization); the top lists truncate by "
         "sort-limit before the bounded overlap join."
@@ -3921,8 +3923,8 @@ def docs_shingle_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shingle explode subtree TWICE (once per join side) and shuffled the
     # exploded relation on s twice — the window form is one execution and
     # one s-keyed exchange, with identical per-row first_doc values
-    # (guide §2.4: two operations keyed the same way share one exchange;
-    # r16 plan audit: 2 documents scans → 1)
+    # (two operations keyed the same way share one exchange: one
+    # documents scan, not two)
     first_doc = F.min("doc_id").over(W.partitionBy("s"))
     per = (
         sh.withColumn("first_doc", first_doc)
@@ -3986,10 +3988,9 @@ def docs_shingle_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         "engines — no cross-libm log() drift). Shape at 100 TB: two "
         "partial-agg count passes collapse the token stream to the "
         "vocab-sized weight table, which shuffle-joins back onto the "
-        "exploded tokens on the word key — NOT broadcast (round-5 "
-        "advice: real corpora have vocabularies far beyond broadcast "
-        "limits; AQE may still pick broadcast when the table measures "
-        "small). The production scale path is DSIR's own trick — hash "
+        "exploded tokens on the word key — NOT broadcast (real "
+        "corpora have vocabularies far beyond broadcast limits; AQE "
+        "may still pick broadcast when the table measures small). The production scale path is DSIR's own trick — hash "
         "n-grams into a fixed bucket count (hash(w) % N) so the weight "
         "table is bounded regardless of vocab size; kept un-hashed here "
         "because the oracle must count exact words. Per-doc sums are "
@@ -4008,9 +4009,9 @@ def docs_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the scan + tokenize + explode subtree TWICE (once per join side) and
     # shuffled the token relation on w twice — the window form is one
     # execution and one w-keyed exchange carrying identical per-row
-    # counts (guide §2.4; r16 plan audit: 2 documents scans → 1; the
-    # no-vocab-broadcast design note still holds — this is the same
-    # word-keyed shuffle, minus the duplicate)
+    # counts (one documents scan, not two; the no-vocab-broadcast
+    # design note still holds — this is the same word-keyed shuffle,
+    # minus the duplicate)
     from pyspark.sql import Window as W
 
     ww = W.partitionBy("w")

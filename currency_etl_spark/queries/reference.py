@@ -19,7 +19,8 @@ of the reference's query semantics is declared here over `events`, keyed by
 Scale notes: every query is a single shuffle on the entity key (or none);
 windows share one (partitionBy, orderBy) spec so WindowExec sorts once.
 At 100 TB the entity key is the natural partition key; skewed entities are
-handled by AQE skew-join/salting, and the top-k forms avoid full sorts
+handled by AQE skew-join and by the partial aggregate Spark plans before
+every grouping shuffle, and the top-k forms avoid full sorts
 (Catalyst plans TakeOrderedAndProject).
 """
 

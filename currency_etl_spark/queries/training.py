@@ -248,7 +248,8 @@ def docs_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
         "to keep padding near zero, best-fit packing pays the reverse — "
         "this table is what a mixture owner reads to pick the policy and "
         "the (budget, shard-size) pair. All counters exact int64; the "
-        "ONE division per language is the utilization ratio (round 6). "
+        "ONE division per language is the utilization ratio, rounded "
+        "to 6 decimals. "
         "Scale shape: the only data-sized work is the family's one "
         "cumsum window (lang x shard partitions — grows with the "
         "corpus); everything downstream is shard-sized then "
@@ -409,7 +410,8 @@ def docs_packing_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
         "DuckDB oracle replays the identical fold as a recursive CTE over "
         "a BIGINT remainder list (list_min/list_position pick the same "
         "tightest-bin-first-index). Exact integer state end to end; the "
-        "ONE division per language is the utilization ratio (round 6). "
+        "ONE division per language is the utilization ratio, rounded "
+        "to 6 decimals. "
         "Scale shape: one documents scan, groups bounded at SHARD_DOCS "
         f"({SHARD_DOCS}) docs so every fold is a small in-memory loop, "
         "group count grows with the corpus (lang x shard — the same "
@@ -648,7 +650,8 @@ MIX_W_SCALE = 1_000_000_000_000
         "libm pow() per language sits behind the catalog's "
         "quantize-then-int-sum discipline (weights rounded onto the "
         "1e-12 lattice, Z an exact int64 sum, one int/int division per "
-        "language, round 6) — the same recipe as the reweight's exp(); "
+        "language, rounded to 6 decimals) — the same recipe as the "
+        "reweight's exp(); "
         "upsample_factor divides the two already-rounded shares so the "
         "table is self-consistent. alpha=1 reproduces the natural "
         "mixture exactly (pinned). Scale shape: one map-side-combinable "
@@ -1041,9 +1044,9 @@ def _bpe_enc0(w: Column) -> Column:
 #: bench's per-pass honesty guard covers it automatically), and its
 #: touches feed the same ledger via ckpt.note_build so bench.py
 #: subtracts the one training cost from the paying entry and reports it
-#: as a memo_build:<tag> line. Round-16: bpe_merge_loop /
-#: docs_bpe_encode previously each re-ran the full K-step training
-#: chain per entry (the r15 bpe_merge_loop row adjudication).
+#: as a memo_build:<tag> line. bpe_merge_loop and docs_bpe_encode both
+#: read this cache, so the K-step training chain runs once per session,
+#: not once per entry.
 _BPE_CACHE: dict = {}
 _BPE_CACHE_LOCK = threading.Lock()
 
@@ -1262,7 +1265,8 @@ MIX_ETA = 0.1
         "token-weighted mean excess is identically ZERO, Jensen gives "
         "Z >= 1 and a domain is reweighted UP exactly when its "
         "exp(eta * excess) beats Z; the reported up/down flag compares "
-        "the two round-6 share columns beside it, so it is "
+        "the two share columns beside it (rounded to 6 decimals), so "
+        "it is "
         "self-consistent with what the table shows and eta=0 reads 0 "
         "everywhere. Numerics: all sums exact int64 "
         "(surprisal and token counts), each share/loss ONE double "
@@ -1718,7 +1722,8 @@ def _bpe_staleness_oracle(k: int) -> str:
         "a downstream embedding table has no row for). One summary "
         "row: merge count, stored/batch token totals, merged-token "
         "masses, vocab sizes, OOV type/occurrence counts, the three "
-        "round-6 shares, and the integer-exact retrain flag — fires "
+        "shares rounded to 6 decimals, and the integer-exact retrain "
+        "flag — fires "
         "when the batch's merge-hit RATE falls below half the stored "
         "rate (batch_merged x stored_tokens x 2 < stored_merged x "
         "batch_tokens, decimal(18,0) cross products — the "

@@ -474,9 +474,9 @@ def knn_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # NOTE: tag must NOT be "ivf_cents" — that is the memo tag of the
     # family's STORED codebook (_ivf_cents_base); swapping this retrained
-    # k-means codebook under the same tag evicted the memoized artifact
-    # and forced every later ivf consumer in the session (tombstone
-    # screen, staleness audit, ...) to rebuild it (r16 audit).
+    # k-means codebook under the same tag would evict the memoized
+    # artifact and force every later ivf consumer in the session
+    # (tombstone screen, staleness audit, ...) to rebuild it.
     cents1 = swap_checkpoint(
         "ivf_kmeans_cents",
         cm.select(
@@ -537,32 +537,25 @@ def knn_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: each approximate index is measured against the exact brute-force top-K.
 RECALL_NQ = 8
 RECALL_K = 5
-#: Salt fan-out for the two-phase top-k (phase 1: top-k per (query, salt)
-#: slice; phase 2: top-k of the per-slice winners). With only NQ query
-#: partitions a single window sort would idle every core beyond NQ — and at
-#: 100 TB it would sort each query's full candidate list on one task. The
-#: salted union is exact: the global top-k is always contained in the union
-#: of per-slice top-k.
-RECALL_SALTS = 32
 
 
 def _topk_per_query(sims: DataFrame, k: int = RECALL_K) -> DataFrame:
-    """Exact per-query top-k of (qid, vec_id, sim) via salted two phases."""
-    w1 = W.partitionBy("qid", "__salt").orderBy(F.desc("sim"), "vec_id")
-    w2 = W.partitionBy("qid").orderBy(F.desc("sim"), "vec_id")
+    """Exact per-query top-k of (qid, vec_id, sim): one ROW_NUMBER window.
+
+    Spark plans the ``row_number() <= k`` filter with a partial
+    WindowGroupLimit below the qid Exchange, so each map task ships at
+    most k rows per query, and a hot query's candidate list is never
+    sorted whole on one task."""
+    w = W.partitionBy("qid").orderBy(F.desc("sim"), "vec_id")
     return (
-        sims.withColumn("__salt", F.pmod(F.xxhash64("vec_id"), F.lit(RECALL_SALTS)))
-        .withColumn("__rn", F.row_number().over(w1))
+        sims.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= k)
-        .withColumn("__rn2", F.row_number().over(w2))
-        .filter(F.col("__rn2") <= k)
         .select("qid", "vec_id")
     )
 
 
 def _sql_topk(cands: str, k: int = RECALL_K) -> str:
-    """DuckDB twin of _topk_per_query (single-phase — the salting is a
-    physical optimization with identical output)."""
+    """DuckDB twin of _topk_per_query."""
     return (
         f"SELECT qid, vec_id FROM (SELECT qid, vec_id, "
         f"ROW_NUMBER() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rn "
@@ -617,9 +610,10 @@ def _sql_topk(cands: str, k: int = RECALL_K) -> str:
         "sampled query set — the measure-don't-guess loop every ANN "
         "deployment needs before trading recall for speed. Scale design: "
         "the query set broadcasts (recall eval always samples queries); "
-        "per-query top-k uses a salted two-phase window so the candidate "
-        "sort parallelizes across RECALL_SALTS slices instead of one task "
-        "per query; the final overlap joins touch only NQ×K rows."
+        "per-query top-k is one ROW_NUMBER window, which Spark plans "
+        "with a partial WindowGroupLimit before the qid Exchange, so "
+        "each map task ships at most K rows per query; the final "
+        "overlap joins touch only NQ×K rows."
     ),
 )
 def knn_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -659,11 +653,10 @@ def knn_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # ONE pass computes retrieved + overlap counts: a LEFT join against the
     # exact top-k (unique (qid, vec_id), so cardinality is preserved) flags
-    # hits, and a single aggregate counts rows and non-null flags. The
-    # previous two-aggregate form (separate `ret` and `ov` relations)
-    # executed the whole `methods` subtree — both candidate joins and all
-    # four salted top-k windows — TWICE, one full re-run per aggregate
-    # (guide §1.2: don't compute things twice; plan audit r16).
+    # hits, and a single aggregate counts rows and non-null flags. Keep it
+    # one aggregate: separate `ret` and `ov` relations would each execute
+    # the whole `methods` subtree (both candidate joins and their top-k
+    # windows), since Catalyst does not share a subplan between them.
     flagged = methods.join(
         ex_k.withColumn("__hit", F.lit(1)), ["qid", "vec_id"], "left"
     )
@@ -938,10 +931,9 @@ def knn_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the coarse cell id is computed INLINE over the same broadcast
     # codebook row rather than as a separate `cells` relation joined back
-    # on vec_id — the join shuffled the corpus twice (both sides derive
+    # on vec_id — such a join shuffles the corpus twice (both sides derive
     # from the same scan) to attach a column a map-side expression
-    # produces for free (guide §2.4: remove shuffles outright; plan
-    # audit r16: SortMergeJoin on vec_id + one whole corpus subtree gone)
+    # produces for free.
     coded = (
         withc.crossJoin(F.broadcast(cb))
         .select(
@@ -1309,8 +1301,9 @@ TRUNC_DIMS = 16
         "measurement that decides whether a 4x-cheaper truncated index "
         "(4x less memory, 4x fewer multiply-adds per candidate) keeps "
         "enough retrieval quality. Both candidate sets reuse the "
-        "broadcast-query top-k machinery of knn_recall_report (salted "
-        "two-phase per-query rank); the truncated column is a zero-"
+        "broadcast-query top-k of knn_recall_report (one ROW_NUMBER "
+        "window with a partial WindowGroupLimit before the shuffle); "
+        "the truncated column is a zero-"
         "copy array slice at the scan. At 100 TB this is the cheap "
         "offline eval run BEFORE re-indexing a trillion vectors; "
         "recall here is genuinely lossy (prefix dims carry no special "
@@ -1330,14 +1323,13 @@ def knn_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("qe"),
         F.col("emb_t").alias("qt"),
     )
-    # BOTH similarity columns ride ONE corpus × query pass: the previous
-    # two-branch form (separate full_sims / trunc_sims relations) ran the
-    # embeddings scan + broadcast cross join twice — and each branch's
-    # top-k windows re-executed it once more via Catalyst's no-common-
-    # subplan-dedup (r16 plan audit: 5 parquet scans → 3). The NQ×N sims
-    # relation is checkpointed (bounded: queries × corpus, the same
-    # materialization a recall harness would persist), and the two top-k
-    # elections read it.
+    # BOTH similarity columns ride ONE corpus × query pass: separate
+    # full_sims / trunc_sims relations would each run the embeddings scan
+    # + broadcast cross join, since Catalyst does not share a subplan
+    # between the two top-k branches. The NQ×N sims relation is
+    # checkpointed (bounded: queries × corpus, the same materialization
+    # a recall harness would persist), and the two top-k elections read
+    # it.
     from currency_etl_spark.operators.ckpt import swap_checkpoint
 
     sims = swap_checkpoint(
@@ -1833,8 +1825,8 @@ def _escalate_schedule(base: int = IVF_NPROBE, full: int = N_CENTROIDS) -> tuple
     capped by a final every-cell round — so the round count is genuinely
     O(log2 cells) at any codebook size (a literal schedule tuple would
     leave an arbitrarily large final jump). At the graded constants
-    (base 2, 8 cells) this derives (2, 4, 8) — bit-identical output to
-    the r14 graded tuple; at 4096 cells and base 8 it derives
+    (base 2, 8 cells) this derives (2, 4, 8), the graded schedule; at
+    4096 cells and base 8 it derives
     (8, 16, 32, ..., 2048, 4096), 10 rounds."""
     sched = []
     p = base
@@ -2348,12 +2340,10 @@ def _batch_probe_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The arriving batch's FULL probe election over the STORED codebook
     (vec_id, qv, prank, cid — prank = position of cid in the query's
     sorted-cell order), MEMOIZED once per session/SF (tag
-    ``stale_probes``). r17: knn_index_staleness and knn_index_rebuild
-    each built this identical relation privately (tags
-    staleness_probes / rebuild_pr_old) — same batch filter, same
-    broadcast codebook, same posexplode — so a session running both
-    paid the embeddings scan + election twice (guide §1.2: duplicated
-    subtree across entries). One memo tag; both read it."""
+    ``stale_probes``). knn_index_staleness and knn_index_rebuild both
+    need this identical relation — same batch filter, same broadcast
+    codebook, same posexplode — so they share one memo tag, and a
+    session running both pays the embeddings scan + election once."""
     from currency_etl_spark.operators.ckpt import memo_checkpoint
 
     def build() -> DataFrame:
@@ -2387,8 +2377,8 @@ def _batch_truth_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     prank, nn_vec_id, d, exact_rank), MEMOIZED once per session/SF (tag
     ``stale_truth``). This is the family's most expensive sub-plan (the
     per-cell numpy matmul tiles + the per-query election window);
-    r17: staleness and rebuild each ran their own identical
-    FlatMapCoGroupsInPandas stage — one memo, both consume. Nested memo
+    staleness and rebuild both consume this one memo, so its
+    FlatMapCoGroupsInPandas stage runs once per session. Nested memo
     calls go strictly downward (stale_truth → stale_probes/ivf_index →
     ivf_cents), per the ckpt lock-ordering invariant."""
     from currency_etl_spark.operators.ckpt import memo_checkpoint
@@ -2531,10 +2521,9 @@ def _batch_truth_base(spark: SparkSession, sf_dir: str) -> DataFrame:
 def knn_index_staleness(spark: SparkSession, sf_dir: str) -> DataFrame:
     # probe rank of EVERY cell per query vector + the exact per-cell-tile
     # ground truth it stamps: both read the family's MEMOIZED bases
-    # (stale_probes / stale_truth — r17: previously private checkpoints
-    # duplicated verbatim by knn_index_rebuild; the embeddings scan, the
-    # probe election, the numpy tile stage and the truth window now run
-    # once per session per SF for the whole audit family).
+    # (stale_probes / stale_truth, shared with knn_index_rebuild), so the
+    # embeddings scan, the probe election, the numpy tile stage and the
+    # truth window run once per session per SF for the whole family.
     idx = _ivf_index_base(spark, sf_dir)
     pr = _batch_probe_base(spark, sf_dir)
     topk = _batch_truth_base(spark, sf_dir)
@@ -2983,8 +2972,7 @@ def knn_index_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # full probe election over the STORED codebook, stamped with prank —
     # the staleness audit's pr shape, read from the family's MEMOIZED
-    # stale_probes base (r17: was a private rebuild_pr_old checkpoint
-    # duplicating knn_index_staleness's staleness_probes verbatim).
+    # stale_probes base, shared with knn_index_staleness.
     # THREE consumers here (truth tiles, the batch's step-0 assignment
     # at prank==1, the before-cost rollup) all read the one checkpoint.
     pr = _batch_probe_base(spark, sf_dir)
@@ -3075,8 +3063,8 @@ def knn_index_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # exact batch-vs-corpus truth via per-cell tiles stamped with the
     # OLD probe rank, read from the family's MEMOIZED stale_truth base
-    # (r17: was a private rebuild_truth checkpoint re-running the same
-    # FlatMapCoGroupsInPandas stage the staleness audit pays), global
+    # (shared with the staleness audit, so its FlatMapCoGroupsInPandas
+    # stage runs once per session), global
     # top-K election, then the truth neighbor's NEW cell + the query's
     # NEW probe rank join — every join is total (all 8 stored cells
     # survive retraining: each seed is its own step-0 member).

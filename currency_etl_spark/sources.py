@@ -72,13 +72,13 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
 #: SESSION-global and the streaming pool invokes stream builders — which
 #: land here on every _SCHEMA_CACHE miss — from an 8-thread fan-out
 #: (streaming/jobs._start_pool_queries). Unlocked, two interleavings are
-#: real (both reproduced under a thread hammer, r15; the regression pin is
+#: real (both reproduced under a thread hammer; the regression pin is
 #: tests/test_sources_schema.py::test_read_events_raw_thread_safety):
 #:   * thread A's finally-unset lands between B's set and B's footer
 #:     read → B reads a TIMESTAMP(NANOS) footer with the conf off →
-#:     AnalysisException [PARQUET_TYPE_ILLEGAL] — the suspected r14
-#:     1-in-3-runs dual-encoding flake (the pool stores the victim
-#:     builder's exception for its entry to raise);
+#:     AnalysisException [PARQUET_TYPE_ILLEGAL], an intermittent
+#:     dual-encoding failure (the pool stores the victim builder's
+#:     exception for its entry to raise);
 #:   * B captures A's transient "true" as its prev and restores it →
 #:     the legacy conf leaks session-wide for the process lifetime.
 _NANOS_CONF_LOCK = threading.Lock()

@@ -38,7 +38,7 @@ STREAM_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "4"
 #: double-check-locked: the pool start fans builders out over threads,
 #: and without the lock every builder pays its own footer read on a cold
 #: cache (the nanosAsLong conf those reads flip is separately serialized
-#: by sources._NANOS_CONF_LOCK — the r15 flake fix).
+#: by sources._NANOS_CONF_LOCK).
 _SCHEMA_CACHE: dict = {}
 _SCHEMA_CACHE_LOCK = threading.Lock()
 
@@ -80,10 +80,10 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: Serializes landing-dir symlink setup across the pool's builder
 #: threads: lexists-then-symlink is check-then-create, and on a FRESH
-#: /tmp landing dir all 8 builders race it — the loser crashed the whole
-#: pool start with FileExistsError (observed on the first sf0.1 bench
-#: pass of round 15; same class as the nanosAsLong conf race fixed this
-#: round, a thread-fan-out window that only opens on a cold start).
+#: /tmp landing dir all 8 builders race it — unserialized, the loser
+#: crashes the whole pool start with FileExistsError (the same class as
+#: the nanosAsLong conf race: a thread-fan-out window that only opens on
+#: a cold start).
 _LANDING_LOCK = threading.Lock()
 
 
@@ -905,9 +905,9 @@ def _staged_late_dir(spark: SparkSession, sf_dir: str) -> str:
     stream source's modification-time ordering is deterministic. Built
     once per corpus VERSION: the marker records the source path plus the
     events file's (mtime_ns, size) fingerprint, so a driver-side corpus
-    regeneration under the same path (the round-4 failure class — /tmp
-    outlives /root/testdata) forces a rebuild instead of silently
-    streaming last round's data."""
+    regeneration under the same path (the landing dir under /tmp
+    outlives the corpus it was staged from) forces a rebuild instead of
+    silently streaming the previous corpus's data."""
     import hashlib
 
     src = os.path.join(sf_dir, "events.parquet")
@@ -1258,7 +1258,8 @@ _CATALOG["streaming_dedup_screen"].oracle = _screen_oracle()
         "in-row broadcast array lookup cannot). The sink holds "
         "token-level (doc_id, term, oov) rows — the dedup-screen "
         "convention — and the audit rollup (batch docs/vocab/tokens, "
-        "OOV terms and token mass, the round-6 OOV share that is the "
+        "OOV terms and token mass, the OOV share rounded to 6 decimals "
+        "that is the "
         "staleness audit's first rebuild trigger) is batch "
         "post-processing, pinned bit-identical to text_index_staleness "
         "on the shared columns by a cross-entry test. Scale shape: "

@@ -92,3 +92,61 @@ def write_events(tmpdir: str, rows: list, values: list | None = None) -> str:
     )
     pq.write_table(t, os.path.join(tmpdir, "events.parquet"))
     return tmpdir
+
+
+# ---------------------------------------------------------------------------
+# AQE final-plan readers
+# ---------------------------------------------------------------------------
+
+_PLAN_WRAPPERS = ("WholeStageCodegenExec", "InputAdapter")
+
+
+def final_plan_nodes(df):
+    """(node, ancestor class names) over ``df``'s AQE final plan — run an
+    action on ``df`` first. Reads through query stages and subqueries;
+    codegen wrappers are left out of the ancestor names."""
+    root = df._jdf.queryExecution().executedPlan()
+    assert root.isFinalPlan(), "run an action on the DataFrame first"
+
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    def walk(node, above):
+        yield node, above
+        name = node.getClass().getSimpleName()
+        if "QueryStageExec" in name:
+            kids = [node.plan()]
+        elif name == "AdaptiveSparkPlanExec":
+            kids = [node.executedPlan()]
+        else:
+            kids = seq(node.children())
+        below = above if name in _PLAN_WRAPPERS else above + (name,)
+        for kid in kids + seq(node.subqueries()):
+            yield from walk(kid, below)
+
+    yield from walk(root.executedPlan(), ())
+
+
+def right_below_exchange(df, hit) -> list:
+    """Final-plan nodes ``hit`` accepts whose nearest ancestor is a
+    ShuffleExchangeExec: the map-side operators of a shuffle."""
+    return [
+        n
+        for n, above in final_plan_nodes(df)
+        if hit(n) and above[-1:] == ("ShuffleExchangeExec",)
+    ]
+
+
+def jobs_run_by(spark, build):
+    """(build(), ids of the Spark jobs that ran while it built)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-run-by-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = build()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)

@@ -25,7 +25,6 @@ ALLOWED_SITES = {
     ("warehouse.py", "merge_upsert"): "distinct touched-partition list for pruned dynamic overwrite — O(partitions)",
     ("streaming/jobs.py", "_staged_late_dir"): "fixture staging for the late-replay landing dir (test scaffolding, built once per corpus version), not the streaming operator",
     ("operators/multimodal.py", "size_balanced"): "per-partition byte totals for bin packing — O(partitions)",
-    ("queries/extras.py", "events_adaptive_salted_agg"): "1-row audit globals (hottest-key rows, total rows) — the AQE-style runtime plan decision; 1 row by construction (a single max/sum over the per-key relation)",
     ("queries/extras.py", "_exact_percentiles_distributed"): "1-row extrema/count aggregate",
     ("queries/extras.py", "_values_at_ranks"): "≤32-row split histogram per recursion level, ≤2·|qs| probed rank rows",
     ("queries/training.py", "_bpe_train_build"): "1-row argmax merge winner per step (≤ BPE_MERGES rows total) — the scalar iterative-training decision (bpe_merge_loop body, shared with docs_bpe_encode); BFS convergence-check precedent",

@@ -2,7 +2,10 @@
 exact ints) must match bit-for-bit; the histogram must partition the
 non-null-key rows and keys exactly; skew_ratio must be the max-over-ideal
 multiplier (>= 1, == 1 at n_buckets=1); and the final plan must read the
-checkpointed bucket histogram — zero parquet scans."""
+checkpointed bucket histogram — zero parquet scans. The hot-key
+aggregations (events_user_totals_salted, events_adaptive_salted_agg)
+must equal the plain GROUP BY and combine each key map-side in the AQE
+final plan."""
 
 from __future__ import annotations
 
@@ -13,6 +16,7 @@ from collections import Counter, defaultdict
 import pandas as pd
 
 from currency_etl_spark.queries.extras import SKEW_BUCKETS, events_key_skew
+from tests.fixtures import final_plan_nodes, jobs_run_by, right_below_exchange
 
 SF = "/root/testdata/sf0.001"
 
@@ -126,56 +130,91 @@ def test_key_skew_property(spark, tmp_path_factory, sizes, hot, n_nulls):
 
 
 # ---------------------------------------------------------------------------
-# events_adaptive_salted_agg: the audit's decision wired to the mechanism
+# hot grouping keys: the planner's partial aggregate does the two-phase work
 # ---------------------------------------------------------------------------
 
 
-def _explain(df) -> str:
-    jvm = df.sparkSession._jvm
-    return jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+def _is_partial_agg(node) -> bool:
+    return (
+        node.getClass().getSimpleName() == "HashAggregateExec"
+        and "partial_" in node.simpleString(25)
+    )
 
 
-def test_adaptive_graded_key_takes_salted_plan(spark):
-    """event_type (5 values, top share ~0.2 >> 1/64) must trip the audit
-    rule, and the chosen physical plan must BE the deterministic salted
-    two-phase aggregate — the xxhash64 salt and the (key, salt) phase-1
-    grouping are visible in the plan."""
+def test_user_totals_hot_key_matches_plain_groupby(spark, tmp_path_factory):
+    """events_user_totals_salted on one pathologically hot user plus a
+    uniform tail equals the plain GROUP BY, recomputed here in exact
+    decimals; n_events counts rows, so the hot user's NULL values still
+    count. The hot user reaches its reducer as partial-aggregate rows."""
+    from decimal import Decimal
+
+    from tests.fixtures import write_events
+
+    from currency_etl_spark.queries.extras import events_user_totals_salted
+
+    rows = [(i, 1) for i in range(500)] + [(1000 + k, k) for k in range(2, 40)]
+    vals = [None if i % 5 == 0 else float(i % 7) for i in range(500)] + [
+        float(k) for k in range(2, 40)
+    ]
+    d = str(tmp_path_factory.mktemp("user_totals_hot"))
+    write_events(d, rows, values=vals)
+    tot: dict = defaultdict(lambda: [Decimal(0), 0])
+    for (_, u), v in zip(rows, vals):
+        tot[u][0] += Decimal(0) if v is None else Decimal(str(v))
+        tot[u][1] += 1
+    want = sorted(
+        ((u, float(s), n) for u, (s, n) in tot.items()),
+        key=lambda r: (-r[1], r[0]),
+    )[:20]
+    df = events_user_totals_salted(spark, d)
+    assert _rows(df) == want
+    assert right_below_exchange(df, _is_partial_agg)
+
+
+def test_adaptive_graded_key_flags_salted(spark):
+    """event_type (5 values, top share ~0.2 >> 1/64) trips the audit
+    rule. Building the entry runs no Spark job (the verdict rides the
+    plan, not a driver collect), and the final plan combines each key
+    map-side: a partial HashAggregate feeds the key Exchange."""
     from currency_etl_spark.queries.extras import events_adaptive_salted_agg
 
-    df = events_adaptive_salted_agg(spark, SF)
+    events_adaptive_salted_agg(spark, SF)  # warm the table cache
+    df, jobs = jobs_run_by(spark, lambda: events_adaptive_salted_agg(spark, SF))
+    assert jobs == []
     rows = df.collect()
     assert rows and all(r["salted"] for r in rows)
     assert all(r["top_key_share"] > 1.0 / SKEW_BUCKETS for r in rows)
-    p = _explain(df)
-    assert "xxhash64" in p
-    assert "__salt" in p
-    assert "CartesianProduct" not in p and "BatchEvalPython" not in p
+    assert right_below_exchange(df, _is_partial_agg)
+    names = {n.getClass().getSimpleName() for n, _ in final_plan_nodes(df)}
+    assert "CartesianProductExec" not in names and "BatchEvalPythonExec" not in names
 
 
-def test_adaptive_uniform_key_takes_plain_plan(spark, tmp_path_factory):
+def test_adaptive_uniform_key_flags_plain(spark, tmp_path_factory):
     """At the decision boundary (64 keys x 2 rows: topk * 64 == t, NOT
-    strictly greater) the audit says a hash shuffle balances fine — the
-    plan must be the plain one-phase GROUP BY, no salt anywhere."""
+    strictly greater) the audit says a hash shuffle balances fine:
+    salted is False, from the same one-plan, no-collect entry."""
     from tests.fixtures import write_events
 
     from currency_etl_spark.queries.extras import events_adaptive_salted_agg
 
     d = str(tmp_path_factory.mktemp("adaptive_uniform"))
     write_events(d, [(e, e % 64) for e in range(128)])
-    df = events_adaptive_salted_agg(spark, d, key="user_id")
+    events_adaptive_salted_agg(spark, d, key="user_id")  # warm the table cache
+    df, jobs = jobs_run_by(
+        spark, lambda: events_adaptive_salted_agg(spark, d, key="user_id")
+    )
+    assert jobs == []
     rows = df.collect()
     assert len(rows) == 64
-    assert all(not r["salted"] for r in rows)
-    p = _explain(df)
-    assert "xxhash64" not in p
-    assert "__salt" not in p
+    assert all(r["salted"] is False for r in rows)
+    assert right_below_exchange(df, _is_partial_agg)
 
 
 def test_adaptive_both_plans_agree_with_direct_groupby(spark, tmp_path_factory):
-    """Mechanism equivalence on BOTH sides of the decision: a hot-key
-    corpus (salted plan) and a uniform corpus (plain plan) must each
-    reproduce the direct groupBy totals bit-for-bit — the salt is a hash,
-    not rand(), so re-aggregation across salts is exact."""
+    """Both sides of the verdict: a hot-key corpus (salted True) and a
+    uniform corpus (salted False) must each reproduce the direct groupBy
+    totals bit-for-bit — the verdict is an output column, not a
+    different plan."""
     import pyspark.sql.functions as F
 
     from tests.fixtures import write_events
@@ -214,16 +253,15 @@ def test_adaptive_both_plans_agree_with_direct_groupby(spark, tmp_path_factory):
 
 
 def test_adaptive_null_values_count_rows(spark, tmp_path_factory):
-    """n_events is count(*) — rows, not non-NULL values — in BOTH
-    physical plans (a salted phase-1 F.count('v') would count non-NULL
-    values and diverge from the plain branch and the oracle on any
-    corpus with NULL event values)."""
+    """n_events is count(*) — rows, not non-NULL values — on both sides
+    of the verdict (a count of v would count non-NULL values and diverge
+    from the oracle on any corpus with NULL event values)."""
     from tests.fixtures import write_events
 
     from currency_etl_spark.queries.extras import events_adaptive_salted_agg
 
-    # one hot key (salted plan) and a flat corpus (plain plan), each
-    # with NULL values sprinkled on the hot/first keys
+    # one hot key (salted) and a flat corpus (not salted), each with
+    # NULL values sprinkled on the hot/first keys
     cases = [
         ("hot", [(e, 7 if e % 4 else e) for e in range(200)], True),
         ("flat", [(e, e) for e in range(100)], False),
@@ -241,9 +279,9 @@ def test_adaptive_null_values_count_rows(spark, tmp_path_factory):
 
 
 def test_adaptive_empty_relation_is_empty_not_error(spark, tmp_path_factory):
-    """All-NULL grouping key -> the audit row is (NULL, NULL); the entry
-    must return the oracle's empty result, not raise TypeError on
-    topk * SKEW_BUCKETS."""
+    """All-NULL grouping key -> no per-key rows and a (NULL, NULL)
+    verdict row; the entry must return the oracle's empty result, not
+    raise."""
     from tests.fixtures import write_events
 
     from currency_etl_spark.queries.extras import events_adaptive_salted_agg

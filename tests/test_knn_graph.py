@@ -1,5 +1,6 @@
 """Invariant tests for the bucketed kNN graph: rank shape, bucket
-containment, and a numpy re-derivation of each point's in-bucket top-1."""
+containment, and a numpy re-derivation of each point's in-bucket top-1;
+plus the recall audits' per-query top-k."""
 
 from __future__ import annotations
 
@@ -78,6 +79,37 @@ def test_truncation_recall_matches_numpy(spark, sf_dir):
         trunc = topk(tm, qi)
         assert got.loc[ids[qi]].n_overlap == len(full & trunc)
     assert (got.recall_at_k < 1.0).any()  # truncation genuinely loses recall
+
+
+def test_topk_per_query_hot_query_is_exact_with_partial_limit(spark):
+    """One query holding most candidate rows (ties on sim included): the
+    single-window top-k equals a plain ROW_NUMBER top-k recomputed here,
+    and the final plan trims each map task's rows with a partial
+    WindowGroupLimit below the qid Exchange."""
+    from pyspark.sql import functions as F
+
+    from tests.fixtures import right_below_exchange
+
+    from currency_etl_spark.queries.vectors import RECALL_K, _topk_per_query
+
+    n, hot = 3000, 2500
+    sims = spark.range(0, n, 1, numPartitions=4).select(
+        F.when(F.col("id") < hot, 0).otherwise(F.col("id") % 5 + 1).alias("qid"),
+        F.col("id").alias("vec_id"),
+        ((F.col("id") * 7919) % 101 / 100.0).alias("sim"),
+    )
+    cands: dict = {}
+    for i in range(n):
+        q = 0 if i < hot else i % 5 + 1
+        cands.setdefault(q, []).append((-((i * 7919) % 101) / 100.0, i))
+    want = sorted((q, v) for q, c in cands.items() for _, v in sorted(c)[:RECALL_K])
+    df = _topk_per_query(sims)
+    assert sorted(tuple(r) for r in df.collect()) == want
+    assert right_below_exchange(
+        df,
+        lambda nd: nd.getClass().getSimpleName() == "WindowGroupLimitExec"
+        and nd.mode().toString() == "Partial",
+    )
 
 
 def test_power_iteration_matches_numpy(spark, sf_dir):

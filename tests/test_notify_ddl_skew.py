@@ -1,11 +1,9 @@
 """Tests for the remaining reference surface (Telegram subscriber registry,
-DDL, delivery sink) and the skew-salting aggregate."""
+DDL, delivery sink)."""
 
 from __future__ import annotations
 
 import pytest
-
-from pyspark.sql import functions as F
 
 from currency_etl_spark.ddl import ensure_tables
 from currency_etl_spark.notify import (
@@ -15,7 +13,6 @@ from currency_etl_spark.notify import (
     subscribers_table,
     unsubscribe,
 )
-from currency_etl_spark.operators.skew import salted_agg
 
 
 def _users(spark, rows):
@@ -51,27 +48,3 @@ def test_ensure_tables_idempotent(spark, tmp_path):
     cols = [f.name for f in spark.table("currency_test.exchange_rates").schema.fields]
     assert cols == ["cc", "txt", "rate", "rate_per_100", "exchangedate", "created_at"]
     assert spark.table("currency_test.telegram_users").count() == 0
-
-
-def test_salted_agg_matches_plain_groupby(spark):
-    # one pathologically hot key + uniform tail
-    rows = [(1, i, float(i % 7)) for i in range(500)] + [
-        (k, 1000 + k, float(k)) for k in range(2, 40)
-    ]
-    df = spark.createDataFrame(rows, "k long, uid long, v double").select(
-        "k", "uid", F.col("v").cast("decimal(18,4)").alias("v")
-    )
-    salted = salted_agg(
-        df, key="k", salt_src="uid",
-        aggs={"sv": (F.sum, F.sum, "v"), "n": (F.count, F.sum, "v")},
-    )
-    plain = df.groupBy("k").agg(F.sum("v").alias("sv"), F.count("v").alias("n"))
-    a = {r["k"]: (r["sv"], r["n"]) for r in salted.collect()}
-    b = {r["k"]: (r["sv"], r["n"]) for r in plain.collect()}
-    assert a == b
-    # determinism: re-run is identical (hash salt, not rand)
-    a2 = {r["k"]: (r["sv"], r["n"]) for r in salted_agg(
-        df, key="k", salt_src="uid",
-        aggs={"sv": (F.sum, F.sum, "v"), "n": (F.count, F.sum, "v")},
-    ).collect()}
-    assert a == a2

@@ -478,50 +478,27 @@ def test_equidepth_histogram_distributed_boundaries(spark, sf_dir):
     assert "HashAggregate" in p
 
 
-def _plan_path(node, hit):
-    """Nodes from ``node`` down to the first descendant ``hit`` accepts,
-    reading through AQE query stages, or None when nothing matches."""
-    if hit(node):
-        return [node]
-    if "QueryStageExec" in node.getClass().getSimpleName():
-        kids = [node.plan()]
-    else:
-        seq = node.children()
-        kids = [seq.apply(i) for i in range(seq.size())]
-    for kid in kids:
-        path = _plan_path(kid, hit)
-        if path is not None:
-            return [node] + path
-    return None
-
-
 def test_bloom_prefilter_is_a_scan_stage_broadcast_join(spark, sf_dir):
     """orders_bloom_prefilter leaves the row filtering to the planner:
     building the DataFrame runs no Spark job, and in the AQE final plan
     the orders scan feeds a BroadcastHashJoin inside its own stage, so
     non-matching orders are dropped before any exchange."""
+    from tests.fixtures import final_plan_nodes, jobs_run_by
+
     from currency_etl_spark.queries.extras import orders_bloom_prefilter
 
-    sc = spark.sparkContext
     orders_bloom_prefilter(spark, sf_dir).collect()  # warm the table cache
-    group = "test-bloom-prefilter-build"
-    sc.setJobGroup(group, group)
-    try:
-        df = orders_bloom_prefilter(spark, sf_dir)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    df, jobs = jobs_run_by(spark, lambda: orders_bloom_prefilter(spark, sf_dir))
+    assert jobs == []
     df.collect()
-    final = df._jdf.queryExecution().executedPlan()
-    assert final.isFinalPlan()
-    path = _plan_path(
-        final.executedPlan(),
-        lambda n: n.getClass().getSimpleName() == "FileSourceScanExec"
-        and "orders.parquet" in n.toString(),
-    )
-    assert path is not None, final.toString()
-    names = [n.getClass().getSimpleName() for n in path]
+    paths = [
+        list(above) + [n.getClass().getSimpleName()]
+        for n, above in final_plan_nodes(df)
+        if n.getClass().getSimpleName() == "FileSourceScanExec"
+        and "orders.parquet" in n.toString()
+    ]
+    assert paths, df._jdf.queryExecution().executedPlan().toString()
+    names = paths[0]
     joins = [i for i, n in enumerate(names) if n == "BroadcastHashJoinExec"]
     assert joins, names
     below_join = names[joins[-1] + 1:]

@@ -3,18 +3,10 @@
 with the scale-relevant reading of each. Run after changing any query:
 
     python tools/dump_plans.py [sf_dir]
-
-With ``--round N``, capture the before/after evidence of a plan change
-instead: each named entry's formatted plan, at $SPARK_GRAFT_SF_DIR
-(default: the sf0.1 test corpus), goes to plans/rN/<entry>_<before|after>.txt:
-
-    python tools/dump_plans.py --round 18 before q1_pricing_summary graph_pagerank_bipartite
-    python tools/dump_plans.py --round 18 after graph_pagerank_bipartite
 """
 
 from __future__ import annotations
 
-import argparse
 import os
 import sys
 
@@ -138,13 +130,13 @@ HEADLINERS = {
     ),
     "knn_recall_report": (
         "ANN recall eval. Check: the query set and probe list enter as "
-        "broadcasts; each per-query top-k runs the salted two-phase "
-        "Window ((qid, salt) then qid) so no single task sorts a query's "
-        "full candidate list; ONE aggregate computes n_retrieved and "
-        "n_overlap together off a LEFT join against the exact top-k "
-        "(r16: the two-aggregate form executed the whole methods "
-        "subtree — both candidate joins and all four salted windows — "
-        "twice; 22 parquet scans → 14)."
+        "broadcasts; each per-query top-k is one row_number() <= 5 "
+        "Window over a qid hashpartitioning, with a WindowGroupLimit "
+        "(Partial in the AQE final plan) below the exchange so no task "
+        "ships or sorts a query's full candidate list; ONE aggregate "
+        "computes n_retrieved and n_overlap together off a LEFT join "
+        "against the exact top-k, so the methods subtree (both "
+        "candidate joins and their windows) executes once."
     ),
     "embedding_pq": (
         "Product quantization. Check: the codebook is ONE broadcast row "
@@ -369,8 +361,9 @@ HEADLINERS = {
         "Truncation-recall audit. Check: the truncated column is a "
         "slice() projection on the same scan (no second embeddings "
         "read per branch beyond plan reuse); both candidate branches "
-        "broadcast the 8-row query set; per-query top-k goes through "
-        "the salted two-phase window, no single-partition rank."
+        "broadcast the 8-row query set; each per-query top-k is one "
+        "row_number() <= 5 Window over a qid hashpartitioning with a "
+        "WindowGroupLimit below the exchange, no single-partition rank."
     ),
     "embedding_power_iteration": (
         "Distributed PCA step. Check: one narrow projection computes "
@@ -531,14 +524,14 @@ HEADLINERS = {
         "the grouped map is shard- then language-sized HashAggregates."
     ),
     "events_adaptive_salted_agg": (
-        "Audit-keyed adaptive aggregation. Check: on the graded skewed "
-        "key the plan IS the salted two-phase aggregate — xxhash64 salt "
-        "and a (key, __salt) phase-1 HashAggregate before the per-key "
-        "phase 2 (at the decision boundary the same builder plans the "
-        "plain one-phase GROUP BY: no xxhash64 anywhere — pinned in "
-        "tests/test_key_skew.py); the audit's decision scan prunes to "
-        "the key column; decision inputs enter as literals from the "
-        "1-row collected globals, never a data-sized driver relation."
+        "Audit-graded hot-key aggregation. Check: one plan, no driver "
+        "collect — the per-key totals are a partial_sum/partial_count "
+        "HashAggregate below the key Exchange and the final aggregate "
+        "above it (the map-side combine that keeps a hot key off one "
+        "reducer; pinned in the AQE final plan by "
+        "tests/test_key_skew.py); the verdict row is a max/sum over a "
+        "key-column-only count, entering as a BroadcastNestedLoopJoin "
+        "of one row; salted and top_key_share are projections over it."
     ),
     "knn_filtered_search": (
         "Facet-filtered ANN. Check: the stored index enters from the "
@@ -783,31 +776,7 @@ def formatted_plan(spark, df) -> str:
     return spark._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
 
 
-def capture(round_no: int, suffix: str, names: list[str]) -> None:
-    """Write plans/r<round_no>/<entry>_<suffix>.txt for each named entry."""
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark(f"plan-r{round_no}", cpus=8)
-    catalog = load_catalog()
-    outdir = os.path.join(ROOT, "plans", f"r{round_no}")
-    os.makedirs(outdir, exist_ok=True)
-    for name in names:
-        plan = formatted_plan(spark, catalog[name].spark_fn(spark, sf_dir))
-        path = os.path.join(outdir, f"{name}_{suffix}.txt")
-        with open(path, "w") as f:
-            f.write(f"# {name} — explain('formatted') at {sf_dir} ({suffix})\n\n")
-            f.write(plan.rstrip() + "\n")
-        print("wrote", path)
-
-
 def main() -> None:
-    if sys.argv[1:2] == ["--round"]:
-        ap = argparse.ArgumentParser(prog="dump_plans.py --round")
-        ap.add_argument("round_no", type=int)
-        ap.add_argument("suffix", choices=("before", "after"))
-        ap.add_argument("names", nargs="+")
-        args = ap.parse_args(sys.argv[2:])
-        capture(args.round_no, args.suffix, args.names)
-        return
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = get_spark("plan-dump", cpus=4)
     catalog = load_catalog()
